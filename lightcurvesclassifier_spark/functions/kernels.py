@@ -48,21 +48,6 @@ def to_paa(x: np.ndarray, bins: int) -> np.ndarray:
     return win[starts].mean(axis=1)
 
 
-def paa_frames(n: int, bins: int) -> list[tuple[int, int]]:
-    """Frame boundaries [(start, end), ...) used by :func:`to_paa` — exposed
-    so SQL formulations (range join on frame index) can reproduce them."""
-    step_f = n / float(bins)
-    step = int(math.ceil(step_f))
-    frames = []
-    i = 0
-    start = 0
-    while start <= n - step:
-        frames.append((start, start + step))
-        i += 1
-        start = int(i * step_f)
-    return frames
-
-
 def to_ekvi_paa(
     x: np.ndarray,
     y: np.ndarray,

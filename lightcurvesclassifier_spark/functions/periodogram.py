@@ -267,8 +267,15 @@ def _pdm_theta_from_rows(
         s1t = s1c if s1t is None else s1t + s1c
         nt = nb_ if nt is None else nt + nb_
     ss_within = F.col("_s2t") + neg_within
-    ss_tot = F.col("_s2t") - s1t * s1t / nt
-    theta = (ss_within / dof) / (ss_tot / (nt - 1))
+    ss_tot = F.col("_s2t") - F.try_divide(s1t * s1t, nt)
+    # try_divide: a star with at most one observation per phase bin
+    # (dof = 0), a single observation (nt = 1), constant magnitudes
+    # (ss_tot = 0) or only NULL magnitudes (nt = 0) gets theta NULL, as
+    # DuckDB's x / 0 does in the mirror, instead of an ANSI
+    # DIVIDE_BY_ZERO that fails the job
+    theta = F.try_divide(
+        F.try_divide(ss_within, dof), F.try_divide(ss_tot, nt - 1)
+    )
     return per_freq.select(id_col, "freq", F.round(theta, 6).alias("theta"))
 
 

@@ -9,7 +9,7 @@ Reference contract (lcc/stars_processing/utilities/base_decider.py:13-131):
 Here a decider learns from two DataFrames of features and *scores
 distributively*:
 
-- **MLlib-backed** deciders (trees, forests, GBT, MLP, logistic) train on
+- **MLlib-backed** deciders (trees, forests, GBT, logistic) train on
   the assembled train set (small — the reference trains on tens-to-
   thousands of stars) and score via ``model.transform`` — JVM-side.
 - **Closed-form Gaussian** deciders (LDA / QDA / GaussianNB) are fit
@@ -226,27 +226,6 @@ class GaussianDecider(BaseDecider):
         return df.withColumn(
             out_col, score.asNondeterministic()(F.array(*feature_cols))
         )
-
-
-class MLPDecider(MLlibDecider):
-    """MLlib MultilayerPerceptronClassifier wrapper — kept as the
-    fully-JVM alternative for users who want an in-cluster NN fit; the
-    ``NeuronDecider`` registry entry now maps to the exact numpy
-    re-implementation of the reference's Keras net (``ml/neural.py``)."""
-
-    def __init__(self, hidden: tuple = (8,), seed: int = 42, **kw):
-        super().__init__(None, **kw)
-        self.hidden = tuple(hidden)
-        self.seed = seed
-
-    def learn(self, searched, others, feature_cols):
-        from pyspark.ml.classification import MultilayerPerceptronClassifier
-
-        layers = [len(feature_cols), *self.hidden, 2]
-        self._factory = lambda: MultilayerPerceptronClassifier(
-            seed=self.seed, maxIter=150, layers=layers
-        )
-        return super().learn(searched, others, feature_cols)
 
 
 class CustomDecider(BaseDecider):

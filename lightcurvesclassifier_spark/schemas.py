@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # Sentinel values dropped on ingest — lcc/entities/light_curve.py:42 and
-# lcc/db_tier/connectors/file_manager.py:69.
+# lcc/db_tier/connectors/file_manager.py:69. Kept as strings: matching
+# happens before the cast.
 BAD_VALUES = ["-99", "-99.0", "99", "N/A", ""]
 
 # Crossmatch tolerance: star equality if angular separation < 0.5 arcsec

@@ -17,9 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# Bad-value sentinels dropped on ingest (file_manager.py:69,
-# light_curve.py:42). Kept as strings: matching happens before the cast.
-BAD_VALUES = ("-99", "-99.0", "99", "N/A", "")
+from ..schemas import BAD_VALUES
 
 
 def load_dat_curves(

@@ -327,12 +327,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def observations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → OBSERVATIONS long format. t is float days since 2024-01-01,
     computed from integer nanoseconds so Spark and DuckDB agree bit-for-bit.

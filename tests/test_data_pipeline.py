@@ -186,33 +186,36 @@ def test_dedup_clusters_transitive(spark, corpus):
     assert (singles.doc_id == singles.cluster_id).all()
 
 
-def test_connected_components_raises_on_exhaustion(spark):
-    """A component whose diameter exceeds max_iter * hops_per_round must
-    raise, not silently return split (wrong) clusters."""
-    import pytest
+def _union_find_labels(edges):
+    """Reference CC: {node: min node id of its component}. Like the
+    operator, a u == v edge is dropped, so a node whose only edge is a
+    self-loop is not a graph node."""
+    parent = {}
 
-    path_edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(
-            path_edges, max_iter=1, hops_per_round=1
-        )
-    # and with enough hops the same graph converges to one cluster
-    ok = dedup.connected_components(
-        path_edges, max_iter=20, hops_per_round=3
-    ).toPandas()
-    assert set(ok.label) == {0}
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
-def test_star_cc_matches_minlabel_on_random_and_path_graphs(spark):
-    """The production large-star/small-star CC must produce exactly the
-    min-label implementation's output (same components, same canonical
-    min label) — on a long path (worst case for min-label, log-rounds
-    for star), a skewed star-of-stars, and a seeded random graph."""
+def test_star_cc_matches_union_find(spark):
+    """The large-star/small-star CC must produce exactly the union-find
+    reference's output (same nodes, same canonical min label) — on a
+    long path, a skewed star-of-stars, a seeded random graph, and the
+    inputs the distinct a<b near-dup producers never emit: duplicates,
+    reversed (a > b) pairs and self-loops; plus an empty pair set."""
     import random
 
     rng = random.Random(7)
+    raw = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
     graphs = {
         "path": [(i, i + 1) for i in range(30)],
         "skewed": [(0, i) for i in range(1, 40)]
@@ -228,25 +231,31 @@ def test_star_cc_matches_minlabel_on_random_and_path_graphs(spark):
                 if a != b
             }
         ),
+        "duplicates": [(1, 2), (1, 2), (2, 3), (1, 2), (7, 9), (7, 9)],
+        "reversed": [(9, 4), (4, 12), (30, 12), (6, 5), (8, 5), (8, 2)],
+        "self_loops": [(1, 1), (2, 2), (2, 3), (4, 4), (4, 5), (5, 5)],
+        "random_raw": raw + raw[:10] + [(b, a) for a, b in raw[10:20]],
     }
-    for name, edges in graphs.items():
+
+    def star_labels(edges):
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        star = (
-            dedup.connected_components_star(pairs)
-            .toPandas()
-            .sort_values("node")
-            .reset_index(drop=True)
-        )
-        ml = (
-            dedup.connected_components(pairs, max_iter=30, hops_per_round=3)
-            .toPandas()
-            .sort_values("node")
-            .reset_index(drop=True)
-        )
-        assert star.node.tolist() == ml.node.tolist(), name
-        assert star.label.tolist() == ml.label.tolist(), name
+        star = dedup.connected_components_star(pairs).toPandas()
         # every node labeled exactly once
-        assert star.node.is_unique, name
+        assert star.node.is_unique
+        return dict(zip(star.node.tolist(), star.label.tolist()))
+
+    assert star_labels([]) == {}
+    # one CC run over the disjoint union (graph k's ids shifted by
+    # k * 1000): components never interact, so each graph's slice of
+    # the output is that graph's own CC
+    shifted = {
+        name: [(a + k * 1000, b + k * 1000) for a, b in edges]
+        for k, (name, edges) in enumerate(graphs.items())
+    }
+    got = star_labels([e for edges in shifted.values() for e in edges])
+    for k, (name, edges) in enumerate(shifted.items()):
+        mine = {n: lb for n, lb in got.items() if n // 1000 == k}
+        assert mine == _union_find_labels(edges), name
 
 
 def test_star_cc_raises_on_exhaustion(spark):
@@ -962,7 +971,7 @@ def test_minhash_bands_must_divide_and_cc_validates_hops(spark):
         dd.minhash_pairs_sql("SELECT 1", num_hashes=20, bands=8)
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     with _pytest.raises(ValueError, match="hops_per_round"):
-        dd.connected_components(pairs, hops_per_round=0)
+        dd.connected_components_star(pairs, hops_per_round=0)
 
 
 def test_cosine_topk_empty_queries_returns_empty(spark):

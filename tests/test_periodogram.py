@@ -157,6 +157,41 @@ def test_pdm_two_stage_matches_duckdb_mirror(spark, duck):
         assert np.allclose(got[c], want[c], rtol=0, atol=0), c
 
 
+def test_pdm_degenerate_stars_get_null_theta_like_mirror(spark, duck):
+    """A one-observation star (nt = 1, dof = 0), a constant two-point
+    star (ss_tot = 0) and a star whose only magnitude is NULL (nt = 0)
+    get theta NULL in Spark, as in the DuckDB mirror, instead of an ANSI
+    DIVIDE_BY_ZERO failing the whole job; the normal star beside them
+    keeps its exact mirror value."""
+    t = np.arange(0.0, 20.0, 1.0)
+    rows = [(2, float(ti), float(12.0 + np.sin(2 * math.pi * ti / 5.0)))
+            for ti in t]
+    rows += [(1, 3.0, 11.0), (3, 1.0, 10.0), (3, 11.0, 10.0), (4, 2.0, None)]
+    obs = spark.createDataFrame(rows, "star_id long, t double, mag double")
+    # Arrow keeps the NULL magnitude NULL (pandas would make it NaN)
+    duck.register("_pdm_degenerate_obs", obs.toArrow())
+    freqs = [0.1, 0.2, 0.3]
+    got = (
+        periodogram.pdm_best_period(spark, obs, freqs)
+        .toPandas().sort_values("star_id").reset_index(drop=True)
+    )
+    want = (
+        duck.execute(
+            periodogram.pdm_best_period_sql(
+                "SELECT * FROM _pdm_degenerate_obs", freqs
+            )
+        )
+        .df().sort_values("star_id").reset_index(drop=True)
+    )
+    assert got.star_id.tolist() == want.star_id.tolist() == [1, 2, 3, 4]
+    for c in ["best_freq", "best_period", "theta"]:
+        assert np.allclose(
+            got[c].astype(float), want[c].astype(float),
+            rtol=0, atol=0, equal_nan=True,
+        ), c
+    assert got.theta.isna().tolist() == [True, False, True, True]
+
+
 def test_pdm_auto_guard_picks_single_stage_on_barely_resolving_grid(spark):
     """Directive-pinned property: the auto-guard must fall back to the
     full-grid scan when coarse_step · grid_spacing · timespan > κ — on

@@ -56,149 +56,21 @@ from lightcurvesclassifier_spark.benchcontrols import (  # noqa: E402
 def _probe_extras():
     """Probe-only query variants that are not ``queries()`` entries:
 
-    * semantic_dedup with the auto n_cells knob.  At the driver scales
-      the auto rule resolves to the 16-cell floor (value-identical to
-      the oracled fixed-16 query), so it adds no correctness
-      information as a suite entry — but at probe scale (K×) it is
-      exactly the occupancy-constant profile the knob exists for.
-    * cc_text_h{1,2} / cc_emb_h{1,2} — the CC fixpoint loop alone
-      (pairs → star contraction) at hops_per_round 1 vs 2, over the
-      text and embedding graphs (r10 verdict directive #2: the sf0.1
-      rejection of hops>1 measured fixed latency; re-decide at K).
-    * dedup_simhash_distinct — md5 per DISTINCT (doc, token) +
-      count-weighted majority vote, vs the declared per-occurrence
-      form (r10 verdict directive #3: the extra corpus aggregate vs
-      |occurrences|−|distinct| md5 calls crossover belongs to scale).
+    * semantic_dedup_auto — semantic_dedup with the auto n_cells knob.
+      At the fixture scales the auto rule resolves to the 16-cell floor
+      (value-identical to the oracled fixed-16 query), so it adds no
+      correctness information as a suite entry — but at probe scale
+      (K×) it is exactly the occupancy-constant profile the knob exists
+      for.
     """
-    from pyspark.sql import functions as FF
-
-    from lightcurvesclassifier_spark.operators import (
-        dedup as dd,
-        similarity as sim_ops,
-    )
+    from lightcurvesclassifier_spark.operators import similarity as sim_ops
     from lightcurvesclassifier_spark.sources import testdata
 
     def semantic_dedup_auto(spark, sf_dir):
         emb = testdata.load_table(spark, sf_dir, "embeddings")
         return sim_ops.semantic_dedup(emb, tau=0.42, n_cells="auto")
 
-    def _cc_text(hops):
-        def q(spark, sf_dir):
-            corpus = testdata.dedup_corpus(spark, sf_dir)
-            pairs = dd.ngram_jaccard_pairs(corpus, threshold=0.6)
-            return dd.connected_components_star(
-                pairs, hops_per_round=hops
-            )
-        return q
-
-    def _cc_emb(hops):
-        def q(spark, sf_dir):
-            emb = testdata.load_table(spark, sf_dir, "embeddings")
-            pairs = sim_ops.embedding_neardup_pairs(
-                emb, threshold=0.42, n_cells=4, n_salts="bound"
-            )
-            return dd.connected_components_star(
-                pairs, hops_per_round=hops
-            )
-        return q
-
-    def dedup_simhash_distinct(spark, sf_dir):
-        """simhash_pairs with the fingerprint's per-token md5 replaced
-        by md5-per-DISTINCT-(doc, token) + count weights — value-
-        identical (the majority vote is count-weighted either way),
-        probe-only."""
-        corpus = testdata.dedup_corpus(spark, sf_dir)
-        half = 30
-        df = corpus
-        sc = spark.sparkContext
-        if df.rdd.getNumPartitions() < sc.defaultParallelism:
-            df = df.repartition(sc.defaultParallelism, FF.col("doc_id"))
-        tok = (
-            df.select(
-                FF.col("doc_id"),
-                FF.explode(FF.split(FF.col("text"), " ")).alias("tok"),
-            )
-            .groupBy("doc_id", "tok")
-            .agg(FF.count("*").alias("c"))
-            .withColumn("h", dd._md5_int60(FF.col("tok")))
-        )
-        packed = [
-            FF.sum(
-                FF.col("c")
-                * (
-                    FF.shiftright(FF.col("h"), k).bitwiseAND(FF.lit(1))
-                    + FF.shiftright(FF.col("h"), k + half).bitwiseAND(
-                        FF.lit(1)
-                    )
-                    * FF.lit(1 << 32)
-                )
-            ).alias(f"p{k}")
-            for k in range(half)
-        ]
-        agg = tok.groupBy("doc_id").agg(
-            FF.sum("c").alias("n_tok"), *packed
-        )
-        bands = []
-        for band in range(4):
-            expr = FF.lit(0)
-            for i in range(15):
-                b = band * 15 + i
-                k, lane = b % half, b // half
-                ones = FF.shiftright(
-                    FF.col(f"p{k}"), 32 * lane
-                ).bitwiseAND(FF.lit(0xFFFFFFFF))
-                expr = expr + FF.when(
-                    ones * 2 > FF.col("n_tok"), FF.lit(1 << i)
-                ).otherwise(0)
-            bands.append(expr.alias(f"band{band}"))
-        fp = agg.select(FF.col("doc_id"), *bands).localCheckpoint(
-            eager=False
-        )
-        long = fp.select(
-            FF.col("doc_id"),
-            FF.explode(
-                FF.array(*[
-                    FF.struct(
-                        FF.lit(i).alias("band_idx"),
-                        FF.col(f"band{i}").alias("band_val"),
-                    )
-                    for i in range(4)
-                ])
-            ).alias("b"),
-            *[FF.col(f"band{i}") for i in range(4)],
-        ).select(
-            "doc_id", "b.band_idx", "b.band_val",
-            *[f"band{i}" for i in range(4)],
-        )
-        a = long.select(
-            FF.col("doc_id").alias("id_a"), "band_idx", "band_val",
-            *[FF.col(f"band{i}").alias(f"a{i}") for i in range(4)],
-        )
-        b2 = long.select(
-            FF.col("doc_id").alias("id_b"), "band_idx", "band_val",
-            *[FF.col(f"band{i}").alias(f"b{i}") for i in range(4)],
-        )
-        ham = sum(
-            FF.bit_count(FF.col(f"a{i}").bitwiseXOR(FF.col(f"b{i}")))
-            for i in range(4)
-        )
-        return (
-            a.join(b2, ["band_idx", "band_val"])
-            .filter(FF.col("id_a") < FF.col("id_b"))
-            .withColumn("hamming", ham.cast("int"))
-            .filter(FF.col("hamming") <= 3)
-            .select("id_a", "id_b", "hamming")
-            .distinct()
-        )
-
-    return {
-        "semantic_dedup_auto": semantic_dedup_auto,
-        "cc_text_h1": _cc_text(1),
-        "cc_text_h2": _cc_text(2),
-        "cc_emb_h1": _cc_emb(1),
-        "cc_emb_h2": _cc_emb(2),
-        "dedup_simhash_distinct": dedup_simhash_distinct,
-    }
+    return {"semantic_dedup_auto": semantic_dedup_auto}
 
 
 def _salted_documents(docs: DataFrame, k: int) -> DataFrame:
