@@ -1,5 +1,5 @@
 """Systematic search — the reference's StarsSearcher re-expressed as one
-declarative plan plus append-mode sinks.
+declarative plan plus one staged commit.
 
 Reference (lcc/systematic_search/stars_searcher.py:18-346): for each
 query dict — fetch stars, keep those with curves, run the filter's
@@ -10,18 +10,20 @@ status_resolver.py:257-264) resumes by subtracting logged queries.
 
 Spark shape: the per-query Python loop becomes a single broadcast range
 join of the (small) query table against the (huge) feature table — every
-query is matched in one scan of the data, the ledger is the join output,
-and the two sinks are append-mode writes. The rq/redis work queue of the
-reference is replaced by partition parallelism (and by the Structured
-Streaming wrapper in ``streaming/search_stream.py`` for the long-running
-feed shape).
+query is matched in one scan of the data and the ledger is the join
+output, committed by ``write_results`` for both the batch driver and the
+Structured Streaming wrapper (``streaming/search_stream.py``, the
+long-running feed shape). The rq/redis work queue of the reference is
+replaced by partition parallelism.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Callable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..plans.query_compiler import range_predicate
 
@@ -50,7 +52,9 @@ def run_search(
     passed_ranges: Mapping[str, tuple[float | None, float | None]],
     key: str = "star_id",
 ) -> DataFrame:
-    """The search ledger: one row per (query, found star).
+    """The search ledger: one row per (query, found star), plus one
+    found=false row per query that matched no star (uploadStatus logs
+    every query; without it resume re-runs empty-result queries forever).
 
     ``features`` is the descriptor output (one row per star);
     ``queries`` the (query_id, lo, hi) dimension; ``passed_ranges`` the
@@ -58,47 +62,42 @@ def run_search(
 
     The join is a broadcast theta join on the range condition — the big
     side streams through untouched (no shuffle); at 100 TB this is the
-    only viable shape (queries are few, stars are not).
+    only viable shape (queries are few, stars are not). Each query also
+    gets a NULL-feature stub, kept only when no row of its query_id is
+    found: the plan is lazy and scans the features once.
     """
     q = F.broadcast(queries)
     cond = (F.col(key) >= F.col("lo")) & (F.col(key) <= F.col("hi"))
-    joined = features.join(q, cond, "inner")
-    passed: Column = range_predicate(passed_ranges)
-    matched = joined.select(
+    cols = [key] + [c for c in features.columns if c != key]
+    passed = range_predicate(passed_ranges).alias("passed")
+    matched = features.join(q, cond, "inner").select(
+        "query_id", *cols, F.lit(True).alias("found"), passed
+    )
+    stubs = queries.select(
         "query_id",
-        key,
-        *[c for c in features.columns if c != key],
-        F.lit(True).alias("found"),
-        passed.alias("passed"),
+        *[F.lit(None).cast(features.schema[c].dataType).alias(c) for c in cols],
+        F.lit(False).alias("found"),
+        F.lit(False).alias("passed"),
     )
-    # queries that matched NO star still get one found=false ledger row
-    # (uploadStatus logs every query) — without it the resume anti-join
-    # re-executes empty-result queries forever.
-    #
-    # The matched query ids are materialized EAGERLY (bounded by
-    # |queries|, which is broadcast-small by the operator contract): an
-    # anti-join against the lazy `matched` would re-execute the entire
-    # feature scan + theta join a second time every time the ledger is
-    # materialized — at 100 TB, two full passes where one suffices.
-    matched_qids = [
-        r[0] for r in matched.select("query_id").distinct().collect()
-    ]
-    no_match = (
-        ~F.col("query_id").isin(matched_qids) if matched_qids else F.lit(True)
+    return (
+        matched.unionByName(stubs)
+        .withColumn("_any_found", F.max("found").over(Window.partitionBy("query_id")))
+        .filter(F.col("found") | ~F.col("_any_found"))
+        .drop("_any_found")
     )
-    unmatched = (
-        queries.filter(no_match)
-        .select(
-            "query_id",
-            *[
-                F.lit(None).cast(features.schema[c].dataType).alias(c)
-                for c in ([key] + [c for c in features.columns if c != key])
-            ],
-            F.lit(False).alias("found"),
-            F.lit(False).alias("passed"),
-        )
-    )
-    return matched.unionByName(unmatched)
+
+
+def _publish(staging: str, target: str, key: int | None) -> None:
+    """Replace the files published under ``key`` in ``target`` by the
+    staged part files, renamed ``q<key>-<name>``."""
+    prefix = f"q{key}-"
+    for name in os.listdir(target):
+        if name.startswith(prefix):
+            os.remove(os.path.join(target, name))
+    for name in os.listdir(staging):
+        if name.endswith(".parquet"):
+            os.replace(os.path.join(staging, name), os.path.join(target, prefix + name))
+    shutil.rmtree(staging)
 
 
 def write_results(
@@ -106,21 +105,26 @@ def write_results(
     ledger_path: str,
     passed_path: str | None = None,
 ) -> None:
-    """Append-mode sinks: the status ledger (uploadStatus,
-    stars_searcher.py:188-215) and the passed-star store (matchOccured,
-    :46-61 — parquet instead of per-star FITS)."""
-    if passed_path is None:
-        ledger.write.mode("append").parquet(ledger_path)
-        return
-    # persist across the two actions: an unmaterialized plan would
-    # recompute the whole search per sink (and could diverge between
-    # them if the feature source moved)
-    ledger.persist()
-    try:
-        ledger.write.mode("append").parquet(ledger_path)
-        ledger.filter(F.col("passed")).write.mode("append").parquet(passed_path)
-    finally:
-        ledger.unpersist()
+    """The one commit path of batch and stream: the status ledger
+    (uploadStatus, stars_searcher.py:188-215) and the passed-star store
+    (matchOccured, :46-61 — parquet instead of per-star FITS).
+
+    The ledger is computed once, into ``<ledger_path>/_staging`` (which
+    ``spark.read`` skips); the passed store is its staged ``passed``
+    slice. Both publish under the smallest staged query_id, passed first
+    and the ledger, the resume marker, last: a run that crashes before
+    the ledger publish is redone, and the redo replaces what it left
+    under that key (a crash inside the ledger's renames can publish the
+    unrenamed queries' passed rows twice). Paths are local."""
+    staging = os.path.join(ledger_path, "_staging")
+    ledger.write.mode("overwrite").parquet(staging)
+    staged = ledger.sparkSession.read.parquet(staging)
+    key = staged.agg(F.min("query_id")).first()[0]
+    if passed_path is not None:
+        passed_staging = os.path.join(passed_path, "_staging")
+        staged.filter(F.col("passed")).write.mode("overwrite").parquet(passed_staging)
+        _publish(passed_staging, passed_path, key)
+    _publish(staging, ledger_path, key)
 
 
 def unsearched_queries(plan: DataFrame, ledger: DataFrame) -> DataFrame:
@@ -139,17 +143,18 @@ def search_and_resume(
     ledger_path: str,
     passed_path: str | None = None,
 ) -> int:
-    """End-to-end driver: resume-filter the plan, run, append. Returns the
+    """End-to-end driver: resume-filter the plan, run, commit. Returns the
     number of queries actually executed this run."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
-        existing = spark.read.parquet(ledger_path)
-        todo = unsearched_queries(plan, existing)
+        # with a schema, a ledger with nothing published yet reads as empty
+        done = spark.read.schema("query_id long").parquet(ledger_path)
+        todo = unsearched_queries(plan, done)
     except AnalysisException as e:
         # ONLY the missing-path case means "first run"; any other read
         # failure (corrupt footer, permissions) must propagate — treating
-        # it as first-run would re-run and double-append every query
+        # it as first-run would re-run and re-publish every query
         if "PATH_NOT_FOUND" not in str(e):
             raise
         todo = plan

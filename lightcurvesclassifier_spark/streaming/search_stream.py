@@ -7,18 +7,19 @@ ledger as workers finish. The reference defines no event-time semantics
 — the stream is a work queue — so the natural Spark mapping is a
 file-source stream of query batches drained by ``foreachBatch``
 (SURVEY.md §2.6): each micro-batch runs the same declarative search
-plan as the batch path (operators/searcher.py) and appends to the same
-ledger, giving exactly-once per-batch semantics via the checkpoint
-instead of redis bookkeeping.
+plan and the same commit as the batch path (operators/searcher.py),
+giving exactly-once per-batch semantics via the checkpoint instead of
+redis bookkeeping.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.searcher import QUERY_SCHEMA, run_search
+from ..operators import searcher
 
 
 def query_stream(spark: SparkSession, queries_dir: str) -> DataFrame:
@@ -26,7 +27,7 @@ def query_stream(spark: SparkSession, queries_dir: str) -> DataFrame:
     batch of (query_id, lo, hi) queries — the enqueue side of the
     reference's work queue."""
     return (
-        spark.readStream.schema(QUERY_SCHEMA)
+        spark.readStream.schema(searcher.QUERY_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .csv(queries_dir)
     )
@@ -42,28 +43,20 @@ def start_search_stream(
 ):
     """Drain the query stream through the batch search plan.
 
-    ``foreachBatch`` re-uses the exact batch pipeline — one code path for
-    both execution modes; the checkpoint makes restarts resume from the
-    last committed batch (the reference's redis status ledger role).
-
-    Idempotent retries: each micro-batch OVERWRITES its own
-    ``batch_id=N`` partition directory instead of appending — a batch
-    replayed after a crash-before-checkpoint rewrites identical content
-    rather than double-appending (plain append broke exactly-once).
-    Read the ledger with ``spark.read.parquet(ledger_path)`` as before;
-    batch_id surfaces as a partition column.
+    ``foreachBatch`` runs the batch plan and its commit,
+    ``searcher.write_results``, into ``<ledger_path>/batch_id=N``; read
+    the ledger with ``spark.read.parquet(ledger_path)``. The checkpoint
+    makes restarts resume from the last committed batch (the reference's
+    redis status ledger role); a batch replayed after a crash before its
+    checkpoint commit replaces its earlier copy.
     """
-    import os
-
     stream = query_stream(spark, queries_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        ledger = run_search(features_fn(), batch_df, passed_ranges)
-        ledger.write.mode("overwrite").parquet(
-            os.path.join(ledger_path, f"batch_id={batch_id}")
-        )
+        ledger = searcher.run_search(features_fn(), batch_df, passed_ranges)
+        searcher.write_results(ledger, os.path.join(ledger_path, f"batch_id={batch_id}"))
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -1,10 +1,12 @@
-"""Systematic search: ledger grain, append/resume semantics, and the
-Structured Streaming work-queue analog (mirrors the reference's
-integration test shape, test/intergation/test_searcher.py:13-40 —
+"""Systematic search: ledger grain, staged commit, crash and resume
+semantics, and the Structured Streaming work-queue analog (mirrors the
+reference's integration test shape, test/intergation/test_searcher.py:13-40 —
 N queries in, ledger rows per query out, passed stars > 0)."""
 
-import time
+import os
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from lightcurvesclassifier_spark.functions.curves import curve_features
@@ -18,6 +20,11 @@ RANGES = {"abbe": (None, 0.95), "std_mag": (35.0, None)}
 
 def _features(spark):
     return curve_features(testdata.observations(spark, SF_SMOKE))
+
+
+def _rows(df):
+    """The rows of ``df`` as a multiset."""
+    return Counter(tuple(r) for r in df.collect())
 
 
 def test_ledger_grain_and_flags(spark):
@@ -100,6 +107,23 @@ def test_streaming_search(spark, tmp_path):
         F.col("query_id") == 0
     ).count()
 
+    # crash after the last batch's commit but before its checkpoint
+    # commit: the restart replays it, and the replay replaces its copy
+    last = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
+    bdir = os.path.join(ledger_path, f"batch_id={last}")
+    before_files = sorted(os.listdir(bdir))
+    before = _rows(spark.read.parquet(bdir))
+    for name in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    q3 = start_search_stream(
+        spark, str(qdir), lambda: _features(spark), RANGES, ledger_path, ckpt
+    )
+    q3.awaitTermination(120)
+    replayed_files = sorted(os.listdir(bdir))
+    assert replayed_files != before_files  # the batch did run again
+    assert len(replayed_files) == len(before_files)
+    assert _rows(spark.read.parquet(bdir)) == before
+
 
 def test_unsearched_queries_anti_join(spark):
     plan = searcher.queries_df(spark, [(0, 1), (2, 3), (4, 5)])
@@ -110,28 +134,32 @@ def test_unsearched_queries_anti_join(spark):
 
 def test_zero_match_query_gets_ledger_row_and_resume_stops(spark, tmp_path):
     """A query matching no star must still log one found=false row so
-    resume marks it done (it previously re-executed forever)."""
-    from lightcurvesclassifier_spark.operators import searcher as s
-
-    feats = spark.createDataFrame(
-        [(1, 0.5), (2, 0.8)], "star_id long, abbe double"
-    )
-    plan = s.queries_df(spark, [(1, 2), (1000, 2000)])
-    ledger_path = str(tmp_path / "ledger")
-    n1 = s.search_and_resume(
-        spark, lambda: feats, plan, {"abbe": (None, 0.9)}, ledger_path
-    )
-    assert n1 == 2
-    got = spark.read.parquet(ledger_path).toPandas()
-    empty_q = got[got.query_id == 1]
-    assert len(empty_q) == 1
-    assert not empty_q.found.iloc[0] and not empty_q.passed.iloc[0]
-    assert empty_q.star_id.isna().all()
-    # second run: nothing to do — including the zero-match query
-    n2 = s.search_and_resume(
-        spark, lambda: feats, plan, {"abbe": (None, 0.9)}, ledger_path
-    )
-    assert n2 == 0
+    resume marks it done (it previously re-executed forever) — also when
+    the features frame is empty and no query matches."""
+    ranges = {"abbe": (None, 0.9)}
+    plan = searcher.queries_df(spark, [(1, 2), (1000, 2000)])
+    schema = "star_id long, abbe double"
+    inputs = {
+        "two_stars": spark.createDataFrame([(1, 0.5), (2, 0.8)], schema),
+        "no_stars": spark.createDataFrame([], schema),
+    }
+    for name, feats in inputs.items():
+        ledger_path = str(tmp_path / name)
+        n1 = searcher.search_and_resume(
+            spark, lambda: feats, plan, ranges, ledger_path
+        )
+        assert n1 == 2
+        got = spark.read.parquet(ledger_path).toPandas()
+        empty_qs = [1] if name == "two_stars" else [0, 1]
+        stubs = got[~got.found]
+        assert sorted(stubs.query_id) == empty_qs
+        assert not stubs.passed.any() and stubs.star_id.isna().all()
+        assert got[got.query_id.isin(empty_qs)].found.sum() == 0
+        # second run: nothing to do — including the zero-match queries
+        n2 = searcher.search_and_resume(
+            spark, lambda: feats, plan, ranges, ledger_path
+        )
+        assert n2 == 0
 
 
 def test_query_dsl_two_char_operators(spark):
@@ -148,11 +176,11 @@ def test_query_dsl_two_char_operators(spark):
 
 
 def test_ledger_crash_replay_is_idempotent(spark, tmp_path):
-    """r6 stretch #8: exactly-once under crash-replay.  A driver that
-    crashes between write_results' append and its own bookkeeping will
-    REPLAY the same batch — append the identical ledger batch twice and
-    pin that (a) the resume filter still schedules nothing (no query
-    re-executes, so the duplication cannot compound), and (b) the
+    """Exactly-once under crash-replay. A driver that crashes between
+    write_results' commit and its own bookkeeping will REPLAY the same
+    batch — commit the identical ledger batch twice and pin that the
+    replay publishes under the same key, replacing the first copy, and
+    that (a) the resume filter still schedules nothing and (b) the
     ledger's logical content — its distinct (query_id, star_id,
     found, passed) grain — is unchanged by the replay."""
     ledger_path = str(tmp_path / "ledger")
@@ -165,12 +193,13 @@ def test_ledger_crash_replay_is_idempotent(spark, tmp_path):
     once = spark.read.parquet(ledger_path)
     grain_cols = ["query_id", "star_id", "found", "passed"]
     want = {tuple(r) for r in once.select(*grain_cols).collect()}
+    once_count = once.count()
 
-    # crash replay: the exact same batch is appended a second time
+    # crash replay: the exact same batch is committed a second time
     batch = searcher.run_search(_features(spark), plan, RANGES)
     searcher.write_results(batch, ledger_path)
     replayed = spark.read.parquet(ledger_path)
-    assert replayed.count() == 2 * once.count()  # physical dupes exist
+    assert replayed.count() == once_count  # replaced, not duplicated
 
     # (a) resume sees every planned query as done → zero re-runs
     n2 = searcher.search_and_resume(
@@ -193,3 +222,111 @@ def test_ledger_crash_replay_is_idempotent(spark, tmp_path):
         .collect()
     }
     assert got == want
+
+
+def test_run_search_builds_without_jobs(spark):
+    """Building the ledger plan is lazy: no Spark job until an action."""
+    sc = spark.sparkContext
+    feats = _features(spark)
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
+    group = "run-search-build"
+    sc.setJobGroup(group, "run_search construction")
+    try:
+        ledger = searcher.run_search(feats, plan, RANGES)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        ledger.count()  # the group does see the jobs of an action
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_search_and_stream_batch_compute_features_once(spark, tmp_path):
+    """One search_and_resume, and one stream batch, evaluate each
+    feature row once: a test-only UDF over the key counts evaluations."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        acc.add(1)
+        return v
+
+    tick_udf = F.udf(tick, "long").asNondeterministic()
+
+    def counted():
+        return _features(spark).withColumn("star_id", tick_udf("star_id"))
+
+    n_stars = _features(spark).count()
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
+    n = searcher.search_and_resume(
+        spark, counted, plan, RANGES,
+        str(tmp_path / "ledger"), str(tmp_path / "passed"),
+    )
+    assert n == 3 and acc.value == n_stars
+
+    qdir = tmp_path / "queries_in"
+    qdir.mkdir()
+    (qdir / "batch1.csv").write_text("0,0,4\n1,2000,3000\n")
+    acc.value = 0
+    q = start_search_stream(
+        spark, str(qdir), counted, RANGES,
+        str(tmp_path / "stream_ledger"), str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert acc.value == n_stars
+
+
+def test_resume_when_ledger_has_nothing_published(spark, tmp_path):
+    """A first run that crashed before its first publish leaves a ledger
+    directory holding only the hidden staging directory; resume must
+    read it as empty and run every query."""
+    feats = spark.createDataFrame([(1, 0.5), (2, 0.8)], "star_id long, abbe double")
+    plan = searcher.queries_df(spark, [(1, 2), (1000, 2000)])
+    ledger_path = str(tmp_path / "ledger")
+    feats.write.parquet(os.path.join(ledger_path, "_staging"))
+    n = searcher.search_and_resume(
+        spark, lambda: feats, plan, {"abbe": (None, 0.9)}, ledger_path
+    )
+    assert n == 2
+    assert spark.read.parquet(ledger_path).select("query_id").distinct().count() == 2
+
+
+@pytest.mark.parametrize("crash_at", ["staged", "passed_published"])
+def test_search_crash_resumes_to_same_ledger_and_passed(
+    spark, tmp_path, monkeypatch, crash_at
+):
+    """Fault injection at each publish step: the run crashes after
+    staging (before the passed publish) or after the passed publish
+    (before the ledger publish). The rerun must leave ledger and passed
+    rows equal, as multisets, to those of a run that did not crash."""
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
+    feats = lambda: _features(spark)  # noqa: E731
+    paths = {k: str(tmp_path / k) for k in ("ledger", "passed", "want_l", "want_p")}
+    searcher.search_and_resume(
+        spark, feats, plan, RANGES, paths["want_l"], paths["want_p"]
+    )
+
+    publish, calls = searcher._publish, []
+
+    def crashing(*args):
+        calls.append(args)
+        if len(calls) == {"staged": 1, "passed_published": 2}[crash_at]:
+            raise RuntimeError("injected crash")
+        publish(*args)
+
+    monkeypatch.setattr(searcher, "_publish", crashing)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        searcher.search_and_resume(
+            spark, feats, plan, RANGES, paths["ledger"], paths["passed"]
+        )
+    monkeypatch.setattr(searcher, "_publish", publish)
+    n = searcher.search_and_resume(
+        spark, feats, plan, RANGES, paths["ledger"], paths["passed"]
+    )
+    assert n == 3
+    read = lambda k: _rows(spark.read.parquet(paths[k]))  # noqa: E731
+    assert read("ledger") == read("want_l")
+    assert read("passed") == read("want_p") and read("passed")
+    for k in ("ledger", "passed"):
+        assert not os.path.exists(os.path.join(paths[k], "_staging"))
+    assert searcher.search_and_resume(
+        spark, feats, plan, RANGES, paths["ledger"], paths["passed"]
+    ) == 0
