@@ -15,6 +15,11 @@ output, committed by ``write_results`` for both the batch driver and the
 Structured Streaming wrapper (``streaming/search_stream.py``, the
 long-running feed shape). The rq/redis work queue of the reference is
 replaced by partition parallelism.
+
+The path stays on the JVM and runs no job that writes nothing: the query
+table is a driver-held ``LocalTableScan`` (``queries_df``), and the
+commit takes its publish key from the staged files' parquet footers and
+reads them back with the ledger's schema (``write_results``).
 """
 
 from __future__ import annotations
@@ -23,6 +28,8 @@ import os
 import shutil
 from typing import Callable, Mapping, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..plans.query_compiler import range_predicate
@@ -40,10 +47,21 @@ def queries_df(
     APPEND-ONLY — inserting/reordering ranges renumbers them and the
     ledger's done-set silently mismatches (skipping new queries and
     re-running renumbered ones). Extend the list at the end, or supply
-    your own stable query_id column instead of this helper."""
-    return spark.createDataFrame(
-        [(i, lo, hi) for i, (lo, hi) in enumerate(ranges)], QUERY_SCHEMA
+    your own stable query_id column instead of this helper.
+
+    The table is built from a ``pyarrow.Table``, so it plans as a
+    ``LocalTableScan`` of rows the driver holds, also when ``ranges`` is
+    empty: the broadcast, the no-match stubs and the resume count read it
+    without starting a Python worker, which every scan of a table
+    created from a Python list (a Python-RDD scan) does."""
+    table = pa.table(
+        {
+            "query_id": pa.array(range(len(ranges)), pa.int64()),
+            "lo": pa.array([lo for lo, _ in ranges], pa.int64()),
+            "hi": pa.array([hi for _, hi in ranges], pa.int64()),
+        }
     )
+    return spark.createDataFrame(table, QUERY_SCHEMA)
 
 
 def run_search(
@@ -87,6 +105,29 @@ def run_search(
     )
 
 
+def _min_query_id(staging: str) -> int | None:
+    """The smallest ``query_id`` of the staged part files, from their
+    parquet footers: the min of the column chunk statistics over every
+    row group (``None`` when no file holds a row). Spark's writer always
+    writes min/max for INT64 columns; a row group without them raises
+    instead of guessing a key."""
+    lows = []
+    for name in os.listdir(staging):
+        if not name.endswith(".parquet"):
+            continue
+        meta = pq.read_metadata(os.path.join(staging, name))
+        paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
+        col = paths.index("query_id")
+        for rg in range(meta.num_row_groups):
+            stats = meta.row_group(rg).column(col).statistics
+            if stats is None or not stats.has_min_max:
+                raise ValueError(
+                    f"{name}: row group {rg} has no query_id min/max statistics"
+                )
+            lows.append(stats.min)
+    return min(lows, default=None)
+
+
 def _publish(staging: str, target: str, key: int | None) -> None:
     """Replace the files published under ``key`` in ``target`` by the
     staged part files, renamed ``q<key>-<name>``."""
@@ -115,13 +156,18 @@ def write_results(
     and the ledger, the resume marker, last: a run that crashes before
     the ledger publish is redone, and the redo replaces what it left
     under that key (a crash inside the ledger's renames can publish the
-    unrenamed queries' passed rows twice). Paths are local."""
+    unrenamed queries' passed rows twice). Paths are local.
+
+    The commit runs only the jobs of its writes: the key is read from the
+    staged files' parquet footer statistics (``None`` for an empty
+    ledger), and the staged files are read back with ``ledger.schema``,
+    so neither a probe job nor a schema-inference job runs."""
     staging = os.path.join(ledger_path, "_staging")
     ledger.write.mode("overwrite").parquet(staging)
-    staged = ledger.sparkSession.read.parquet(staging)
-    key = staged.agg(F.min("query_id")).first()[0]
+    key = _min_query_id(staging)
     if passed_path is not None:
         passed_staging = os.path.join(passed_path, "_staging")
+        staged = ledger.sparkSession.read.schema(ledger.schema).parquet(staging)
         staged.filter(F.col("passed")).write.mode("overwrite").parquet(passed_staging)
         _publish(passed_staging, passed_path, key)
     _publish(staging, ledger_path, key)

@@ -81,7 +81,10 @@ def test_prepare_query_range_grammar(project):
     assert lines[1] == "5;lmc"
 
 
-def test_make_filter_then_filter_stars(project):
+@pytest.fixture(scope="module")
+def smoke_filter(project):
+    """Train ``SmokeFilter`` once per module, so every test that filters
+    with it also runs alone; returns its directory."""
     # self-contained: (re)generate the tuning file
     assert cli.main(
         ["prepare_query", "-o", "tune.txt",
@@ -101,7 +104,11 @@ def test_make_filter_then_filter_stars(project):
         path=project,
     )
     assert rc == 0
-    fdir = os.path.join(project, "filters", "SmokeFilter")
+    return os.path.join(project, "filters", "SmokeFilter")
+
+
+def test_make_filter_then_filter_stars(project, smoke_filter):
+    fdir = smoke_filter
     # a saved filter is a directory artifact with a JSON manifest
     assert os.path.isfile(
         os.path.join(fdir, "SmokeFilter.filter", "filter.json")
@@ -163,6 +170,7 @@ def test_plot_lcs(project, tmp_path):
     assert arts and all(a.endswith((".png", ".plot.dat")) for a in arts)
 
 
+@pytest.mark.usefixtures("smoke_filter")
 def test_filter_stars_overlapping_queries(project):
     """A star matched by several query rows must not duplicate its
     observations (feature skew: doubled curve_density, halved abbe

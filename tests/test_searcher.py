@@ -6,6 +6,8 @@ N queries in, ledger rows per query out, passed stars > 0)."""
 import os
 from collections import Counter
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -330,3 +332,87 @@ def test_search_crash_resumes_to_same_ledger_and_passed(
     assert searcher.search_and_resume(
         spark, feats, plan, RANGES, paths["ledger"], paths["passed"]
     ) == 0
+
+
+def test_queries_df_is_driver_local(spark, tmp_path):
+    """The query table is a LocalTableScan of rows the driver holds, not
+    a Python-RDD scan that starts Python workers on every read; an empty
+    plan keeps the schema, and searching it publishes nothing."""
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9)])
+    for df in (plan, searcher.run_search(_features(spark), plan, RANGES)):
+        physical = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in physical and "ExistingRDD" not in physical
+    empty = searcher.queries_df(spark, [])
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == "struct<query_id:bigint,lo:bigint,hi:bigint>"
+    paths = [str(tmp_path / k) for k in ("ledger", "passed")]
+    n = searcher.search_and_resume(
+        spark, lambda: _features(spark), empty, RANGES, *paths
+    )
+    assert n == 0
+    assert not any(os.path.exists(p) for p in paths)
+
+
+def _jobs(spark, group, action):
+    """The number of Spark jobs ``action()`` launches."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are listener events
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_results_runs_only_its_writes(spark, tmp_path):
+    """The commit launches the jobs of its writes and nothing else: no
+    publish-key probe and no schema inference when reading the staged
+    ledger back for the passed slice."""
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
+    ledger = searcher.run_search(_features(spark), plan, RANGES)
+    p = lambda k: str(tmp_path / k)  # noqa: E731
+    plain = _jobs(spark, "plain-write", lambda: ledger.write.parquet(p("plain")))
+    passed_slice = _jobs(
+        spark,
+        "plain-passed-write",
+        lambda: spark.read.schema(ledger.schema).parquet(p("plain"))
+        .filter(F.col("passed")).write.parquet(p("plain_passed")),
+    )
+    assert plain > 0 and passed_slice > 0
+    commit = _jobs(spark, "commit", lambda: searcher.write_results(ledger, p("ledger")))
+    assert commit == plain
+    commit_passed = _jobs(
+        spark,
+        "commit-passed",
+        lambda: searcher.write_results(ledger, p("ledger2"), p("passed")),
+    )
+    assert commit_passed == plain + passed_slice
+
+
+def test_publish_key_is_min_over_all_part_files(spark, tmp_path):
+    """The publish key is the smallest staged query_id over every part
+    file and row group, also when it sits in neither the first file nor
+    the first row group; a row group without statistics raises."""
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9), (10, 14), (2000, 3000)])
+    # descending ranges put the smallest query_id in the last part file
+    ledger = searcher.run_search(_features(spark), plan, RANGES).repartitionByRange(
+        3, F.col("query_id").desc()
+    )
+    ledger_path, passed_path = str(tmp_path / "ledger"), str(tmp_path / "passed")
+    searcher.write_results(ledger, ledger_path, passed_path)
+    for path in (ledger_path, passed_path):
+        names = [n for n in os.listdir(path) if n.endswith(".parquet")]
+        assert names and all(n.startswith("q0-") for n in names), names
+    published = spark.read.parquet(ledger_path)
+    assert published.agg(F.min("query_id")).first()[0] == 0
+    assert len(published.inputFiles()) == 3
+
+    rows = pa.table({"query_id": pa.array([9, 8, 7, 3, 5, 6], pa.int64())})
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    pq.write_table(rows, staging / "part-0.parquet", row_group_size=2)
+    assert searcher._min_query_id(str(staging)) == 3
+    pq.write_table(rows, staging / "part-1.parquet", write_statistics=False)
+    with pytest.raises(ValueError, match="no query_id min/max statistics"):
+        searcher._min_query_id(str(staging))
