@@ -4,15 +4,17 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is materialized through the noop sink so the full physical
-plan executes (no driver-side collect skew in the numbers).
+plan executes (no driver-side collect skew in the numbers). Session
+warm-up, reclaim, timed runs and the contention controls come from
+``lightcurvesclassifier_spark.harness``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -22,49 +24,13 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entry_mod
-    from lightcurvesclassifier_spark.session import get_spark
+    from lightcurvesclassifier_spark import harness
 
-    spark = get_spark("lcc-spark-bench")
+    spark = harness.open_session("lcc-spark-bench", sf_dir)
 
-    # warm the JVM + parquet footers once so per-query timings measure
-    # the plans, not session bring-up (first-query listing/codegen)
-    from lightcurvesclassifier_spark.sources.testdata import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
-
-    # best-of-N per query (default 3): single-shot numbers on a shared
-    # box carry multi-second GC/compile/contention noise — a different
-    # query spikes on every full pass (verified r4: stars_filter_pipeline
-    # read 6.8s in-suite but 3.06s in an exact-order replay); the min is
-    # the reproducible cost of the plan
+    # best-of-N per query (default 3); harness.best_of gives the reason
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
-    import gc
-
-    def _reclaim():
-        # drop caches/checkpoints a query pinned (stars_filter_pipeline,
-        # dedup_clusters, …) so later runs aren't taxed by the
-        # accumulated executor memory + GC of earlier ones.
-        # localCheckpoint()ed RDDs are only released when the JVM object
-        # is garbage-collected AND the ContextCleaner runs — measured
-        # effect without the explicit GCs: repeated runs of the same
-        # checkpoint-using query grow 2-3× within a session as dead
-        # checkpoint blocks pile up in executor storage. Running the
-        # reclaim BEFORE every timed run (not once per query) keeps a
-        # pending full GC from landing inside someone else's window —
-        # shuffle-heavy queries otherwise read 2-3× their isolated cost
-        # on some passes.
-        spark.catalog.clearCache()
-        gc.collect()  # drop py4j refs to dead DataFrames/RDDs
-        spark.sparkContext._jvm.System.gc()  # let ContextCleaner reap them
-
-    # best-of-N is the reproducible plan cost; the median additionally
-    # captures the contention tax (this box's co-tenants make identical
-    # code read 1-3× apart between passes — r5's COVERAGE.md recorded
-    # 123 s clean vs 152 s contended). Emitting BOTH lets regression
-    # triage distinguish a plan change (best moves) from noise (only
-    # the median moves).
     # ONE untimed warm-up execution of every query before any timing:
     # JVM session ramp (C2 JIT of Spark's shuffle/codegen core, code-
     # cache growth, allocator warm-up) otherwise lands entirely on
@@ -74,51 +40,28 @@ def main() -> None:
     # every timed number is position-independent, so round-over-round
     # diffs reflect plan changes, not dict order.
     if os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0":
-        for name, fn in entry_mod.queries().items():
-            _reclaim()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        for fn in entry_mod.queries().values():
+            harness.reclaim(spark)
+            harness.run(spark, fn, sf_dir)
 
-    timings: dict[str, float] = {}
-    medians: dict[str, float] = {}
-    total = 0.0
-    total_med = 0.0
-    for name, fn in entry_mod.queries().items():
-        samples = []
-        for _ in range(max(1, runs)):
-            _reclaim()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        samples.sort()
-        best = samples[0]
-        med = samples[len(samples) // 2] if len(samples) % 2 else (
-            samples[len(samples) // 2 - 1] + samples[len(samples) // 2]
-        ) / 2.0
-        timings[name] = round(best, 3)
-        medians[name] = round(med, 3)
-        total += best
-        total_med += med
+    results = {
+        name: harness.best_of(spark, fn, sf_dir, runs, warm=False)
+        for name, fn in entry_mod.queries().items()
+    }
+    timings = {n: r["best"] for n, r in results.items()}
+    medians = {n: round(r["median"], 3) for n, r in results.items()}
 
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # contention self-adjudication (r8 verdict stretch #8): the three
-    # control queries' committed quiet-box floors ride in the record,
-    # so a bar claim is gradable from THIS artifact alone — controls
-    # near 1.0x mean the bests are quiet-box numbers; higher means the
-    # whole run carries a co-tenancy tax.  Floors are best-of-3 on a
-    # verified-quiet box (tools/time_queries.py provenance); re-baseline
-    # if a control's plan ever changes.
-    from lightcurvesclassifier_spark.benchcontrols import (
-        CONTROL_FLOORS,
-        contention_ratio,
-    )
-
-    # floors are sf0.1 numbers — at any other SF the ratio is meaningless
+    # contention self-adjudication (r8 verdict stretch #8): the controls
+    # and their quiet-box floors ride in the record, so a bar claim is
+    # gradable from THIS artifact alone. Floors are sf0.1 numbers — at
+    # any other SF the ratio is meaningless.
     controls = {
         n: {"best": timings[n], "quiet_floor": fl}
-        for n, fl in CONTROL_FLOORS.items()
+        for n, fl in harness.control_floors().items()
         if n in timings and sf_val == 0.1
     }
-    contention = contention_ratio(timings) if controls else None
+    contention = harness.contention_ratio(timings) if controls else None
     record = {
         "metric": "total_query_wall_time",
         "controls": controls,
@@ -132,8 +75,8 @@ def main() -> None:
         # tail-visible dict).
         "queries_median": medians,
         "queries": timings,
-        "value": round(total, 3),
-        "value_median": round(total_med, 3),
+        "value": round(sum(timings.values()), 3),
+        "value_median": round(sum(medians.values()), 3),
         "unit": "sec",
         "sf": sf_val,
     }
@@ -144,26 +87,22 @@ def main() -> None:
     # land in BENCH_LAST.json instead.
     here = os.path.dirname(os.path.abspath(__file__))
     name = "BENCH_LOCAL.json" if sf_val == 0.1 else "BENCH_LAST.json"
-    # top per-query movers vs the COMMITTED record (read before the
-    # overwrite below): the driver's bounded ~2 KB tail drops the
-    # 150-entry queries dict, so PERF_r10.per_query came back empty —
-    # one compact line of the 15 largest |delta|s restores per-query
-    # visibility inside the tail window (r10 verdict directive #7).
-    # Additions-only: printed BEFORE the final contract line so the
-    # driver still parses the same trailing record it always did.
+    # top per-query movers vs the COMMITTED record (`git show HEAD:`, not
+    # the last local run's file): the driver's ~2 KB tail drops the
+    # 150-entry queries dict (PERF_r10.per_query came back empty), so one
+    # compact line of the 15 largest |delta|s restores per-query
+    # visibility (r10 verdict directive #7), printed BEFORE the final
+    # contract line so the driver parses the same trailing record.
     top_deltas = None
     try:
-        with open(os.path.join(here, name)) as f:
-            prev = json.load(f).get("queries", {})
-        deltas = {
-            q: round(timings[q] - prev[q], 3)
-            for q in timings
-            if q in prev
-        }
+        git = ["git", "show", f"HEAD:{name}"]
+        committed = subprocess.run(git, cwd=here, capture_output=True, check=True)
+        prev = json.loads(committed.stdout).get("queries", {})
+        deltas = {q: round(timings[q] - prev[q], 3) for q in timings if q in prev}
         top = sorted(deltas, key=lambda q: -abs(deltas[q]))[:15]
         top_deltas = {q: deltas[q] for q in top}
-    except (OSError, ValueError, KeyError):
-        pass  # no committed record yet: skip the line, never fail the run
+    except (OSError, ValueError, subprocess.CalledProcessError):
+        pass  # no git or no committed record: skip the line, never fail the run
     try:
         with open(os.path.join(here, name), "w") as f:
             json.dump(record, f, indent=1)
@@ -171,27 +110,13 @@ def main() -> None:
         pass  # read-only checkout: stdout record still stands
     print(json.dumps(record))
     if top_deltas is not None:
-        print(
-            json.dumps(
-                {"metric": "top_deltas_vs_committed", "queries": top_deltas}
-            )
-        )
+        print(json.dumps({"metric": "top_deltas_vs_committed", "queries": top_deltas}))
     # FINAL compact line so the total always lands inside the driver's
     # bounded tail window and parses — r4's 122-query map pushed
     # "value" out of the capture and the official record was
     # "parsed": null.
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_wall_time",
-                "value": round(total, 3),
-                "value_median": round(total_med, 3),
-                "unit": "sec",
-                "sf": sf_val,
-                "contention_ratio": contention,
-            }
-        )
-    )
+    compact = ("metric", "value", "value_median", "unit", "sf", "contention_ratio")
+    print(json.dumps({k: record[k] for k in compact}))
     spark.stop()
 
 

@@ -1,122 +1,66 @@
-"""Emit CORRECTNESS_LOCAL.json — the pre-snapshot t2 sweep's results for
-EVERY queries() entry, in the external driver's CORRECTNESS_r{N}.json
-format — so each round ships machine-readable value-check evidence for
-all 122 queries even though the driver's own window covers only the
-first 50 (it needs 3 rounds of rotation for full coverage).
+"""Oracle check of queries() entries against their DuckDB value oracles
+(``oracle_sql()``) at $SPARK_GRAFT_SF_DIR (default sf0.01), by
+``lightcurvesclassifier_spark.harness.compare``.
 
-Comparison semantics match the driver: row count, column set, and
-order-insensitive value equality with columns sorted by name — here at
-atol=0 (exact), the repo's stricter discipline. On top of the pandas
-value compare (where Spark NULL and NaN both arrive as NaN in float
-columns and would mask each other), a per-column engine-side NULL
-COUNT is compared between Spark and DuckDB, so a NULL-vs-NaN
-divergence that changes either side's null population fails the check
-instead of slipping through.
+Usage (from the repo root): python tools/correctness_local.py [q1 q2 ...]
 
-Run from the repo root: python tools/correctness_local.py
+With no names it sweeps EVERY queries() entry; at sf0.01 it writes
+CORRECTNESS_LOCAL.json in the external driver's CORRECTNESS_r{N}.json
+format — value-check evidence for all queries, where the driver's own
+window covers only the first 50 — and at any other SF prints the summary
+only. With names it prints one OK/FAIL line per query and exits 1 on
+any failure.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-SF = "/root/testdata/sf0.01"
-
 
 def main() -> None:
+    names = sys.argv[1:]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    sf = os.path.basename(sf_dir.rstrip("/"))
+
     import duckdb
-    import numpy as np
 
     import __spark_entry__ as em
-    from lightcurvesclassifier_spark.session import get_spark
+    from lightcurvesclassifier_spark import harness
     from lightcurvesclassifier_spark.sources.testdata import TABLES
 
-    spark = get_spark("correctness-local")
+    harness.check_names(names)
+    spark = harness.open_session("correctness-local")
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
+    qs = em.queries()
     oracles = em.oracle_sql()
     out: dict[str, dict] = {}
-    for name, fn in em.queries().items():
-        rec = {
-            "rows_match": None, "schema_match": None, "hash_match": None,
-            "spark_rows": None, "oracle_rows": None, "err": None,
-        }
-        try:
-            sdf = fn(spark, SF)
-            s = sdf.toPandas()
-            rec["spark_rows"] = int(len(s))
-            sql = oracles.get(name)
-            if sql is None:
-                rec["err"] = "no_oracle"
-                out[name] = rec
-                continue
-            o = con.execute(sql).df()
-            # engine-side NULL counts per column: pandas can't tell a
-            # Spark NULL from a NaN in a float column, so this is the
-            # only check that catches the NULL-vs-NaN divergence class
-            from pyspark.sql import functions as SF_
+    n_green = 0
+    for name in names or qs:
+        out[name] = r = harness.compare(spark, qs[name], sf_dir, con, oracles.get(name))
+        green = bool(r["rows_match"] and r["schema_match"] and r["hash_match"])
+        n_green += green
+        if names:
+            rows = f"(spark={r['spark_rows']} oracle={r['oracle_rows']})"
+            print(f"{'OK ' if green else 'FAIL'} {name} @ {sf} {rows}", flush=True)
 
-            s_nulls = sdf.select(
-                *[
-                    SF_.count(SF_.when(SF_.col(c).isNull(), 1)).alias(c)
-                    for c in sdf.columns
-                ]
-            ).collect()[0].asDict()
-            o_nulls = con.execute(
-                "SELECT "
-                + ", ".join(
-                    f'count(*) FILTER (WHERE "{c}" IS NULL) AS "{c}"'
-                    for c in sdf.columns
-                )
-                + f" FROM ({sql})"
-            ).df().iloc[0].to_dict()
-            null_ok = all(
-                int(s_nulls[c]) == int(o_nulls[c]) for c in sdf.columns
-            )
-            rec["oracle_rows"] = int(len(o))
-            rec["rows_match"] = len(s) == len(o)
-            rec["schema_match"] = sorted(s.columns) == sorted(o.columns)
-            if rec["rows_match"] and rec["schema_match"]:
-                cols = sorted(s.columns)
-                s2 = s[cols].sort_values(by=cols).reset_index(drop=True)
-                o2 = o[cols].sort_values(by=cols).reset_index(drop=True)
-                ok = True
-                for c in cols:
-                    if s2[c].dtype.kind == "f" or o2[c].dtype.kind == "f":
-                        ok &= bool(
-                            np.allclose(
-                                s2[c].astype(float), o2[c].astype(float),
-                                rtol=0, atol=0, equal_nan=True,
-                            )
-                        )
-                    else:
-                        ok &= bool(
-                            (s2[c].to_numpy() == o2[c].to_numpy()).all()
-                        )
-                rec["hash_match"] = ok and null_ok
-                if ok and not null_ok:
-                    rec["err"] = "null_count_mismatch"
-            else:
-                rec["hash_match"] = False
-        except Exception as e:  # record, don't abort the sweep
-            rec["err"] = f"{type(e).__name__}: {e}"[:300]
-        out[name] = rec
-
-    path = ROOT / "CORRECTNESS_LOCAL.json"
-    path.write_text(json.dumps(out, indent=2) + "\n")
-    n_green = sum(
-        1 for r in out.values()
-        if r["rows_match"] and r["schema_match"] and r["hash_match"]
-    )
-    print(f"wrote {path}: {n_green}/{len(out)} green")
+    if not names and sf == "sf0.01":
+        path = ROOT / "CORRECTNESS_LOCAL.json"
+        path.write_text(json.dumps(out, indent=2) + "\n")
+        print(f"wrote {path}: {n_green}/{len(out)} green")
+    elif not names:
+        print(f"{sf}: {n_green}/{len(out)} green")
+    con.close()
     spark.stop()
+    sys.exit(1 if names and n_green < len(out) else 0)
 
 
 if __name__ == "__main__":

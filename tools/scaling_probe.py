@@ -26,11 +26,12 @@ Prints one JSON line per query: {"query", "t_base", "t_big", "exponent"}.
 from __future__ import annotations
 
 import argparse
-import gc
 import json
+import math
 import os
+import shutil
 import sys
-import time
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -43,14 +44,6 @@ QUERIES = [
     "dedup_canonical",
     "table_profile",
 ]
-
-# control queries timed at BASE scale before and after the probed list:
-# their floors adjudicate whether an exponent was measured on a quiet
-# or contended box (the BARS protocol, r8 verdict stretch #8);
-# single-sourced floors — see benchcontrols.py provenance
-from lightcurvesclassifier_spark.benchcontrols import (  # noqa: E402
-    CONTROL_FLOORS as CONTROLS,
-)
 
 
 def _probe_extras():
@@ -92,10 +85,7 @@ def _salted_documents(docs: DataFrame, k: int) -> DataFrame:
                 "n_chars",
             )
         )
-    out = reps[0]
-    for r in reps[1:]:
-        out = out.unionByName(r)
-    return out
+    return reduce(DataFrame.unionByName, reps)
 
 
 def _shifted_embeddings(emb: DataFrame, k: int) -> DataFrame:
@@ -141,10 +131,7 @@ def _shifted_embeddings(emb: DataFrame, k: int) -> DataFrame:
                 *[c for c in emb.columns if c not in ("vec_id", "embedding")],
             )
         )
-    out = reps[0]
-    for rdf in reps[1:]:
-        out = out.unionByName(rdf)
-    return out
+    return reduce(DataFrame.unionByName, reps)
 
 
 def main() -> None:
@@ -164,20 +151,17 @@ def main() -> None:
     base_sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entry_mod
-    from lightcurvesclassifier_spark.session import get_spark
+    from lightcurvesclassifier_spark import harness
     from lightcurvesclassifier_spark.sources.testdata import TABLES, load_table
 
-    # fail fast on a typo'd --queries name BEFORE the (expensive)
-    # replicated-dataset build (r8 advice item)
+    # fail fast on bad arguments BEFORE the (expensive) replicated-dataset
+    # build (r8 advice item): the exponent divides by log(k)
+    if args.k < 2:
+        ap.error(f"--k must be at least 2, got {args.k}")
     extras = _probe_extras()
-    known = set(entry_mod.queries()) | set(extras)
-    unknown = [n for n in queries if n not in known]
-    if unknown:
-        ap.error(
-            "unknown --queries name(s): " + ", ".join(sorted(unknown))
-        )
+    harness.check_names(queries, extras)
 
-    spark = get_spark("lcc-scaling-probe")
+    spark = harness.open_session("lcc-scaling-probe", base_sf)
 
     big_dir = os.path.join(args.out, f"k{args.k}")
     marker = os.path.join(big_dir, "_READY")
@@ -195,29 +179,22 @@ def main() -> None:
         # (table_profile scans lineitem); replicate lineitem too, link
         # the rest at 1x (they are not on the probed queries' hot path)
         li = load_table(spark, base_sf, "lineitem")
-        big_li = li
-        for _r in range(1, args.k):
-            big_li = big_li.unionByName(li)
-        big_li.write.mode("overwrite").parquet(
-            os.path.join(big_dir, "lineitem.parquet")
-        )
+        reduce(DataFrame.unionByName, [li] * args.k).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(big_dir, "lineitem.parquet"))
         # events: id-offset replicas = K independent copies of the star
         # catalog (each star's curve is identical per replica, so
         # per-star kernels and the periodogram/PDM expansion scale
         # exactly Kx — the work is |obs| x |grid| with bounded per-star
         # state, no cross-star interaction to distort)
         ev = load_table(spark, base_sf, "events")
-        big_ev = None
-        for r in range(args.k):
-            leg = ev.withColumn(
-                "user_id", F.col("user_id") + F.lit(r * 10_000_000)
-            )
-            big_ev = leg if big_ev is None else big_ev.unionByName(leg)
-        big_ev.write.mode("overwrite").parquet(
+        legs = [
+            ev.withColumn("user_id", F.col("user_id") + F.lit(r * 10_000_000))
+            for r in range(args.k)
+        ]
+        reduce(DataFrame.unionByName, legs).write.mode("overwrite").parquet(
             os.path.join(big_dir, "events.parquet")
         )
-        import shutil
-
         for t in TABLES:
             dst = os.path.join(big_dir, f"{t}.parquet")
             if not os.path.exists(dst):
@@ -226,62 +203,32 @@ def main() -> None:
                     shutil.copytree(src, dst)
                 else:
                     shutil.copy(src, dst)
-        open(marker, "w").write("ok")
+        with open(marker, "w") as fh:
+            fh.write("ok")
 
-    for t in TABLES:
-        load_table(spark, base_sf, t).count()
-        load_table(spark, big_dir, t).count()
-
+    # no table warm-up at big_dir: best_of's untimed run of each query
+    # reads its tables there before any timed run
     qs = {**entry_mod.queries(), **extras}
 
-    def _reclaim():
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-
     def _best(fn, sf_dir):
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples = []
-        for _ in range(args.runs):
-            _reclaim()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        return min(samples)
+        return harness.best_of(spark, fn, sf_dir, args.runs)["best"]
 
-    import math
-
+    # control queries timed at BASE scale before and after the probed
+    # list: their floors adjudicate whether an exponent was measured on
+    # a quiet or contended box (the BARS protocol, r8 verdict stretch #8)
     def _controls_line(tag: str) -> None:
-        cs = {n: round(_best(qs[n], base_sf), 3) for n in CONTROLS}
-        ratio = sum(cs[n] / CONTROLS[n] for n in CONTROLS) / len(CONTROLS)
-        print(
-            json.dumps(
-                {
-                    "controls": tag,
-                    **cs,
-                    "contention_ratio": round(ratio, 3),
-                }
-            ),
-            flush=True,
-        )
+        cs = {n: _best(qs[n], base_sf) for n in harness.control_floors()}
+        ratio = harness.contention_ratio(cs)
+        print(json.dumps({"controls": tag, **cs, "contention_ratio": ratio}), flush=True)
 
     _controls_line("before")
     for name in queries:
         fn = qs[name]
         t1 = _best(fn, base_sf)
         tk = _best(fn, big_dir)
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "k": args.k,
-                    "t_base_sec": round(t1, 3),
-                    "t_big_sec": round(tk, 3),
-                    "exponent": round(math.log(tk / t1) / math.log(args.k), 3),
-                }
-            ),
-            flush=True,
-        )
+        exponent = round(math.log(tk / t1) / math.log(args.k), 3)
+        rec = {"query": name, "k": args.k, "t_base_sec": t1, "t_big_sec": tk}
+        print(json.dumps({**rec, "exponent": exponent}), flush=True)
     _controls_line("after")
     spark.stop()
 

@@ -1,96 +1,58 @@
-"""Isolated per-query timing: best-of-N for the named queries at
-$SPARK_GRAFT_SF_DIR (default sf0.1), after the same reclaim + warm-up
-protocol bench.py uses.
+"""Isolated per-query timing: best-of-N wall time plus the best run's
+job / stage / task counts (they attribute the FIXED latencies — job
+launches, stage round-trips, broadcast builds — that dominate most
+queries at sf0.1) for the named queries, or every one with ``--all``.
+Reads $SPARK_GRAFT_SF_DIR (default sf0.1) and $SPARK_GRAFT_BENCH_RUNS
+(default 3); bench.py's reclaim + warm-up protocol.
 
-Usage: python tools/time_queries.py [--json] q1 q2 ...
+Usage: python tools/time_queries.py [--json] [--all] q1 q2 ...
 
-With ``--json`` the output is ONE self-describing JSON line containing
-the target timings PLUS three untouched CONTROL queries
-(pricing_summary / lc_smooth / detrend — stable plans that no round
-has changed since r5) timed in the same session, and the contention
-ratio of each control against its committed quiet-box floor. A bar
-claim ("query X meets <=Ns") is only adjudicable when the controls are
-near 1.0x — this artifact makes that adjudication one read instead of
-a cross-correlation of three bench records (r7 verdict item #4).
+``--json`` prints ONE JSON line: the targets PLUS the harness's
+contention controls timed in the same session and their ratio against
+this core count's floors, so a bar claim ("query X meets <=Ns") is
+adjudicable from this one artifact (r7 verdict item #4).
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# single-sourced quiet-box floors (see benchcontrols.py provenance)
-from lightcurvesclassifier_spark.benchcontrols import (  # noqa: E402
-    CONTROL_FLOORS as CONTROLS,
-)
 
 
 def main() -> None:
     args = sys.argv[1:]
     as_json = "--json" in args
-    names = [a for a in args if a != "--json"]
+    names = [a for a in args if a not in ("--json", "--all")]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     import __spark_entry__ as entry_mod
-    from lightcurvesclassifier_spark.session import get_spark
-    from lightcurvesclassifier_spark.sources.testdata import TABLES, load_table
-
-    spark = get_spark("lcc-spark-time")
-    for t in TABLES:
-        load_table(spark, sf_dir, t).count()
+    from lightcurvesclassifier_spark import harness
 
     qs = entry_mod.queries()
+    if "--all" in args:
+        names = list(qs)
+    harness.check_names(names)
+    spark = harness.open_session("lcc-spark-time", sf_dir)
 
-    def _reclaim():
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-
-    def _time(name: str) -> dict:
-        fn = qs[name]
-        _reclaim()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(runs):
-            _reclaim()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.perf_counter() - t0, 3))
-        return {"best": min(samples), "all": samples}
-
-    targets = {n: _time(n) for n in names}
-    if not as_json:
-        for n, r in targets.items():
-            print(f"{n}: best={r['best']:.3f} all={r['all']}")
-        spark.stop()
-        return
-
-    controls = {
-        n: _time(n) for n in CONTROLS if n in qs and n not in targets
-    }
-    ratios = [controls[n]["best"] / CONTROLS[n] for n in controls]
-    print(
-        json.dumps(
-            {
-                "sf_dir": sf_dir,
-                "runs": runs,
-                "targets": targets,
-                "controls": {
-                    n: {**controls[n], "quiet_floor": CONTROLS[n]}
-                    for n in controls
-                },
-                "contention_ratio": round(
-                    sum(ratios) / len(ratios), 3
-                ) if ratios else None,
-            }
-        )
-    )
+    targets = {}
+    for n in names:
+        targets[n] = r = harness.best_of(spark, qs[n], sf_dir, runs)
+        if not as_json:
+            shape = f"jobs={r['jobs']} stages={r['stages']} tasks={r['tasks']}"
+            print(f"{n}: best={r['best']:.3f} all={r['all']} {shape}", flush=True)
+    if as_json:
+        controls = {
+            n: {**harness.best_of(spark, qs[n], sf_dir, runs), "quiet_floor": fl}
+            for n, fl in harness.control_floors().items()
+            if n not in targets
+        }
+        ratio = harness.contention_ratio({n: c["best"] for n, c in controls.items()})
+        print(json.dumps({"sf_dir": sf_dir, "runs": runs, "targets": targets,
+                          "controls": controls, "contention_ratio": ratio}))
     spark.stop()
 
 
