@@ -1878,20 +1878,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       soft_dedup_weights, dedup_token_report — NEW this round (a
       never-driver-checked query outranks freshness rotation, the r7
       lesson).
-    * 16-50: THIRTY-FIVE of the forty r7-fresh rows, so after this
-      round only FIVE queries' freshest driver rows predate r8
-      (ekvi_paa_exact, abbe_filter, embedding_profile, dq_audit,
-      revenue_cube — displaced by the new queries; each family keeps
-      a sibling in-window and all five are value-exact locally every
-      session). r10 plan-edited queries that are r8/r9-fresh
+    * 16-17: systematic_search, stars_filter_pipeline — rotated in
+      from the tail because they cover the search ledger and the
+      trained filter that ``lcc filter_stars`` now shares with the
+      searcher (searcher.status_ledger); they displace curve_stats_band
+      and hll_distinct, whose families keep curve_stats and
+      hll_registers in-window.
+    * 18-50: THIRTY-THREE of the forty r7-fresh rows, so only SEVEN
+      queries' freshest driver rows predate r8 (ekvi_paa_exact,
+      abbe_filter, embedding_profile, dq_audit, revenue_cube — displaced
+      by the new queries — plus curve_stats_band and hll_distinct; each
+      family keeps a sibling in-window and all seven are value-exact
+      locally every session). r10 plan-edited queries that are r8/r9-fresh
       (gopher_quality's null-guard, the stratified-split fusion,
       lsh_recall's shared shingle leg, batched bpe_learn) stay
       OUTSIDE the window and lean on tests/test_oracle_parity.py's
       every-session value-exact sweep instead.
-    * 51+: embedding_profile, dq_audit, revenue_cube, ekvi_paa_exact,
-      abbe_filter, then r8-fresh rows, then r9-fresh rows (newest
-      evidence last), re-verified every session by
-      tests/test_oracle_parity.py.
+    * 51+: curve_stats_band, hll_distinct, embedding_profile, dq_audit,
+      revenue_cube, ekvi_paa_exact, abbe_filter, then r8-fresh rows,
+      then r9-fresh rows (newest evidence last), re-verified every
+      session by tests/test_oracle_parity.py.
     Every entry carries a full DuckDB oracle — including the
     Lloyd-trained embedding_ivf_topk, whose training is mirrored in SQL
     (engine-exact int-scaled means).
@@ -1924,7 +1930,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lsh_band_curve": q_lsh_band_curve,
         "soft_dedup_weights": q_soft_dedup_weights,
         "dedup_token_report": q_dedup_token_report,
-        # 16-50: thirty-five of the forty r7-fresh rows — oldest
+        # 16-17: the search-ledger and trained-filter rows, the path
+        # lcc filter_stars shares with the searcher
+        "systematic_search": q_systematic_search,
+        "stars_filter_pipeline": q_stars_filter_pipeline,
+        # 18-50: thirty-three of the forty r7-fresh rows — oldest
         # remaining evidence
         "bloom_bits": q_bloom_bits,
         "bloom_probe_fast": q_bloom_probe_fast,
@@ -1935,7 +1945,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curve_stats": q_curve_stats,
         "abbe_value": q_abbe_value,
         "hll_registers": q_hll_registers,
-        "hll_distinct": q_hll_distinct,
         "cone_search": q_cone_search,
         "sky_zorder": q_sky_zorder,
         "event_sessions": q_event_sessions,
@@ -1954,19 +1963,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quantize_embeddings": q_quantize_embeddings,
         "weighted_sample": q_weighted_sample,
         "corpus_diff": q_corpus_diff,
-        "curve_stats_band": q_curve_stats_band,
         "lang_quantiles": q_lang_quantiles,
         "fuzzy_match": q_fuzzy_match,
         "string_profile": q_string_profile,
         "length_buckets": q_length_buckets,
         "domain_stats": q_domain_stats,
         "stetson_variability": q_stetson_variability,
-        # --- 51+: embedding_profile/dq_audit/revenue_cube (pushed out
+        # --- 51+: curve_stats_band/hll_distinct (pushed out by the two
+        # search-ledger rows; r7-green with in-window family siblings),
+        # embedding_profile/dq_audit/revenue_cube (pushed out
         # by the three late-r10 queries; all r7-green with in-window
         # family siblings), ekvi_paa_exact (displaced by
         # ivf_recall_curve; r7 driver row + every-session local value
         # pin), then r8-fresh rows, re-verified every session by
         # tests/test_oracle_parity.py (rotated out for window room) ---
+        "curve_stats_band": q_curve_stats_band,
+        "hll_distinct": q_hll_distinct,
         "embedding_profile": q_embedding_profile,
         "dq_audit": q_dq_audit,
         "revenue_cube": q_revenue_cube,
@@ -2064,8 +2076,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_calibration": q_asof_calibration,
         "variogram_slope": q_variogram_slope,
         "comp_curves_shape": q_comp_curves_shape,
-        "systematic_search": q_systematic_search,
-        "stars_filter_pipeline": q_stars_filter_pipeline,
         "curve_descr": q_curve_descr,
         "curve_descr_height": q_curve_descr_height,
     }

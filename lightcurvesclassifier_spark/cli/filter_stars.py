@@ -5,8 +5,9 @@ named filters, resolve the database, run the systematic search, and
 write per-run artifacts under ``RESULTS/<run>/``:
 
 - ``lcs/`` — passed stars' light curves as ``.dat`` files
-- ``query_status.txt`` — the status ledger (one row per query/star)
-- ``coords.dat`` — feature coordinates of inspected stars (``-s y``)
+- ``ledger/``, ``passed/`` — the status ledger and its passed rows
+- ``query_status.txt`` — the ledger as text (one row per query/star)
+- ``coords.dat`` — feature coordinates of found stars (``-s y``)
 
 Databases: ``FileManager`` reads local dat folders named by each query
 row's ``path`` column (the reference's file connector,
@@ -14,6 +15,11 @@ lcc/db_tier/connectors/file_manager.py); any registered remote
 connector name (sources/remote.py) is the network path. The per-query
 loop of the reference becomes one union + one distributed feature pass;
 the filter applies to every star in a single scan.
+
+The CLI attributes stars to queries and decides ``passed``; it is a
+caller of the searcher's ``status_ledger`` and ``write_results``
+(operators/searcher.py). Curves are written before the commit, the two
+text files after it from the published ledger; a rerun replaces its run.
 """
 
 from __future__ import annotations
@@ -24,6 +30,7 @@ import os
 from pyspark.sql import functions as F
 
 from ..ml import persistence
+from ..operators import searcher
 from ..sources import files
 from . import descriptors as descr_registry
 from . import stars_io
@@ -115,7 +122,7 @@ def main(project_settings, argv: list[str] | None = None) -> int:
         for qid, row in enumerate(q_rows):
             part = files.load_dat_curves(
                 spark, os.path.join(project_settings.INP_LCS, row["path"])
-            ).withColumn("query_id", F.lit(qid))
+            ).withColumn("query_id", F.lit(qid).cast("long"))
             obs = part if obs is None else obs.unionByName(part)
     else:
         from ..sources import remote
@@ -165,52 +172,42 @@ def main(project_settings, argv: list[str] | None = None) -> int:
 
     if descr_names:
         feats, _ = descr_registry.featurize(obs, descr_names, descr_params)
-        feats = feats.join(star_queries, "star_id")
     else:
-        feats = star_queries
+        feats = star_queries.select("star_id").distinct()
 
+    # one passed decision per star, by the filters in sequence
     passed = feats
     for filt in filters:
         passed = filt.filter_stars(passed).drop("prob")
-    passed = passed.cache()
+    flagged = feats.join(
+        passed.select("star_id", F.lit(True).alias("passed")), "star_id", "left"
+    ).withColumn("passed", F.coalesce("passed", F.lit(False))).cache()
+    passed_ids = flagged.filter("passed").select("star_id")
+    files.save_dat_curves(obs.join(passed_ids, "star_id"), lcs_dir)
 
-    # ledger: one row per (query, star) with found/passed flags; the
-    # passed side must be DISTINCT star ids — a star found under several
-    # queries would otherwise multiply ledger rows through the join
-    ledger = feats.join(
-        passed.select("star_id").distinct().withColumn("passed", F.lit(True)),
-        "star_id",
-        "left",
-    ).select(
-        "query_id",
-        "star_id",
-        F.lit(True).alias("found"),
-        F.coalesce("passed", F.lit(False)).alias("passed"),
+    ledger = searcher.status_ledger(
+        star_queries.join(flagged, "star_id"), spark.range(len(q_rows)).toDF("query_id")
     )
-    pdf = ledger.orderBy("query_id", "star_id").toPandas()
+    ledger_dir = os.path.join(run_dir, "ledger")
+    searcher.write_results(ledger, ledger_dir, os.path.join(run_dir, "passed"))
+
+    # text exports of the published ledger
+    published = spark.read.parquet(ledger_dir)
     with open(os.path.join(run_dir, "query_status.txt"), "w") as f:
         f.write("#query_id;star_id;found;passed\n")
-        for _, r in pdf.iterrows():
-            f.write(f"{r['query_id']};{r['star_id']};{r['found']};{r['passed']}\n")
+        status = published.select("query_id", "star_id", "found", "passed")
+        for r in status.orderBy("query_id", "star_id").collect():
+            star = "" if r.star_id is None else r.star_id
+            f.write(f"{r.query_id};{star};{r.found};{r.passed}\n")
 
     if opts.save_coords == "y" and descr_names:
-        cols = sorted(needed & set(feats.columns)) or [
-            c for c in feats.columns if c not in ("star_id", "query_id")
-        ]
-        cpdf = feats.select("star_id", *cols).orderBy("star_id").toPandas()
+        cols = sorted(needed & set(feats.columns))
+        coords = published.filter("found").dropDuplicates(["star_id"])
         with open(os.path.join(run_dir, "coords.dat"), "w") as f:
             f.write("# star_id\t" + "\t".join(cols) + "\n")
-            for _, r in cpdf.iterrows():
-                f.write(
-                    str(r["star_id"])
-                    + "\t"
-                    + "\t".join(f"{r[c]:.3f}" for c in cols)
-                    + "\n"
-                )
-
-    # passed stars' curves as dat files
-    passed_ids = passed.select("star_id").distinct()
-    files.save_dat_curves(obs.join(passed_ids, "star_id"), lcs_dir)
+            for r in coords.orderBy("star_id").collect():
+                vals = (float("nan") if r[c] is None else r[c] for c in cols)
+                f.write(f"{r.star_id}\t" + "\t".join(f"{v:.3f}" for v in vals) + "\n")
 
     n_passed = passed_ids.count()
     print(

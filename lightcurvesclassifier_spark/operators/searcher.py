@@ -8,13 +8,16 @@ per (query, star) with the features, per-decider probabilities and
 passed flags; ``getUnsearchedQuery`` (lcc/data_manager/
 status_resolver.py:257-264) resumes by subtracting logged queries.
 
-Spark shape: the per-query Python loop becomes a single broadcast range
-join of the (small) query table against the (huge) feature table — every
-query is matched in one scan of the data and the ledger is the join
-output, committed by ``write_results`` for both the batch driver and the
-Structured Streaming wrapper (``streaming/search_stream.py``, the
-long-running feed shape). The rq/redis work queue of the reference is
-replaced by partition parallelism.
+Spark shape: the per-query Python loop becomes two steps. Attribution
+pairs queries with stars; for id-range queries ``run_search`` does it in
+one broadcast range join of the (small) query table against the (huge)
+feature table, one scan of the data. ``status_ledger`` turns attributed
+rows into the ledger and ``write_results`` commits it, for the batch
+driver, the Structured Streaming wrapper (``streaming/search_stream.py``,
+the long-running feed shape) and ``lcc filter_stars``
+(``cli/filter_stars.py``, which attributes through its connector fetch
+and decides ``passed`` with the saved filters). The rq/redis work queue
+of the reference is replaced by partition parallelism.
 
 The path stays on the JVM and runs no job that writes nothing: the query
 table is a driver-held ``LocalTableScan`` (``queries_df``), and the
@@ -64,36 +67,24 @@ def queries_df(
     return spark.createDataFrame(table, QUERY_SCHEMA)
 
 
-def run_search(
-    features: DataFrame,
-    queries: DataFrame,
-    passed_ranges: Mapping[str, tuple[float | None, float | None]],
-    key: str = "star_id",
+def status_ledger(
+    found: DataFrame, queries: DataFrame, key: str = "star_id"
 ) -> DataFrame:
     """The search ledger: one row per (query, found star), plus one
-    found=false row per query that matched no star (uploadStatus logs
+    found=false row per query that found no star (uploadStatus logs
     every query; without it resume re-runs empty-result queries forever).
 
-    ``features`` is the descriptor output (one row per star);
-    ``queries`` the (query_id, lo, hi) dimension; ``passed_ranges`` the
-    CustomDecider boundary predicate deciding ``passed``.
-
-    The join is a broadcast theta join on the range condition — the big
-    side streams through untouched (no shuffle); at 100 TB this is the
-    only viable shape (queries are few, stars are not). Each query also
-    gets a NULL-feature stub, kept only when no row of its query_id is
-    found: the plan is lazy and scans the features once.
+    ``found`` holds the attributed rows: ``query_id``, ``key``, the
+    feature columns and the ``passed`` flag; ``queries`` any table with a
+    ``query_id`` column. Each query gets a NULL-feature stub, kept only
+    when no row of its query_id is found: the plan is lazy and scans
+    ``found`` once.
     """
-    q = F.broadcast(queries)
-    cond = (F.col(key) >= F.col("lo")) & (F.col(key) <= F.col("hi"))
-    cols = [key] + [c for c in features.columns if c != key]
-    passed = range_predicate(passed_ranges).alias("passed")
-    matched = features.join(q, cond, "inner").select(
-        "query_id", *cols, F.lit(True).alias("found"), passed
-    )
+    cols = [key] + [c for c in found.columns if c not in (key, "query_id", "passed")]
+    matched = found.select("query_id", *cols, F.lit(True).alias("found"), "passed")
     stubs = queries.select(
         "query_id",
-        *[F.lit(None).cast(features.schema[c].dataType).alias(c) for c in cols],
+        *[F.lit(None).cast(found.schema[c].dataType).alias(c) for c in cols],
         F.lit(False).alias("found"),
         F.lit(False).alias("passed"),
     )
@@ -103,6 +94,29 @@ def run_search(
         .filter(F.col("found") | ~F.col("_any_found"))
         .drop("_any_found")
     )
+
+
+def run_search(
+    features: DataFrame,
+    queries: DataFrame,
+    passed_ranges: Mapping[str, tuple[float | None, float | None]],
+    key: str = "star_id",
+) -> DataFrame:
+    """The status ledger of id-range queries: ``features`` is the
+    descriptor output (one row per star); ``queries`` the (query_id, lo,
+    hi) dimension; ``passed_ranges`` the CustomDecider boundary predicate
+    deciding ``passed``.
+
+    The attribution is a broadcast theta join on the range condition —
+    the big side streams through untouched (no shuffle); at 100 TB this
+    is the only viable shape (queries are few, stars are not).
+    """
+    q = F.broadcast(queries)
+    cond = (F.col(key) >= F.col("lo")) & (F.col(key) <= F.col("hi"))
+    found = features.join(q, cond, "inner").select(
+        "query_id", *features.columns, range_predicate(passed_ranges).alias("passed")
+    )
+    return status_ledger(found, queries, key)
 
 
 def _min_query_id(staging: str) -> int | None:
@@ -146,7 +160,7 @@ def write_results(
     ledger_path: str,
     passed_path: str | None = None,
 ) -> None:
-    """The one commit path of batch and stream: the status ledger
+    """The one commit path of batch, stream and CLI: the status ledger
     (uploadStatus, stars_searcher.py:188-215) and the passed-star store
     (matchOccured, :46-61 — parquet instead of per-star FITS).
 

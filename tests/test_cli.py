@@ -205,6 +205,10 @@ def test_filter_stars_overlapping_queries(project):
         if p == "True":
             passed_by_q[q].add(s)
     assert passed_by_q["0"] == passed_by_q["1"]
+    # coords.dat: one line per found star, not one per (query, star)
+    coords = open(os.path.join(run_dir, "coords.dat")).read().splitlines()[1:]
+    coord_ids = [l.split("\t")[0] for l in coords]
+    assert sorted(coord_ids) == sorted(stars)
     # single-copy dat files: same content as the source curve
     lcs_dir = os.path.join(run_dir, "lcs")
     a_star = sorted(passed_by_q["0"])[0]
@@ -215,6 +219,84 @@ def test_filter_stars_overlapping_queries(project):
         .splitlines()
     )
     assert len(out_lines) == len(src_lines)
+
+
+def _filter_run(project, run, qname):
+    """Run ``filter_stars`` with SmokeFilter; return its run directory."""
+    rc = cli.main(
+        ["filter_stars", "-r", run, "-q", qname, "-d", "FileManager",
+         "-f", "SmokeFilter"],
+        path=project,
+    )
+    assert rc == 0
+    return os.path.join(project, "query_results", run)
+
+
+@pytest.fixture(scope="module")
+def empty_query(project):
+    """A query file whose second row names a folder holding one
+    comment-only ``.dat``: that query yields no observations."""
+    empty_dir = os.path.join(project, "inp_lcs", "empty")
+    os.makedirs(empty_dir, exist_ok=True)
+    with open(os.path.join(empty_dir, "nothing.dat"), "w") as f:
+        f.write("# time mag err\n")
+    with open(os.path.join(project, "queries", "with_empty.txt"), "w") as f:
+        f.write("#path\nsearched\nempty\n")
+    return "with_empty.txt"
+
+
+@pytest.mark.usefixtures("smoke_filter")
+def test_filter_stars_empty_query_gets_row(project, empty_query):
+    """A query that found no star is logged as found=false with an empty
+    star_id field, like the searcher's no-match stub."""
+    run_dir = _filter_run(project, "run_empty", empty_query)
+    status = open(os.path.join(run_dir, "query_status.txt")).read().splitlines()
+    assert status[-1] == "1;;False;False"
+    assert len(status) > 2 and all(l.startswith("0;") for l in status[1:-1])
+
+
+@pytest.mark.usefixtures("smoke_filter")
+def test_filter_stars_crash_replays_to_clean_run(
+    project, empty_query, spark, monkeypatch
+):
+    """Crash the commit at the ledger publish (after the curves and the
+    passed store are written) and rerun the same run: every artifact must
+    equal a clean run's, and the published ledger must hold exactly the
+    rows of ``query_status.txt``."""
+    from lightcurvesclassifier_spark.operators import searcher
+
+    clean = _filter_run(project, "run_clean", empty_query)
+    publish, calls = searcher._publish, []
+
+    def crashing(*args):
+        calls.append(args)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash")
+        publish(*args)
+
+    monkeypatch.setattr(searcher, "_publish", crashing)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _filter_run(project, "runC", empty_query)
+    monkeypatch.setattr(searcher, "_publish", publish)
+    run_dir = _filter_run(project, "runC", empty_query)
+
+    def read(d, name):
+        return open(os.path.join(d, name)).read()
+
+    for name in ("query_status.txt", "coords.dat"):
+        assert read(run_dir, name) == read(clean, name)
+    lcs = sorted(os.listdir(os.path.join(run_dir, "lcs")))
+    assert lcs and lcs == sorted(os.listdir(os.path.join(clean, "lcs")))
+
+    body = read(run_dir, "query_status.txt").splitlines()[1:]
+    ledger = spark.read.parquet(os.path.join(run_dir, "ledger")).collect()
+    rows = [
+        f"{r.query_id};{'' if r.star_id is None else r.star_id};{r.found};{r.passed}"
+        for r in ledger
+    ]
+    assert sorted(rows) == sorted(body)
+    passed = spark.read.parquet(os.path.join(run_dir, "passed"))
+    assert passed.count() == sum(l.endswith(";True") for l in body)
 
 
 def test_query_file_custom_delimiter_round_trip(project, spark):
