@@ -1884,18 +1884,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       searcher (searcher.status_ledger); they displace curve_stats_band
       and hll_distinct, whose families keep curve_stats and
       hll_registers in-window.
-    * 18-50: THIRTY-THREE of the forty r7-fresh rows, so only SEVEN
+    * 18-19: neardup_degrees, lsh_recall — restructured in r11 and
+      rotated in so the driver value-checks the rewritten plans; they
+      displace bloom_probe_fast and dedup_simhash, whose families keep
+      bloom_bits and dedup_minhash in-window.
+    * 20-50: THIRTY-ONE of the forty r7-fresh rows, so only NINE
       queries' freshest driver rows predate r8 (ekvi_paa_exact,
       abbe_filter, embedding_profile, dq_audit, revenue_cube — displaced
-      by the new queries — plus curve_stats_band and hll_distinct; each
-      family keeps a sibling in-window and all seven are value-exact
-      locally every session). r10 plan-edited queries that are r8/r9-fresh
+      by the new queries — plus curve_stats_band, hll_distinct,
+      bloom_probe_fast and dedup_simhash; each family keeps a sibling
+      in-window and all nine are value-exact locally every session).
+      Other r10 plan-edited queries that are r8/r9-fresh
       (gopher_quality's null-guard, the stratified-split fusion,
-      lsh_recall's shared shingle leg, batched bpe_learn) stay
-      OUTSIDE the window and lean on tests/test_oracle_parity.py's
-      every-session value-exact sweep instead.
-    * 51+: curve_stats_band, hll_distinct, embedding_profile, dq_audit,
-      revenue_cube, ekvi_paa_exact, abbe_filter, then r8-fresh rows,
+      batched bpe_learn) stay OUTSIDE the window and lean on
+      tests/test_oracle_parity.py's every-session value-exact sweep
+      instead.
+    * 51+: bloom_probe_fast, dedup_simhash, curve_stats_band,
+      hll_distinct, embedding_profile, dq_audit, revenue_cube,
+      ekvi_paa_exact, abbe_filter, then r8-fresh rows,
       then r9-fresh rows (newest evidence last), re-verified every
       session by tests/test_oracle_parity.py.
     Every entry carries a full DuckDB oracle — including the
@@ -1934,14 +1940,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # lcc filter_stars shares with the searcher
         "systematic_search": q_systematic_search,
         "stars_filter_pipeline": q_stars_filter_pipeline,
-        # 18-50: thirty-three of the forty r7-fresh rows — oldest
+        # 18-19: the r11-restructured near-dup degree and LSH recall
+        # rows, never driver-checked since their rewrite
+        "neardup_degrees": q_neardup_degrees,
+        "lsh_recall": q_lsh_recall,
+        # 20-50: thirty-one of the forty r7-fresh rows — oldest
         # remaining evidence
         "bloom_bits": q_bloom_bits,
-        "bloom_probe_fast": q_bloom_probe_fast,
         "dedup_minhash": q_dedup_minhash,
         "decontamination": q_decontamination,
         "phase_fold": q_phase_fold,
-        "dedup_simhash": q_dedup_simhash,
         "curve_stats": q_curve_stats,
         "abbe_value": q_abbe_value,
         "hll_registers": q_hll_registers,
@@ -1969,14 +1977,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "length_buckets": q_length_buckets,
         "domain_stats": q_domain_stats,
         "stetson_variability": q_stetson_variability,
-        # --- 51+: curve_stats_band/hll_distinct (pushed out by the two
-        # search-ledger rows; r7-green with in-window family siblings),
+        # --- 51+: bloom_probe_fast/dedup_simhash (pushed out by
+        # neardup_degrees/lsh_recall; bloom_bits and dedup_minhash keep
+        # their families in-window), curve_stats_band/hll_distinct
+        # (pushed out by the two search-ledger rows; r7-green with
+        # in-window family siblings),
         # embedding_profile/dq_audit/revenue_cube (pushed out
         # by the three late-r10 queries; all r7-green with in-window
         # family siblings), ekvi_paa_exact (displaced by
         # ivf_recall_curve; r7 driver row + every-session local value
         # pin), then r8-fresh rows, re-verified every session by
         # tests/test_oracle_parity.py (rotated out for window room) ---
+        "bloom_probe_fast": q_bloom_probe_fast,
+        "dedup_simhash": q_dedup_simhash,
         "curve_stats_band": q_curve_stats_band,
         "hll_distinct": q_hll_distinct,
         "embedding_profile": q_embedding_profile,
@@ -1989,7 +2002,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_canonical": q_dedup_canonical,
         "embedding_dedup_clusters": q_embedding_dedup_clusters,
         "dedup_ngram": q_dedup_ngram,
-        "neardup_degrees": q_neardup_degrees,
         "embedding_neardup": q_embedding_neardup,
         "comp_hist_shape": q_comp_hist_shape,
         "comp_variogram_shape": q_comp_variogram_shape,
@@ -2046,7 +2058,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c4_filter": q_c4_filter,
         "dsir_weights": q_dsir_weights,
         "ccnet_ppl_buckets": q_ccnet_ppl_buckets,
-        "lsh_recall": q_lsh_recall,
         "bpe_fertility": q_bpe_fertility,
         "url_blocklist": q_url_blocklist,
         "winnow_pairs": q_winnow_pairs,

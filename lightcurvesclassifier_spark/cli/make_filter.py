@@ -2,14 +2,13 @@
 
 Mirrors lcc/bin/make_filter.py:34-390: load searched + contamination
 samples, expand the tuned-parameter combinations from the status file,
-train a StarsFilter per combo on a seeded train/test split, keep the
-best by precision, and write the filter + stats/ROC/coords artifacts
-under ``FILTERS/<name>/``.
+hand them to the one grid search, ``ml.params_estim.ParamsEstimator``
+(split by star id, seed 42, best by precision), and write the winning
+filter + stats/ROC/coords artifacts under ``FILTERS/<name>/``.
 
-Spark shape: the combo loop is the driver-side outer dimension (as the
-reference's process pool); every fit/score inside it is a distributed
-DataFrame job. The train/test split is a seeded randomSplit on the
-distinct star ids so each star's whole curve lands on one side.
+This module keeps only argument parsing, sample loading, the per-combo
+``build`` (featurize with the combo's descriptor params, construct the
+deciders with its decider params) and the artifact writes.
 """
 
 from __future__ import annotations
@@ -17,9 +16,8 @@ from __future__ import annotations
 import argparse
 import os
 
-from pyspark.sql import functions as F
-
 from ..ml.deciders import make_decider
+from ..ml.params_estim import ParamsEstimator
 from ..ml.stars_filter import StarsFilter
 from ..ml import persistence, stats_artifacts
 from ..sources import files
@@ -67,6 +65,15 @@ def main(project_settings, argv: list[str] | None = None) -> int:
 
     if not opts.descriptors or not opts.deciders:
         raise ValueError("at least one descriptor (-f) and decider (-d) required")
+    # both folds must be non-empty: with no test stars every precision
+    # is None and the first combo wins unranked; with no train stars
+    # the deciders learn nothing
+    split = opts.split_ratio.split(":")
+    if len(split) != 2 or not all(x.isdecimal() and int(x) > 0 for x in split):
+        p.error(
+            f"-p takes two positive integers TRAIN:TEST, not {opts.split_ratio!r}"
+        )
+    train, test = (int(x) for x in split)
 
     from ..session import get_spark
 
@@ -86,50 +93,19 @@ def main(project_settings, argv: list[str] | None = None) -> int:
     if not combos:
         raise ValueError("Empty parameters file")
 
-    ratios = [int(x) for x in opts.split_ratio.split(":")]
-    train_frac = ratios[0] / sum(ratios[:2])
-
-    def split_ids(obs):
-        ids = obs.select("star_id").distinct()
-        return ids.randomSplit([train_frac, 1 - train_frac], seed=42)
-
-    s_train_ids, s_test_ids = split_ids(searched)
-    o_train_ids, o_test_ids = split_ids(others)
-
-    results, best = [], None
-    for combo in combos:
+    def build(combo):
         feats_s, cols = descr_registry.featurize(searched, opts.descriptors, combo)
         feats_o, _ = descr_registry.featurize(others, opts.descriptors, combo)
-        # decider params from the combo file reach the constructor too
-        # ('NeuronDecider:alpha' rows were silently discarded before —
-        # every combo trained an identical filter)
-        filt = StarsFilter(
-            [make_decider(d, **combo.get(d, {})) for d in opts.deciders], cols
-        )
-        filt.learn(
-            feats_s.join(s_train_ids, "star_id"),
-            feats_o.join(o_train_ids, "star_id"),
-        )
-        s_test = feats_s.join(s_test_ids, "star_id").cache()
-        o_test = feats_o.join(o_test_ids, "star_id").cache()
-        stats = dict(filt.statistics(s_test, o_test))
-        stats["params"] = combo
-        results.append(stats)
-        # a zero-denominator fold yields precision None — rank it below
-        # every real score instead of raising on `None > float`
-        prec = stats["precision"]
-        prec = float("-inf") if prec is None else prec
-        if best is None or prec > best[0]:
-            if best is not None:
-                best[3].unpersist()
-                best[4].unpersist()
-            best = (prec, filt, combo, s_test, o_test, feats_s, feats_o)
-        else:
-            # losing combo: its cached test frames are no longer needed
-            s_test.unpersist()
-            o_test.unpersist()
+        # the combo's decider params (e.g. 'NeuronDecider:alpha') reach
+        # the constructors, so combos varying only them differ
+        deciders = [make_decider(d, **combo.get(d, {})) for d in opts.deciders]
+        return StarsFilter(deciders, cols), feats_s, feats_o
 
-    precision, filt, combo, s_test, o_test, feats_s, feats_o = best
+    best = ParamsEstimator(
+        searched, others, build, combos, train_ratio=train / (train + test)
+    ).fit()
+    filt, combo = best.filt, best.combo
+
     filt_name = opts.filt_name.rsplit(".", 1)[0] if "." in opts.filt_name else opts.filt_name
     filter_dir = os.path.join(project_settings.FILTERS, filt_name)
     os.makedirs(filter_dir, exist_ok=True)
@@ -146,20 +122,23 @@ def main(project_settings, argv: list[str] | None = None) -> int:
             {"descriptors": opts.descriptors, "params": combo}, f, indent=2
         )
 
-    roc = filt.roc(s_test, o_test, n_thresholds=30)
+    roc = filt.roc(best.s_test, best.o_test, n_thresholds=30)
     roc_stats = [
         {"threshold": thr, "false_positive_rate": fpr, "true_positive_rate": tpr}
         for thr, fpr, tpr in roc
     ]
     stats_artifacts.save_roc_file(roc_stats, filter_dir, file_name="ROC_data.dat")
     stats_artifacts.save_stats(
-        [{k: v for k, v in r.items() if k != "params"} for r in results],
+        [{k: v for k, v in r.items() if k != "params"} for r in best.stats],
         filter_dir,
         file_name="stats.dat",
     )
 
     # searched/contam coords — the tuned feature vectors (make_filter.py:374-379)
-    for df, fname in ((feats_s, "searched_coords.dat"), (feats_o, "contam_coords.dat")):
+    for df, fname in (
+        (best.feats_s, "searched_coords.dat"),
+        (best.feats_o, "contam_coords.dat"),
+    ):
         pdf = df.select(*filt.feature_cols).toPandas()
         with open(os.path.join(filter_dir, fname), "w") as f:
             f.write("# " + "\t".join(filt.feature_cols) + "\n")
@@ -167,7 +146,7 @@ def main(project_settings, argv: list[str] | None = None) -> int:
                 f.write("\t".join(f"{v:.3f}" for v in row.to_numpy()) + "\n")
 
     print(
-        f"Done. Best combo {combo} (precision {precision}); "
+        f"Done. Best combo {combo} (precision {best.score}); "
         f"filter saved to {filter_dir}"
     )
     return 0

@@ -100,26 +100,31 @@ class StarsFilter:
         out = combine_probabilities(out, prob_cols, meth)
         return out.filter(F.col("prob") >= F.lit(self.mean_threshold()))
 
+    def _positive_counts(self, df: DataFrame, thresholds) -> tuple[int, list[int]]:
+        """Row count and, per threshold, how many rows' mean-combined
+        probability reaches it — one aggregate over ``df``."""
+        prob_cols = [self._prob_col(d, i) for i, d in enumerate(self.deciders)]
+        out = combine_probabilities(self.predictions(df), prob_cols, "mean")
+        row = out.agg(
+            F.count("*").alias("n"),
+            *(
+                # coalesce: sum over an empty sample collects as None
+                F.coalesce(
+                    F.sum((F.col("prob") >= F.lit(float(t))).cast("long")),
+                    F.lit(0),
+                ).alias(f"t{i}")
+                for i, t in enumerate(thresholds)
+            ),
+        ).collect()[0]
+        return row["n"], [row[f"t{i}"] for i in range(len(thresholds))]
+
     # base_decider.py:133-197 over the ensemble, one aggregate per call
     def statistics(
         self, searched: DataFrame, others: DataFrame, threshold: float | None = None
     ) -> OrderedDict:
         thr = threshold if threshold is not None else self.mean_threshold()
-        prob_cols = [self._prob_col(d, i) for i, d in enumerate(self.deciders)]
-
-        def _counts(df):
-            out = combine_probabilities(self.predictions(df), prob_cols, "mean")
-            row = out.agg(
-                F.count("*").alias("n"),
-                # coalesce: sum over an empty sample collects as None
-                F.coalesce(
-                    F.sum((F.col("prob") >= F.lit(thr)).cast("long")), F.lit(0)
-                ).alias("pos"),
-            ).collect()[0]
-            return row["n"], row["pos"]
-
-        right_num, true_pos = _counts(searched)
-        wrong_num, false_pos = _counts(others)
+        right_num, (true_pos,) = self._positive_counts(searched, [thr])
+        wrong_num, (false_pos,) = self._positive_counts(others, [thr])
         true_neg = wrong_num - false_pos
         false_neg = right_num - true_pos
 
@@ -159,22 +164,8 @@ class StarsFilter:
         import numpy as np
 
         thresholds = np.linspace(0.01, 0.99, n_thresholds)
-        prob_cols = [self._prob_col(d, i) for i, d in enumerate(self.deciders)]
-
-        def _pos_counts(df):
-            out = combine_probabilities(self.predictions(df), prob_cols, "mean")
-            aggs = [F.count("*").alias("n")] + [
-                F.coalesce(
-                    F.sum((F.col("prob") >= F.lit(float(t))).cast("long")),
-                    F.lit(0),
-                ).alias(f"t{i}")
-                for i, t in enumerate(thresholds)
-            ]
-            row = out.agg(*aggs).collect()[0]
-            return row["n"], [row[f"t{i}"] for i in range(len(thresholds))]
-
-        n_s, tp = _pos_counts(searched)
-        n_c, fp = _pos_counts(others)
+        n_s, tp = self._positive_counts(searched, thresholds)
+        n_c, fp = self._positive_counts(others, thresholds)
         # empty sample → undefined rates (None), matching statistics()
         return [
             (

@@ -149,6 +149,65 @@ def test_make_filter_then_filter_stars(project, smoke_filter):
     assert os.path.isfile(os.path.join(run_dir, "coords.dat"))
 
 
+@pytest.mark.parametrize(
+    "ratio", ["0:0", "1", "1:0", "0:1", "3:1:1", "a:1", "2:-1", "²:1"]
+)
+def test_make_filter_rejects_bad_split_before_spark(project, monkeypatch, ratio):
+    """-p must be two positive integers: '0:0' divided by zero, '1' and
+    '1:0' gave an empty test fold (every precision None, the first combo
+    saved silently), '0:1' trained on nothing. Rejected while parsing,
+    before a Spark session starts."""
+    from lightcurvesclassifier_spark import session
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark started before -p was validated")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        cli.main(
+            ["make_filter", "-i", "tune.txt", "-n", "BadSplit",
+             "-f", "AbbeValueDescr", "-s", "searched", "-c", "contam",
+             "-d", "GaussianNBDec", "-p", ratio],
+            path=project,
+        )
+    assert exc.value.code == 2
+
+
+def test_make_filter_combo_decider_params_reach_saved_filter(project):
+    """A tuning file varying a decider parameter trains one filter per
+    row; the saved filter and descr_params.json are the row with the
+    highest precision (the first such row on a tie)."""
+    import json
+
+    with open(os.path.join(project, "tun_params", "thr.txt"), "w") as f:
+        # threshold 0.0 passes every star: precision is the searched share
+        f.write("#GaussianNBDec:threshold\n0.0\n0.5\n")
+    assert cli.main(
+        ["make_filter", "-i", "thr.txt", "-n", "ThrFilter",
+         "-f", "AbbeValueDescr", "-s", "searched", "-c", "contam",
+         "-d", "GaussianNBDec"],
+        path=project,
+    ) == 0
+    fdir = os.path.join(project, "filters", "ThrFilter")
+    lines = open(os.path.join(fdir, "stats.dat")).read().splitlines()
+    header = lines[0].lstrip("#").split("\t")
+    precisions = [
+        float(row.split("\t")[header.index("precision")]) for row in lines[1:]
+    ]
+    assert len(precisions) == 2  # one row per combo
+    threshold = [0.0, 0.5][precisions.index(max(precisions))]
+    assert threshold == 0.5  # the all-pass row loses
+    manifest = json.load(
+        open(os.path.join(fdir, "ThrFilter.filter", "filter.json"))
+    )
+    assert [d["threshold"] for d in manifest["deciders"]] == [threshold]
+    descr = json.load(open(os.path.join(fdir, "descr_params.json")))
+    assert descr == {
+        "descriptors": ["AbbeValueDescr"],
+        "params": {"GaussianNBDec": {"threshold": threshold}},
+    }
+
+
 def test_unknown_command_errors(project, capsys):
     assert cli.main(["bogus"], path=project) == 2
 

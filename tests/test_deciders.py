@@ -114,25 +114,54 @@ def test_roc_monotone(spark, populations):
     assert all(a >= b - 1e-12 for a, b in zip(tprs, tprs[1:]))
 
 
-def test_params_estimator(spark, populations):
-    """2-point grid fits and returns the best combo
-    (mirrors test_params_estim.py:19-60)."""
-    searched, others = populations
+@pytest.fixture(scope="module")
+def id_populations(populations):
+    """The populations with a ``star_id`` — ParamsEstimator splits by
+    star id."""
+    return tuple(
+        df.withColumn("star_id", F.monotonically_increasing_id()).cache()
+        for df in populations
+    )
+
+
+def _estimator(id_populations, deciders, combos):
+    searched, others = id_populations
 
     def build(combo):
-        return StarsFilter([make_decider(combo["decider"])], FEATURES)
+        return StarsFilter(deciders(combo), FEATURES), searched, others
 
-    est = ParamsEstimator(
-        searched,
-        others,
-        build,
-        combos=[{"decider": "GaussianNBDec"}, {"decider": "TreeDec"}],
+    return ParamsEstimator(searched, others, build, combos=combos)
+
+
+def test_params_estimator(spark, id_populations):
+    """2-point grid fits and returns the best combo
+    (mirrors test_params_estim.py:19-60)."""
+    est = _estimator(
+        id_populations,
+        lambda combo: [make_decider(combo["decider"])],
+        [{"decider": "GaussianNBDec"}, {"decider": "TreeDec"}],
     )
-    best_filter, best_combo, results = est.fit()
+    best_filter, best_combo, _, results, *_ = est.fit()
     assert best_filter.learned
     assert len(results) == 2
     assert best_combo["decider"] in ("GaussianNBDec", "TreeDec")
     assert all("precision" in r for r in results)
+
+
+def test_params_estimator_ranks_none_precision_last(spark, id_populations):
+    """A combo no test star passes has precision None; it ranks below a
+    later combo with a real score instead of winning as the first."""
+    nothing = {"f0": (100.0, None)}  # the box no star falls in
+    est = _estimator(
+        id_populations,
+        lambda combo: [make_decider("CustomDecider", ranges=combo["ranges"])],
+        [{"ranges": nothing}, {"ranges": {"f0": (1.0, None)}}],
+    )
+    best = est.fit()
+    assert best.stats[0]["precision"] is None
+    assert best.stats[1]["precision"] > 0.9
+    assert best.combo["ranges"] != nothing
+    assert best.score == best.stats[1]["precision"]
 
 
 def test_stars_filter_pipeline_query_deterministic(spark):
