@@ -1884,24 +1884,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       searcher (searcher.status_ledger); they displace curve_stats_band
       and hll_distinct, whose families keep curve_stats and
       hll_registers in-window.
-    * 18-19: neardup_degrees, lsh_recall — restructured in r11 and
+    * 18: lda_holdout — rotated in from the tail because the decider
+      code it runs moved into the shared NumpyDecider base; it
+      displaces lang_quantiles, whose quantile-sketch family keeps
+      score_quantiles in-window.
+    * 19-20: neardup_degrees, lsh_recall — restructured in r11 and
       rotated in so the driver value-checks the rewritten plans; they
       displace bloom_probe_fast and dedup_simhash, whose families keep
       bloom_bits and dedup_minhash in-window.
-    * 20-50: THIRTY-ONE of the forty r7-fresh rows, so only NINE
-      queries' freshest driver rows predate r8 (ekvi_paa_exact,
-      abbe_filter, embedding_profile, dq_audit, revenue_cube — displaced
-      by the new queries — plus curve_stats_band, hll_distinct,
-      bloom_probe_fast and dedup_simhash; each family keeps a sibling
-      in-window and all nine are value-exact locally every session).
+    * 21-50: THIRTY of the forty r7-fresh rows, so only TEN queries'
+      freshest driver rows predate r8 (ekvi_paa_exact, abbe_filter,
+      embedding_profile, dq_audit, revenue_cube — displaced by the new
+      queries — plus curve_stats_band, hll_distinct, bloom_probe_fast,
+      dedup_simhash and lang_quantiles; each family keeps a sibling
+      in-window and all ten are value-exact locally every session).
       Other r10 plan-edited queries that are r8/r9-fresh
       (gopher_quality's null-guard, the stratified-split fusion,
       batched bpe_learn) stay OUTSIDE the window and lean on
       tests/test_oracle_parity.py's every-session value-exact sweep
       instead.
-    * 51+: bloom_probe_fast, dedup_simhash, curve_stats_band,
-      hll_distinct, embedding_profile, dq_audit, revenue_cube,
-      ekvi_paa_exact, abbe_filter, then r8-fresh rows,
+    * 51+: lang_quantiles, bloom_probe_fast, dedup_simhash,
+      curve_stats_band, hll_distinct, embedding_profile, dq_audit,
+      revenue_cube, ekvi_paa_exact, abbe_filter, then r8-fresh rows,
       then r9-fresh rows (newest evidence last), re-verified every
       session by tests/test_oracle_parity.py.
     Every entry carries a full DuckDB oracle — including the
@@ -1940,11 +1944,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # lcc filter_stars shares with the searcher
         "systematic_search": q_systematic_search,
         "stars_filter_pipeline": q_stars_filter_pipeline,
-        # 18-19: the r11-restructured near-dup degree and LSH recall
+        # 18: the held-out LDA evaluation, whose decider code moved into
+        # the NumpyDecider base
+        "lda_holdout": q_lda_holdout,
+        # 19-20: the r11-restructured near-dup degree and LSH recall
         # rows, never driver-checked since their rewrite
         "neardup_degrees": q_neardup_degrees,
         "lsh_recall": q_lsh_recall,
-        # 20-50: thirty-one of the forty r7-fresh rows — oldest
+        # 21-50: thirty of the forty r7-fresh rows — oldest
         # remaining evidence
         "bloom_bits": q_bloom_bits,
         "dedup_minhash": q_dedup_minhash,
@@ -1971,13 +1978,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quantize_embeddings": q_quantize_embeddings,
         "weighted_sample": q_weighted_sample,
         "corpus_diff": q_corpus_diff,
-        "lang_quantiles": q_lang_quantiles,
         "fuzzy_match": q_fuzzy_match,
         "string_profile": q_string_profile,
         "length_buckets": q_length_buckets,
         "domain_stats": q_domain_stats,
         "stetson_variability": q_stetson_variability,
-        # --- 51+: bloom_probe_fast/dedup_simhash (pushed out by
+        # --- 51+: lang_quantiles (pushed out by lda_holdout;
+        # score_quantiles keeps its family in-window),
+        # bloom_probe_fast/dedup_simhash (pushed out by
         # neardup_degrees/lsh_recall; bloom_bits and dedup_minhash keep
         # their families in-window), curve_stats_band/hll_distinct
         # (pushed out by the two search-ledger rows; r7-green with
@@ -1988,6 +1996,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ivf_recall_curve; r7 driver row + every-session local value
         # pin), then r8-fresh rows, re-verified every session by
         # tests/test_oracle_parity.py (rotated out for window room) ---
+        "lang_quantiles": q_lang_quantiles,
         "bloom_probe_fast": q_bloom_probe_fast,
         "dedup_simhash": q_dedup_simhash,
         "curve_stats_band": q_curve_stats_band,
@@ -2023,7 +2032,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lag_correlation": q_lag_correlation,
         "churned_customers": q_churned_customers,
         "line_scrub": q_line_scrub,
-        "lda_holdout": q_lda_holdout,
         "promo_revenue": q_promo_revenue,
         "embedding_lsh_topk": q_embedding_lsh_topk,
         "skew_kurtosis": q_skew_kurtosis,

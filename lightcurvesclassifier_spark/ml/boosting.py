@@ -10,21 +10,18 @@ their definitions (SAMME.R: Hastie, Rosset, Zhu & Zou 2009; extremely
 randomized trees: Geurts, Ernst & Wehenkel 2006) rather than substituting
 a different estimator family (the GBT/RF surrogates these replace).
 
-Spark split mirrors ``GaussianDecider``: the fit runs driver-side on the
+Both are ``NumpyDecider`` subclasses: the fit runs driver-side on the
 collected train sample (small by the reference's contract — it trains on
-tens-to-thousands of stars in a Python list), scoring is a
-broadcast-parameter vectorized pandas UDF so the 100 TB scan stays fully
-distributed with no per-row Python.
+tens-to-thousands of stars in a Python list), and the base's
+broadcast-parameter pandas UDF scores with ``proba`` so the 100 TB scan
+stays fully distributed with no per-row Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F, types as T
-
-from .deciders import BaseDecider, DEFAULT_THRESHOLD, collect_features
+from .deciders import DEFAULT_THRESHOLD, NumpyDecider, stack_samples
 
 _CLIP = np.finfo(np.float64).eps  # sklearn's log-proba clip
 
@@ -72,7 +69,7 @@ def _stump_proba(stump, x: np.ndarray) -> np.ndarray:
     return np.column_stack([1.0 - p1, p1])
 
 
-class AdaBoostDecider(BaseDecider):
+class AdaBoostDecider(NumpyDecider):
     """SAMME.R boosting over gini stumps — the published algorithm the
     reference's ``AdaBoostDec`` runs (sklearn defaults: 50 estimators,
     learning_rate 1.0, depth-1 base trees).
@@ -87,13 +84,9 @@ class AdaBoostDecider(BaseDecider):
         self.n_estimators = int(n_estimators)
         self.learning_rate = float(learning_rate)
         self.threshold = threshold
-        self.stumps: list | None = None
 
-    def learn(self, searched, others, feature_cols):
-        x1 = collect_features(searched, feature_cols)
-        x0 = collect_features(others, feature_cols)
-        x = np.vstack([x1, x0])
-        y = np.concatenate([np.ones(len(x1)), np.zeros(len(x0))])
+    def fit(self, x1, x0):
+        x, y = stack_samples(x1, x0)
         n = len(x)
         w = np.full(n, 1.0 / n)
         y_coded = np.where(y == 1, 1.0, -1.0)  # K=2: {-1/(K-1), 1}
@@ -110,32 +103,19 @@ class AdaBoostDecider(BaseDecider):
             if not np.isfinite(s) or s <= 0:
                 break
             w /= s
-        self.stumps = stumps
-        return self
+        return stumps
 
-    def evaluate(self, df, feature_cols, out_col="prob"):
-        stumps = list(self.stumps)
+    def proba(self, x):
         lr = self.learning_rate
-
-        @F.pandas_udf(T.DoubleType())
-        def score(arr: pd.Series) -> pd.Series:
-            x = np.vstack(arr.to_numpy())
-            dec = np.zeros(len(x))
-            for stump in stumps:
-                logp = np.log(np.clip(_stump_proba(stump, x), _CLIP, None))
-                # (K-1)*(logp_k - mean logp): class-1 minus class-0 halves
-                dec += lr * 0.5 * (logp[:, 1] - logp[:, 0])
-            # normalize by the summed estimator weights, then the binary
-            # softmax of the symmetric per-class decision (±dec)
-            dec /= lr * len(stumps)
-            prob = 1.0 / (1.0 + np.exp(-2.0 * dec))
-            return pd.Series(np.nan_to_num(prob, nan=0.0))
-
-        # asNondeterministic: see GaussianDecider.evaluate — downstream
-        # prob filters would duplicate the Python evaluation otherwise
-        return df.withColumn(
-            out_col, score.asNondeterministic()(F.array(*feature_cols))
-        )
+        dec = np.zeros(len(x))
+        for stump in self.params:
+            logp = np.log(np.clip(_stump_proba(stump, x), _CLIP, None))
+            # (K-1)*(logp_k - mean logp): class-1 minus class-0 halves
+            dec += lr * 0.5 * (logp[:, 1] - logp[:, 0])
+        # normalize by the summed estimator weights, then the binary
+        # softmax of the symmetric per-class decision (±dec)
+        dec /= lr * len(self.params)
+        return 1.0 / (1.0 + np.exp(-2.0 * dec))
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +192,7 @@ def _tree_proba(node, x: np.ndarray, idx, out):
         stack.append((l, ix[mask]))
 
 
-class ExtraTreesDecider(BaseDecider):
+class ExtraTreesDecider(NumpyDecider):
     """Extremely randomized trees — the published algorithm behind the
     reference's ``ExtraTreesDec`` (sklearn defaults: 10 trees, gini,
     no bootstrap, ``max_features=sqrt(d)``, grow to purity);
@@ -224,36 +204,20 @@ class ExtraTreesDecider(BaseDecider):
         self.n_estimators = int(n_estimators)
         self.seed = seed
         self.threshold = threshold
-        self.trees: list | None = None
 
-    def learn(self, searched, others, feature_cols):
-        x1 = collect_features(searched, feature_cols)
-        x0 = collect_features(others, feature_cols)
-        x = np.vstack([x1, x0])
-        y = np.concatenate([np.ones(len(x1)), np.zeros(len(x0))])
+    def fit(self, x1, x0):
+        x, y = stack_samples(x1, x0)
         rng = np.random.default_rng(self.seed)
         max_features = max(1, int(np.sqrt(x.shape[1])))
-        self.trees = [
+        return [
             _build_extra_tree(x, y, np.arange(len(x)), rng, max_features)
             for _ in range(self.n_estimators)
         ]
-        return self
 
-    def evaluate(self, df, feature_cols, out_col="prob"):
-        trees = list(self.trees)
-
-        @F.pandas_udf(T.DoubleType())
-        def score(arr: pd.Series) -> pd.Series:
-            x = np.vstack(arr.to_numpy())
-            acc = np.zeros(len(x))
-            buf = np.empty(len(x))
-            for tree in trees:
-                _tree_proba(tree, x, np.arange(len(x)), buf)
-                acc += buf
-            return pd.Series(np.nan_to_num(acc / len(trees), nan=0.0))
-
-        # asNondeterministic: see GaussianDecider.evaluate — downstream
-        # prob filters would duplicate the Python evaluation otherwise
-        return df.withColumn(
-            out_col, score.asNondeterministic()(F.array(*feature_cols))
-        )
+    def proba(self, x):
+        acc = np.zeros(len(x))
+        buf = np.empty(len(x))
+        for tree in self.params:
+            _tree_proba(tree, x, np.arange(len(x)), buf)
+            acc += buf
+        return acc / len(self.params)

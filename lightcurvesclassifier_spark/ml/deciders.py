@@ -12,21 +12,22 @@ distributively*:
 - **MLlib-backed** deciders (trees, forests, GBT, logistic) train on
   the assembled train set (small — the reference trains on tens-to-
   thousands of stars) and score via ``model.transform`` — JVM-side.
-- **Closed-form Gaussian** deciders (LDA / QDA / GaussianNB) are fit
+- **Numpy-fit** deciders subclass ``NumpyDecider``: the fit runs
   driver-side with numpy on the collected train sample (tiny by
-  contract) and score through a broadcast-parameter vectorized pandas
-  UDF — the 100 TB path is the scoring scan, which is fully distributed.
-  (The container has no sklearn; these are the textbook closed forms of
-  the same estimators the reference uses —
-  lcc/stars_processing/deciders/supervised_deciders.py:12-49.)
-- **Exact boosting/bagging**: AdaBoostDec and ExtraTreesDec run the
-  published algorithms themselves (SAMME.R over gini stumps; extremely
-  randomized trees) fit driver-side — ``ml/boosting.py``.
-- **Exact SVC and NN** (were surrogates until round 2): SVCDec is an
-  SMO-trained RBF C-SVC with libsvm-style 5-fold Platt scaling
-  (``ml/svc.py``); NeuronDecider is the reference's Keras 2-layer
-  relu→sigmoid net trained with Adam in numpy (``ml/neural.py``) —
-  supervised_deciders.py:52-75, deciders/neuron_decider.py:11-155.
+  contract — the reference trains on tens-to-thousands of stars), and
+  scoring is one broadcast-parameter vectorized pandas UDF — the 100 TB
+  path is the scoring scan, which is fully distributed. Each subclass
+  gives only ``fit`` and ``proba``. (The container has no sklearn; these
+  are the published algorithms the reference uses, implemented from
+  their definitions — lcc/stars_processing/deciders/
+  supervised_deciders.py:12-219, deciders/neuron_decider.py:11-155.)
+  - ``GaussianDecider`` (LDA / QDA / GaussianNB): textbook closed forms.
+  - AdaBoostDec and ExtraTreesDec: SAMME.R over gini stumps; extremely
+    randomized trees — ``ml/boosting.py``.
+  - SVCDec: SMO-trained RBF C-SVC with libsvm-style 5-fold Platt
+    scaling (``ml/svc.py``); NeuronDecider: the reference's Keras
+    2-layer relu→sigmoid net trained with Adam in numpy
+    (``ml/neural.py``).
 
 Probabilities are NOT rounded here; the ensemble combine rounds to 2
 decimals exactly where the reference does
@@ -56,15 +57,38 @@ def _assemble(df: DataFrame, feature_cols: list[str]) -> DataFrame:
 
 
 def collect_features(df: DataFrame, feature_cols: list[str]) -> np.ndarray:
-    """Driver-side train-sample collect shared by every numpy-fit
-    decider: drop rows with missing features, densify. Raises on an
-    empty sample — silently fitting on nothing yields an all-NaN model
-    that scores every star 0.0 with no indication anything is wrong
+    """Driver-side train-sample collect for ``NumpyDecider.learn``: drop
+    rows with missing features, densify. Raises on an empty sample —
+    silently fitting on nothing yields an all-NaN model that scores
+    every star 0.0 with no indication anything is wrong
     (superv_base_decider fails loudly there too)."""
     x = df.select(*feature_cols).na.drop().toPandas().to_numpy(dtype=float)
     if not len(x):
         raise ValueError("Decider can't be learned on an empty sample")
     return x
+
+
+def stack_samples(x1: np.ndarray, x0: np.ndarray, negative: float = 0.0):
+    """One train matrix, searched rows first, and its labels: 1.0 for
+    the searched rows, ``negative`` for the others."""
+    y = np.concatenate([np.ones(len(x1)), np.full(len(x0), negative)])
+    return np.vstack([x1, x0]), y
+
+
+def _score_complete_rows(df, feature_cols, out_col, model, prob_of, missing):
+    """``model.transform`` over the rows with every feature present;
+    the other rows keep their row and get ``missing`` — the assembler's
+    handleInvalid='skip' would silently DROP them. ``prob_of(scored)``
+    picks the output column from the transformed frame."""
+    valid_pred = F.lit(True)
+    for c in feature_cols:
+        valid_pred = valid_pred & F.col(c).isNotNull() & ~F.isnan(c)
+    valid = df.filter(valid_pred)
+    invalid = df.filter(~F.coalesce(valid_pred, F.lit(False)))
+    scored = model.transform(_assemble(valid, feature_cols))
+    return scored.select(*df.columns, prob_of(scored).alias(out_col)).unionByName(
+        invalid.select(*df.columns, missing.alias(out_col))
+    )
 
 
 class BaseDecider(abc.ABC):
@@ -131,37 +155,76 @@ class MLlibDecider(BaseDecider):
 
     def evaluate(self, df, feature_cols, out_col="prob"):
         # rows with a missing feature score 0 like every other decider
-        # (superv_base_decider.py:93-100's NaN→0 rule) — the assembler's
-        # handleInvalid='skip' would silently DROP them from the output
-        valid_pred = F.lit(True)
-        for c in feature_cols:
-            valid_pred = valid_pred & F.col(c).isNotNull() & ~F.isnan(c)
-        valid = df.filter(valid_pred)
-        invalid = df.filter(~F.coalesce(valid_pred, F.lit(False)))
-        assembled = _assemble(valid, feature_cols)
-        scored = self.model.transform(assembled)
-        if self.hard_predict or "probability" not in scored.columns:
-            prob = F.col("prediction")
-        else:
-            from pyspark.ml.functions import vector_to_array
+        # (superv_base_decider.py:93-100's NaN→0 rule)
+        def prob_of(scored):
+            if self.hard_predict or "probability" not in scored.columns:
+                prob = F.col("prediction")
+            else:
+                from pyspark.ml.functions import vector_to_array
 
-            prob = vector_to_array(F.col("probability")).getItem(1)
-        # NaN probabilities → 0 (superv_base_decider.py:93-100)
-        prob = F.coalesce(F.nanvl(prob, F.lit(0.0)), F.lit(0.0))
-        keep = [c for c in df.columns]
-        return scored.select(*keep, prob.alias(out_col)).unionByName(
-            invalid.select(*keep, F.lit(0.0).alias(out_col))
+                prob = vector_to_array(F.col("probability")).getItem(1)
+            # NaN probabilities → 0 (superv_base_decider.py:93-100)
+            return F.coalesce(F.nanvl(prob, F.lit(0.0)), F.lit(0.0))
+
+        return _score_complete_rows(
+            df, feature_cols, out_col, self.model, prob_of, F.lit(0.0)
         )
 
 
-class GaussianDecider(BaseDecider):
-    """Closed-form Gaussian discriminant deciders: 'lda' (shared
-    covariance), 'qda' (per-class covariance), 'nb' (diagonal).
-
-    Driver-side fit on the collected train sample; scoring is a
+class NumpyDecider(BaseDecider):
+    """A decider fit driver-side with numpy: the superv_base_decider
+    analog. ``learn`` collects both train samples and keeps
+    ``self.params = self.fit(x1, x0)``; ``evaluate`` scores through one
     broadcast-parameter pandas UDF over ``array(feature_cols)`` —
-    Arrow-batched, no per-row Python.
-    """
+    Arrow-batched, no per-row Python. Subclasses give only ``fit`` and
+    ``proba``."""
+
+    params = None
+
+    @abc.abstractmethod
+    def fit(self, x1: np.ndarray, x0: np.ndarray):
+        """Model parameters from the searched (``x1``) and other
+        (``x0``) samples, as collected."""
+        ...
+
+    @abc.abstractmethod
+    def proba(self, x: np.ndarray) -> np.ndarray:
+        """Membership probability of each row of ``x`` under
+        ``self.params``."""
+        ...
+
+    def learn(self, searched, others, feature_cols):
+        self.params = self.fit(
+            collect_features(searched, feature_cols),
+            collect_features(others, feature_cols),
+        )
+        return self
+
+    def evaluate(self, df, feature_cols, out_col="prob"):
+        proba = self.proba
+
+        @F.pandas_udf(T.DoubleType())
+        def score(arr: pd.Series) -> pd.Series:
+            x = np.vstack(arr.to_numpy())  # a NULL feature arrives as NaN
+            # a row with a missing feature and a NaN probability score 0
+            # (superv_base_decider.py:93-100)
+            prob = np.where(np.isnan(x).any(axis=1), 0.0, proba(x))
+            return pd.Series(np.nan_to_num(prob, nan=0.0))
+
+        # asNondeterministic: filter_stars filters on this column, and
+        # the optimizer would otherwise push that filter below the
+        # projection by DUPLICATING the ArrowEvalPython node (two score
+        # evaluations per star — measured in stars_filter_pipeline's
+        # plan). The function is pure; the marking only pins a single
+        # evaluation.
+        return df.withColumn(
+            out_col, score.asNondeterministic()(F.array(*feature_cols))
+        )
+
+
+class GaussianDecider(NumpyDecider):
+    """Closed-form Gaussian discriminant deciders: 'lda' (shared
+    covariance), 'qda' (per-class covariance), 'nb' (diagonal)."""
 
     def __init__(self, kind: str = "lda", threshold: float = DEFAULT_THRESHOLD,
                  reg: float = 1e-6):
@@ -169,11 +232,8 @@ class GaussianDecider(BaseDecider):
         self.kind = kind
         self.threshold = threshold
         self.reg = reg
-        self.params: dict | None = None
 
-    def learn(self, searched, others, feature_cols):
-        x1 = collect_features(searched, feature_cols)
-        x0 = collect_features(others, feature_cols)
+    def fit(self, x1, x0):
         n1, n0 = len(x1), len(x0)
         priors = np.array([n0, n1], dtype=float) / (n0 + n1)
         means = [x0.mean(axis=0), x1.mean(axis=0)]
@@ -192,40 +252,23 @@ class GaussianDecider(BaseDecider):
             c1 = (x1 - means[1]).T @ (x1 - means[1])
             pooled = (c0 + c1) / (n0 + n1 - 2) + self.reg * eye
             covs = [pooled, pooled]
-        self.params = {
+        return {
             "priors": priors,
             "means": np.array(means),
             "inv": np.array([np.linalg.inv(c) for c in covs]),
             "logdet": np.array([np.linalg.slogdet(c)[1] for c in covs]),
         }
-        return self
 
-    def evaluate(self, df, feature_cols, out_col="prob"):
+    def proba(self, x):
         p = self.params
-        priors, means, inv, logdet = p["priors"], p["means"], p["inv"], p["logdet"]
-
-        @F.pandas_udf(T.DoubleType())
-        def score(arr: pd.Series) -> pd.Series:
-            x = np.vstack(arr.to_numpy())
-            ll = np.empty((len(x), 2))
-            for k in (0, 1):
-                diff = x - means[k]
-                maha = np.einsum("ij,jk,ik->i", diff, inv[k], diff)
-                ll[:, k] = -0.5 * (maha + logdet[k]) + np.log(priors[k])
-            m = ll.max(axis=1, keepdims=True)
-            w = np.exp(ll - m)
-            prob = w[:, 1] / w.sum(axis=1)
-            return pd.Series(np.nan_to_num(prob, nan=0.0))
-
-        # asNondeterministic: filter_stars filters on this column, and
-        # the optimizer would otherwise push that filter below the
-        # projection by DUPLICATING the ArrowEvalPython node (two score
-        # evaluations per star — measured in stars_filter_pipeline's
-        # plan). The function is pure; the marking only pins a single
-        # evaluation.
-        return df.withColumn(
-            out_col, score.asNondeterministic()(F.array(*feature_cols))
-        )
+        ll = np.empty((len(x), 2))
+        for k in (0, 1):
+            diff = x - p["means"][k]
+            maha = np.einsum("ij,jk,ik->i", diff, p["inv"][k], diff)
+            ll[:, k] = -0.5 * (maha + p["logdet"][k]) + np.log(p["priors"][k])
+        m = ll.max(axis=1, keepdims=True)
+        w = np.exp(ll - m)
+        return w[:, 1] / w.sum(axis=1)
 
 
 class CustomDecider(BaseDecider):
@@ -265,22 +308,12 @@ class KMeansDecider(BaseDecider):
         return self
 
     def evaluate(self, df, feature_cols, out_col="prob"):
-        # rows with a missing feature keep their row but score NULL —
-        # the assembler's handleInvalid='skip' would silently DROP them
-        # (the MLlibDecider pitfall), and the supervised NaN→0 rule
-        # cannot apply here because 0 is a real cluster id
-        valid_pred = F.lit(True)
-        for c in feature_cols:
-            valid_pred = valid_pred & F.col(c).isNotNull() & ~F.isnan(c)
-        valid = df.filter(valid_pred)
-        invalid = df.filter(~F.coalesce(valid_pred, F.lit(False)))
-        scored = self.model.transform(_assemble(valid, feature_cols))
-        return scored.select(
-            *df.columns, F.col("prediction").cast("double").alias(out_col)
-        ).unionByName(
-            invalid.select(
-                *df.columns, F.lit(None).cast("double").alias(out_col)
-            )
+        # rows with a missing feature score NULL: the supervised NaN→0
+        # rule cannot apply here because 0 is a real cluster id
+        return _score_complete_rows(
+            df, feature_cols, out_col, self.model,
+            lambda scored: F.col("prediction").cast("double"),
+            F.lit(None).cast("double"),
         )
 
 
@@ -323,7 +356,7 @@ def make_decider(name: str, **kw) -> BaseDecider:
             lambda: RandomForestClassifier(seed=seed), **kw
         ),
         "GradBoostDec": lambda: MLlibDecider(lambda: GBTClassifier(seed=seed), **kw),
-        # exact published algorithms, driver-numpy fit like GaussianDecider
+        # exact published algorithms, NumpyDecider subclasses
         # (ml/boosting.py — SAMME.R stumps / extremely randomized trees):
         "AdaBoostDec": lambda: _boosting().AdaBoostDecider(**kw),
         "ExtraTreesDec": lambda: _boosting().ExtraTreesDecider(seed=seed, **kw),

@@ -24,21 +24,18 @@ softmax/logistic top and L-BFGS — a different model family):
 Deterministic given the seed (pure numpy — unlike the TF original,
 whose results vary run-to-run without global seeding).
 
-Spark split mirrors ``ml/boosting.py``: the fit runs driver-side on the
-collected train sample (small by the reference's contract — it trains
-on a Python list of star coordinates), scoring is a broadcast-weights
-vectorized pandas UDF so the 100 TB scan stays fully distributed with
-no per-row Python.
+A ``NumpyDecider`` subclass: the fit runs driver-side on the collected
+train sample (small by the reference's contract — it trains on a Python
+list of star coordinates), and the base's broadcast-parameter pandas
+UDF scores with the weights so the 100 TB scan stays fully distributed
+with no per-row Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import functions as F, types as T
-
-from .deciders import BaseDecider
+from .deciders import NumpyDecider, stack_samples
 
 _EPS = 1e-7  # Keras backend epsilon (BCE clip)
 
@@ -114,7 +111,7 @@ def mlp_predict(params: dict, x: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-z2[:, 0]))
 
 
-class NeuronDecider(BaseDecider):
+class NeuronDecider(NumpyDecider):
     """The reference's NN decider, exact architecture and optimizer.
 
     ``threshold=0.5`` and ``hidden_neurons=2`` are the reference's own
@@ -128,30 +125,10 @@ class NeuronDecider(BaseDecider):
         self.hidden_neurons = int(hidden_neurons)
         self.max_epochs = int(max_epochs)
         self.seed = seed
-        self.params: dict | None = None
 
-    def learn(self, searched, others, feature_cols):
-        from .deciders import collect_features
+    def fit(self, x1, x0):
+        x, y = stack_samples(x1, x0)
+        return fit_mlp(x, y, hidden=self.hidden_neurons, seed=self.seed)
 
-        x1 = collect_features(searched, feature_cols)
-        x0 = collect_features(others, feature_cols)
-        x = np.vstack([x1, x0])
-        y = np.concatenate([np.ones(len(x1)), np.zeros(len(x0))])
-        self.params = fit_mlp(
-            x, y, hidden=self.hidden_neurons, seed=self.seed
-        )
-        return self
-
-    def evaluate(self, df, feature_cols, out_col="prob"):
-        params = {k: np.asarray(v) for k, v in self.params.items()}
-
-        @F.pandas_udf(T.DoubleType())
-        def score(arr: pd.Series) -> pd.Series:
-            x = np.vstack(arr.to_numpy())
-            return pd.Series(np.nan_to_num(mlp_predict(params, x), nan=0.0))
-
-        # asNondeterministic: see GaussianDecider.evaluate — downstream
-        # prob filters would duplicate the Python evaluation otherwise
-        return df.withColumn(
-            out_col, score.asNondeterministic()(F.array(*feature_cols))
-        )
+    def proba(self, x):
+        return mlp_predict(self.params, x)

@@ -4,9 +4,10 @@ The reference pickles whole StarsFilter objects
 (lcc/data_manager/filter_serializer.py:35-62). Pickle doesn't survive
 environment changes, so here a filter persists as a directory: a JSON
 manifest (decider types, thresholds, feature columns) plus one subdir
-per decider — MLlib models through their native writers, closed-form
-Gaussian parameters as .npz, CustomDecider ranges inline in the
-manifest.
+per decider — MLlib models through their native writers, the
+Gaussian, neural and SVC parameter arrays as one params.npz, and
+AdaBoost stumps, ExtraTrees trees and CustomDecider ranges inline in
+the manifest.
 """
 
 from __future__ import annotations
@@ -32,20 +33,9 @@ from .stars_filter import StarsFilter
 from .svc import SVCDecider
 
 
-def _tree_to_json(node):
-    if isinstance(node, float):
-        return node
-    j, thr, l, r = node
-    return [j, thr, _tree_to_json(l), _tree_to_json(r)]
-
-
-def _tree_from_json(node):
-    if isinstance(node, float):
-        return node
-    j, thr, l, r = node
-    return (int(j), float(thr), _tree_from_json(l), _tree_from_json(r))
-
 MANIFEST = "filter.json"
+# kinds whose ``dec.params`` dict of arrays persists as one params.npz
+_NPZ_KINDS = ("gaussian", "neural", "svc")
 
 
 def save_filter(filt: StarsFilter, path: str) -> None:
@@ -57,8 +47,6 @@ def save_filter(filt: StarsFilter, path: str) -> None:
         if isinstance(dec, GaussianDecider):
             entry["kind"] = "gaussian"
             entry["gaussian_kind"] = dec.kind
-            os.makedirs(os.path.join(path, sub), exist_ok=True)
-            np.savez(os.path.join(path, sub, "params.npz"), **dec.params)
         elif isinstance(dec, CustomDecider):
             entry["kind"] = "custom"
             entry["ranges"] = {
@@ -67,20 +55,16 @@ def save_filter(filt: StarsFilter, path: str) -> None:
         elif isinstance(dec, AdaBoostDecider):
             entry["kind"] = "adaboost"
             entry["learning_rate"] = dec.learning_rate
-            entry["stumps"] = [list(s) for s in dec.stumps]
+            entry["stumps"] = dec.params
         elif isinstance(dec, ExtraTreesDecider):
             entry["kind"] = "extratrees"
             entry["seed"] = dec.seed
-            entry["trees"] = [_tree_to_json(t) for t in dec.trees]
+            entry["trees"] = dec.params
         elif isinstance(dec, NeuronDecider):
             entry["kind"] = "neural"
             entry["hidden_neurons"] = dec.hidden_neurons
-            os.makedirs(os.path.join(path, sub), exist_ok=True)
-            np.savez(os.path.join(path, sub, "params.npz"), **dec.params)
         elif isinstance(dec, SVCDecider):
             entry["kind"] = "svc"
-            os.makedirs(os.path.join(path, sub), exist_ok=True)
-            np.savez(os.path.join(path, sub, "params.npz"), **dec.params)
         elif isinstance(dec, KMeansDecider):
             # registry-supported decider, previously unpersistable: the
             # wrapped KMeansModel has a native MLlib writer like the
@@ -98,6 +82,9 @@ def save_filter(filt: StarsFilter, path: str) -> None:
             dec.model.write().overwrite().save(os.path.join(path, sub))
         else:
             raise ValueError(f"unsupported decider type: {type(dec).__name__}")
+        if entry["kind"] in _NPZ_KINDS:
+            os.makedirs(os.path.join(path, sub), exist_ok=True)
+            np.savez(os.path.join(path, sub, "params.npz"), **dec.params)
         entries.append(entry)
     with open(os.path.join(path, MANIFEST), "w") as f:
         json.dump(
@@ -112,8 +99,6 @@ def load_filter(spark: SparkSession, path: str) -> StarsFilter:
     for entry in manifest["deciders"]:
         if entry["kind"] == "gaussian":
             dec = GaussianDecider(entry["gaussian_kind"], threshold=entry["threshold"])
-            with np.load(os.path.join(path, entry["dir"], "params.npz")) as z:
-                dec.params = {k: z[k] for k in z.files}
         elif entry["kind"] == "custom":
             dec = CustomDecider(
                 {k: tuple(v) for k, v in entry["ranges"].items()},
@@ -125,28 +110,21 @@ def load_filter(spark: SparkSession, path: str) -> StarsFilter:
                 learning_rate=entry["learning_rate"],
                 threshold=entry["threshold"],
             )
-            dec.stumps = [
-                (int(j), float(t), float(pl), float(pr))
-                for j, t, pl, pr in entry["stumps"]
-            ]
+            dec.params = entry["stumps"]
         elif entry["kind"] == "extratrees":
             dec = ExtraTreesDecider(
                 n_estimators=len(entry["trees"]),
                 seed=entry["seed"],
                 threshold=entry["threshold"],
             )
-            dec.trees = [_tree_from_json(t) for t in entry["trees"]]
+            dec.params = entry["trees"]
         elif entry["kind"] == "neural":
             dec = NeuronDecider(
                 threshold=entry["threshold"],
                 hidden_neurons=entry["hidden_neurons"],
             )
-            with np.load(os.path.join(path, entry["dir"], "params.npz")) as z:
-                dec.params = {k: z[k] for k in z.files}
         elif entry["kind"] == "svc":
             dec = SVCDecider(threshold=entry["threshold"])
-            with np.load(os.path.join(path, entry["dir"], "params.npz")) as z:
-                dec.params = {k: z[k] for k in z.files}
         elif entry["kind"] == "kmeans":
             from pyspark.ml.clustering import KMeansModel
 
@@ -161,6 +139,9 @@ def load_filter(spark: SparkSession, path: str) -> StarsFilter:
                 threshold=entry["threshold"],
             )
             dec.model = model_cls.load(os.path.join(path, entry["dir"]))
+        if entry["kind"] in _NPZ_KINDS:
+            with np.load(os.path.join(path, entry["dir"], "params.npz")) as z:
+                dec.params = {k: z[k] for k in z.files}
         deciders.append(dec)
     filt = StarsFilter(deciders, manifest["feature_cols"])
     filt.learned = True

@@ -77,16 +77,14 @@ class StarsFilter:
             df = dec.evaluate(df, self.feature_cols, self._prob_col(dec, i))
         return df
 
-    def all_predictions(self, df: DataFrame, check_passing: bool = True) -> DataFrame:
+    def all_predictions(self, df: DataFrame) -> DataFrame:
         out = self.predictions(df)
-        if check_passing:
-            passed_all = None
-            for i, dec in enumerate(self.deciders):
-                c = F.col(self._prob_col(dec, i)) > F.lit(dec.threshold)  # strict >
-                out = out.withColumn(f"passed_{i}_{dec.name()}", c)
-                passed_all = c if passed_all is None else (passed_all & c)
-            out = out.withColumn("passed", passed_all)
-        return out
+        passed_all = None
+        for i, dec in enumerate(self.deciders):
+            c = F.col(self._prob_col(dec, i)) > F.lit(dec.threshold)  # strict >
+            out = out.withColumn(f"passed_{i}_{dec.name()}", c)
+            passed_all = c if passed_all is None else (passed_all & c)
+        return out.withColumn("passed", passed_all)
 
     def mean_threshold(self) -> float:
         # stars_filter.py:103: threshold = mean of decider thresholds
@@ -252,7 +250,7 @@ _LDA_LL_SQL = """         -0.5 * (((f1 - a1) * (f1 - a1) * i11 + (f2 - a2) * (f2
 def lda_pipeline_sql(feats_sql: str, split_pred: str = "abbe < 0.9",
                      reg: float = 1e-6, threshold: float = 0.5) -> str:
     """DuckDB oracle for the trained-LDA filter pipeline
-    (GaussianDecider 'lda' + filter_stars, ml/deciders.py:138-184): the
+    (GaussianDecider 'lda' + filter_stars, ml/deciders.py:225-271): the
     closed-form fit is plain SQL for d=3 features (mean_mag, std_mag,
     abbe) — per-class means, two-pass pooled scatter with the reg·I
     ridge, Cramer's-rule 3×3 inverse and log-determinant, Mahalanobis

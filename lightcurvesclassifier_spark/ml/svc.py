@@ -19,20 +19,17 @@ than substituting a logistic regression (the surrogate this replaces):
 Deterministic given the seed (the CV fold shuffle and SMO pair draws are
 the only stochastic parts).
 
-Spark split mirrors ``ml/boosting.py``: driver-numpy fit on the
-collected train sample (small by the reference's contract), scoring via
-a broadcast-parameter vectorized pandas UDF — support vectors and dual
-coefficients ship to executors once, the scoring scan stays distributed.
+A ``NumpyDecider`` subclass: driver-numpy fit on the collected train
+sample (small by the reference's contract), scoring through the base's
+broadcast-parameter pandas UDF — support vectors and dual coefficients
+ship to executors once, the scoring scan stays distributed.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import functions as F, types as T
-
-from .deciders import BaseDecider
+from .deciders import NumpyDecider, stack_samples
 
 
 def _rbf(a: np.ndarray, b: np.ndarray, gamma: float) -> np.ndarray:
@@ -174,7 +171,7 @@ def platt_fit(dec: np.ndarray, y: np.ndarray, max_iter: int = 100):
     return a, bb
 
 
-class SVCDecider(BaseDecider):
+class SVCDecider(NumpyDecider):
     """The reference's SVCDec, exact algorithms (SMO + libsvm-style
     5-fold Platt scaling). ``threshold=0.5`` is the reference default."""
 
@@ -187,15 +184,9 @@ class SVCDecider(BaseDecider):
         self.tol = float(tol)
         self.n_folds = int(n_folds)
         self.seed = seed
-        self.params: dict | None = None
 
-    def learn(self, searched, others, feature_cols):
-        from .deciders import collect_features
-
-        x1 = collect_features(searched, feature_cols)
-        x0 = collect_features(others, feature_cols)
-        x = np.vstack([x1, x0])
-        y = np.concatenate([np.ones(len(x1)), -np.ones(len(x0))])
+    def fit(self, x1, x0):
+        x, y = stack_samples(x1, x0, negative=-1.0)
         gamma = 1.0 / x.shape[1] if self.gamma is None else float(self.gamma)
 
         # libsvm probability path: sigmoid fit on 5-fold OUT-OF-FOLD
@@ -220,7 +211,7 @@ class SVCDecider(BaseDecider):
         # final machine on the full train set
         alpha, b = smo_fit(x, y, self.c, gamma, self.tol, seed=self.seed)
         sv = alpha > 1e-12
-        self.params = {
+        return {
             "sv_x": x[sv],
             "sv_ay": (alpha * y)[sv],
             "b": float(b),
@@ -228,28 +219,13 @@ class SVCDecider(BaseDecider):
             "platt_a": float(pa),
             "platt_b": float(pb),
         }
-        return self
 
-    def evaluate(self, df, feature_cols, out_col="prob"):
+    def proba(self, x):
         p = self.params
-        sv_x, sv_ay = p["sv_x"], p["sv_ay"]
-        b, gamma = p["b"], p["gamma"]
-        pa, pb = p["platt_a"], p["platt_b"]
-
-        @F.pandas_udf(T.DoubleType())
-        def score(arr: pd.Series) -> pd.Series:
-            z = np.vstack(arr.to_numpy())
-            dec = _rbf(z, sv_x, gamma) @ sv_ay + b
-            fapb = dec * pa + pb
-            prob = np.where(
-                fapb >= 0,
-                np.exp(-fapb) / (1.0 + np.exp(-fapb)),
-                1.0 / (1.0 + np.exp(fapb)),
-            )
-            return pd.Series(np.nan_to_num(prob, nan=0.0))
-
-        # asNondeterministic: see GaussianDecider.evaluate — downstream
-        # prob filters would duplicate the Python evaluation otherwise
-        return df.withColumn(
-            out_col, score.asNondeterministic()(F.array(*feature_cols))
+        dec = _rbf(x, p["sv_x"], p["gamma"]) @ p["sv_ay"] + p["b"]
+        fapb = dec * p["platt_a"] + p["platt_b"]
+        return np.where(
+            fapb >= 0,
+            np.exp(-fapb) / (1.0 + np.exp(-fapb)),
+            1.0 / (1.0 + np.exp(fapb)),
         )

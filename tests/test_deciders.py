@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from lightcurvesclassifier_spark.ml.deciders import make_decider
+from lightcurvesclassifier_spark.ml.deciders import NumpyDecider, make_decider
 from lightcurvesclassifier_spark.ml.params_estim import ParamsEstimator
 from lightcurvesclassifier_spark.ml.stars_filter import StarsFilter
 
@@ -309,19 +309,28 @@ def test_neural_svc_persistence_round_trip(spark, populations, tmp_path):
     assert b.equals(a)
 
 
-def test_mllib_decider_scores_null_feature_rows_zero(spark, populations):
-    """Rows with a missing feature must come back with prob 0.0 (the
-    NaN->0 contract), not silently vanish (VectorAssembler skip)."""
+@pytest.mark.parametrize("name", [name for name, _, _ in DECIDERS])
+def test_decider_scores_missing_feature_rows_zero(spark, populations, name):
+    """A row with a NULL or a NaN feature comes back with prob 0.0 under
+    every supervised decider (the NaN->0 contract): not silently dropped
+    (VectorAssembler skip), and not scored on its other features. The
+    complete features sit deep in the searched population, so a decider
+    that routes the missing value down a tree branch scores it high."""
     searched, others = populations
-    dec = make_decider("RandomForestDec")
+    dec = make_decider(name)
     dec.learn(searched, others, FEATURES)
-    rows = [tuple([None] + [0.5] * (DIM - 1))]
-    with_null = searched.limit(3).unionByName(
+    rows = [
+        tuple([None] + [1.5] * (DIM - 1)),
+        tuple([1.5, float("nan")] + [1.5] * (DIM - 2)),
+    ]
+    holey = searched.limit(3).unionByName(
         spark.createDataFrame(rows, searched.schema)
     )
-    out = dec.evaluate(with_null, FEATURES).toPandas()
-    assert len(out) == 4  # the null row is present...
-    assert (out[out.f0.isna()]["prob"] == 0.0).all()  # ...scored 0
+    out = dec.evaluate(holey, FEATURES).toPandas()
+    assert len(out) == 5  # the missing-feature rows are present...
+    missing = out[out[FEATURES].isna().any(axis=1)]
+    assert len(missing) == 2
+    assert (missing["prob"] == 0.0).all(), missing  # ...scored 0
 
 
 def test_deciders_raise_on_empty_sample(spark, populations):
@@ -329,8 +338,12 @@ def test_deciders_raise_on_empty_sample(spark, populations):
     (silently fitting produced an all-NaN model scoring everything 0)."""
     searched, others = populations
     empty = searched.filter("f0 > 1e9")
-    for name in ("LDADec", "GaussianNBDec", "AdaBoostDec", "ExtraTreesDec",
-                 "SVCDec", "NeuronDecider"):
+    names = [
+        name for name, _, _ in DECIDERS
+        if isinstance(make_decider(name), NumpyDecider)
+    ]
+    assert len(names) == 7
+    for name in names:
         with pytest.raises(ValueError, match="empty sample"):
             make_decider(name).learn(searched, empty, FEATURES)
 
