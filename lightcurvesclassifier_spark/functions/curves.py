@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..plans.query_compiler import quote_ident as _q
+
 KEY = "star_id"
 
 
@@ -70,35 +72,38 @@ def lc_stats(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
 def abbe_value(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Abbe value per star: ``n/(2(n-1)) * Σ(Δmag)² / Σ(mag-mean)²``
     (lcc/utils/data_analysis.py:167-193), computed with a window lag for
-    the numerator and power sums for the denominator.
-
-    The window and the aggregate share the same partitioning key, so the
-    sort-within-partition for ``lag`` and the final groupBy reuse one
-    shuffle (Catalyst reuses the hash partitioning on ``star_id``).
+    the numerator and power sums for the denominator — the ``abbe``
+    column of :func:`curve_features`, whose unused aggregates Catalyst
+    prunes.
     """
     keys = keys or [KEY]
-    w = Window.partitionBy(*keys).orderBy("t", "mag")
-    d = F.col("mag") - F.lag("mag").over(w)
-    agg = (
-        obs.withColumn("_d", d)
-        .groupBy(*keys)
-        .agg(
-            F.count("mag").alias("_n"),
-            F.sum(F.col("_d") * F.col("_d")).alias("_sum_sq_diff"),
-            F.sum("mag").alias("_s1"),
-            F.sum(F.col("mag") * F.col("mag")).alias("_s2"),
-        )
-    )
-    n = F.col("_n")
-    ss = F.col("_s2") - F.col("_s1") * F.col("_s1") / n
-    return agg.select(
-        *keys,
-        n.alias("n_obs"),
-        F.when(
-            (n > 1) & (ss != 0.0),
-            n / (2.0 * (n - 1.0)) * F.col("_sum_sq_diff") / ss,
-        ).alias("abbe"),
-    )
+    return curve_features(obs, keys).select(*keys, "n_obs", "abbe")
+
+
+# curve_features' power sums and its feature columns over them, as Spark
+# SQL: the driver builds each expression in one Py4J round trip, where
+# every Column-API node (F.col, an operator, an alias) takes several.
+# Double literals carry the D suffix: a bare 1.0 or 2.0 parses as
+# DECIMAL, and `_n / (2.0 * (_n - 1.0))` computed in DECIMAL changes the
+# bits of the Abbe value.
+_CURVE_SUMS = (
+    "count(mag) AS _n",
+    "sum(_d * _d) AS _sum_sq_diff",
+    "sum(mag) AS _s1",
+    "sum(mag * mag) AS _s2",
+    "min(t) AS _tmin",
+    "max(t) AS _tmax",
+)
+_SS = "(_s2 - _s1 * _s1 / _n)"
+_CURVE_COLUMNS = (
+    "_n AS n_obs",
+    "_s1 / _n AS mean_mag",
+    f"CASE WHEN _n > 0 THEN sqrt(greatest({_SS}, 0.0D) / _n) END AS std_mag",
+    "_tmax - _tmin AS timespan",
+    "CASE WHEN _tmax - _tmin <> 0.0D THEN _n / (_tmax - _tmin) END AS curve_density",
+    f"CASE WHEN _n > 1 AND {_SS} <> 0.0D "
+    f"THEN _n / (2.0D * (_n - 1.0D)) * _sum_sq_diff / {_SS} END AS abbe",
+)
 
 
 def curve_features(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
@@ -111,35 +116,13 @@ def curve_features(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
     with no second exchange (verified via .explain: one Exchange node).
     """
     keys = keys or [KEY]
-    w = Window.partitionBy(*keys).orderBy("t", "mag")
-    d = F.col("mag") - F.lag("mag").over(w)
-    agg = (
-        obs.withColumn("_d", d)
+    part = ", ".join(map(_q, keys))
+    lag = f"mag - lag(mag) OVER (PARTITION BY {part} ORDER BY t, mag)"
+    return (
+        obs.withColumn("_d", F.expr(lag))
         .groupBy(*keys)
-        .agg(
-            F.count("mag").alias("_n"),
-            F.sum(F.col("_d") * F.col("_d")).alias("_sum_sq_diff"),
-            F.sum("mag").alias("_s1"),
-            F.sum(F.col("mag") * F.col("mag")).alias("_s2"),
-            F.min("t").alias("_tmin"),
-            F.max("t").alias("_tmax"),
-        )
-    )
-    n = F.col("_n")
-    mean = F.col("_s1") / n
-    ss = F.col("_s2") - F.col("_s1") * F.col("_s1") / n
-    span = F.col("_tmax") - F.col("_tmin")
-    return agg.select(
-        *keys,
-        n.alias("n_obs"),
-        mean.alias("mean_mag"),
-        F.when(n > 0, F.sqrt(F.greatest(ss, F.lit(0.0)) / n)).alias("std_mag"),
-        span.alias("timespan"),
-        F.when(span != 0.0, n / span).alias("curve_density"),
-        F.when(
-            (n > 1) & (ss != 0.0),
-            n / (2.0 * (n - 1.0)) * F.col("_sum_sq_diff") / ss,
-        ).alias("abbe"),
+        .agg(*map(F.expr, _CURVE_SUMS))
+        .selectExpr(*map(_q, keys), *_CURVE_COLUMNS)
     )
 
 

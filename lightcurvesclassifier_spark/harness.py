@@ -86,13 +86,18 @@ def reclaim(spark) -> None:
 def run(spark, fn, sf_dir: str) -> dict:
     """Execute ``fn(spark, sf_dir)`` through the noop sink (the full
     physical plan, no driver-side collect) under its own job group.
-    Returns ``{"wall", "jobs", "stages", "tasks"}`` for that group."""
+    Returns ``{"wall", "construct", "jobs", "stages", "tasks"}`` for that
+    group: ``construct`` is the share of ``wall`` spent in the
+    ``fn(spark, sf_dir)`` call itself (driver-side plan building and any
+    eager jobs it runs), the rest is the noop write."""
     sc = spark.sparkContext
     group = f"harness-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "harness run")
     try:
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        df = fn(spark, sf_dir)
+        construct = time.perf_counter() - t0
+        df.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
     finally:
         sc.setJobGroup(None, None)
@@ -103,6 +108,7 @@ def run(spark, fn, sf_dir: str) -> dict:
     stages = [s for s in stages if s]
     return {
         "wall": round(wall, 3),
+        "construct": round(construct, 3),
         "jobs": len(jobs),
         "stages": len(stages),
         "tasks": sum(s.numTasks for s in stages),
@@ -111,8 +117,9 @@ def run(spark, fn, sf_dir: str) -> dict:
 
 def best_of(spark, fn, sf_dir: str, runs: int, warm: bool = True) -> dict:
     """An untimed warm run (unless ``warm`` is false), then ``runs``
-    times (``reclaim``, ``run``). Returns the best run's counts plus
-    ``best`` (its wall), ``all`` (every wall) and ``median``.
+    times (``reclaim``, ``run``). Returns the best run's construction time
+    and counts plus ``best`` (its wall), ``all`` (every wall) and
+    ``median``.
 
     The best is the reproducible plan cost: single runs on a shared box
     carry multi-second GC/compile/contention noise (r4:

@@ -20,9 +20,15 @@ and decides ``passed`` with the saved filters). The rq/redis work queue
 of the reference is replaced by partition parallelism.
 
 The path stays on the JVM and runs no job that writes nothing: the query
-table is a driver-held ``LocalTableScan`` (``queries_df``), and the
+table is a driver-held ``LocalTableScan`` (``queries_df``; a resume
+collects its unsearched rows once into the same kind of table), and the
 commit takes its publish key from the staged files' parquet footers and
-reads them back with the ledger's schema (``write_results``).
+reads them back with the ledger's schema (``write_results``). The plan
+builders are Spark SQL expression strings, so building a search costs
+the driver a few Py4J round trips rather than several per Column node.
+
+Features contract: ``search_and_resume`` calls ``features_fn()`` once
+per run; the stream takes it once per start (restart it to refresh).
 """
 
 from __future__ import annotations
@@ -33,38 +39,46 @@ from typing import Callable, Mapping, Sequence
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.query_compiler import range_predicate
+from ..plans.query_compiler import quote_ident as _q, range_predicate_sql
 
 QUERY_SCHEMA = "query_id long, lo long, hi long"
+
+
+def query_table(
+    spark: SparkSession, rows: Sequence[tuple[int, int, int]]
+) -> DataFrame:
+    """(query_id, lo, hi) rows the driver holds as a ``QUERY_SCHEMA``
+    table, built from a ``pyarrow.Table``: it plans as a
+    ``LocalTableScan``, also when ``rows`` is empty, so the broadcast,
+    the no-match stubs and the resume read it without starting a Python
+    worker, which every scan of a table created from a Python list (a
+    Python-RDD scan) does."""
+    ids, los, his = zip(*rows) if rows else ((), (), ())
+    table = pa.table(
+        {
+            "query_id": pa.array(ids, pa.int64()),
+            "lo": pa.array(los, pa.int64()),
+            "hi": pa.array(his, pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table, QUERY_SCHEMA)
 
 
 def queries_df(
     spark: SparkSession, ranges: Sequence[tuple[int, int]]
 ) -> DataFrame:
     """Materialize [(lo, hi), …] id-range queries as a small dimension —
-    the `list[dict]` query plan of the reference, tabular.
+    the `list[dict]` query plan of the reference, tabular
+    (a :func:`query_table`).
 
     CONTRACT: query_id is the list position, so a resumable plan must be
     APPEND-ONLY — inserting/reordering ranges renumbers them and the
     ledger's done-set silently mismatches (skipping new queries and
     re-running renumbered ones). Extend the list at the end, or supply
-    your own stable query_id column instead of this helper.
-
-    The table is built from a ``pyarrow.Table``, so it plans as a
-    ``LocalTableScan`` of rows the driver holds, also when ``ranges`` is
-    empty: the broadcast, the no-match stubs and the resume count read it
-    without starting a Python worker, which every scan of a table
-    created from a Python list (a Python-RDD scan) does."""
-    table = pa.table(
-        {
-            "query_id": pa.array(range(len(ranges)), pa.int64()),
-            "lo": pa.array([lo for lo, _ in ranges], pa.int64()),
-            "hi": pa.array([hi for _, hi in ranges], pa.int64()),
-        }
-    )
-    return spark.createDataFrame(table, QUERY_SCHEMA)
+    your own stable query_id column instead of this helper."""
+    return query_table(spark, [(i, lo, hi) for i, (lo, hi) in enumerate(ranges)])
 
 
 def status_ledger(
@@ -80,18 +94,21 @@ def status_ledger(
     when no row of its query_id is found: the plan is lazy and scans
     ``found`` once.
     """
-    cols = [key] + [c for c in found.columns if c not in (key, "query_id", "passed")]
-    matched = found.select("query_id", *cols, F.lit(True).alias("found"), "passed")
-    stubs = queries.select(
+    types = {f.name: f.dataType.simpleString() for f in found.schema.fields}
+    cols = [key] + [c for c in types if c not in (key, "query_id", "passed")]
+    matched = found.selectExpr(
+        "query_id", *map(_q, cols), "TRUE AS found", "passed"
+    )
+    stubs = queries.selectExpr(
         "query_id",
-        *[F.lit(None).cast(found.schema[c].dataType).alias(c) for c in cols],
-        F.lit(False).alias("found"),
-        F.lit(False).alias("passed"),
+        *[f"CAST(NULL AS {types[c]}) AS {_q(c)}" for c in cols],
+        "FALSE AS found",
+        "FALSE AS passed",
     )
     return (
         matched.unionByName(stubs)
-        .withColumn("_any_found", F.max("found").over(Window.partitionBy("query_id")))
-        .filter(F.col("found") | ~F.col("_any_found"))
+        .withColumn("_any_found", F.expr("max(found) OVER (PARTITION BY query_id)"))
+        .filter("found OR NOT _any_found")
         .drop("_any_found")
     )
 
@@ -111,10 +128,13 @@ def run_search(
     the big side streams through untouched (no shuffle); at 100 TB this
     is the only viable shape (queries are few, stars are not).
     """
-    q = F.broadcast(queries)
-    cond = (F.col(key) >= F.col("lo")) & (F.col(key) <= F.col("hi"))
-    found = features.join(q, cond, "inner").select(
-        "query_id", *features.columns, range_predicate(passed_ranges).alias("passed")
+    k = _q(key)
+    found = features.join(
+        F.broadcast(queries), F.expr(f"{k} >= lo AND {k} <= hi"), "inner"
+    ).selectExpr(
+        "query_id",
+        *map(_q, features.columns),
+        f"{range_predicate_sql(passed_ranges)} AS passed",
     )
     return status_ledger(found, queries, key)
 
@@ -204,7 +224,11 @@ def search_and_resume(
     passed_path: str | None = None,
 ) -> int:
     """End-to-end driver: resume-filter the plan, run, commit. Returns the
-    number of queries actually executed this run."""
+    number of queries actually executed this run.
+
+    The unsearched queries are collected once (they are broadcast
+    anyway) into a driver-held :func:`query_table`, so the resume filter
+    runs once and ``features_fn()`` is called only when a query is left."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
@@ -218,9 +242,9 @@ def search_and_resume(
         if "PATH_NOT_FOUND" not in str(e):
             raise
         todo = plan
-    n = todo.count()
-    if n == 0:
+    rows = todo.select("query_id", "lo", "hi").collect()
+    if not rows:
         return 0
-    ledger = run_search(features_fn(), todo, passed_ranges)
+    ledger = run_search(features_fn(), query_table(spark, rows), passed_ranges)
     write_results(ledger, ledger_path, passed_path)
-    return n
+    return len(rows)

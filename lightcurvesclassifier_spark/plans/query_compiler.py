@@ -18,6 +18,8 @@ A query *list* is a disjunction of its per-dict conjunctions.
 
 from __future__ import annotations
 
+import math
+import numbers
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -93,22 +95,38 @@ def apply_queries(df: DataFrame, queries: Sequence[Mapping[str, Any]]) -> DataFr
     return df if disj is None else df.filter(disj)
 
 
-def range_predicate(ranges: Mapping[str, tuple[float | None, float | None]]) -> Column:
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_number(v: float) -> str:
+    """A Spark SQL literal of the type ``F.lit(v)`` gives: an integer as
+    INT (BIGINT beyond 32 bits), a float as DOUBLE — the D suffix, since
+    a bare ``0.95`` parses as DECIMAL."""
+    if isinstance(v, numbers.Integral):
+        return str(int(v))
+    v = float(v)
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+
+
+def range_predicate_sql(
+    ranges: Mapping[str, tuple[float | None, float | None]]
+) -> str:
     """CustomDecider's boundary filter
-    (lcc/stars_processing/deciders/custom_decider.py:43-78): conjunction of
-    per-column open/half-open ranges; ``None`` bound = unbounded side."""
-    cond: Column | None = None
+    (lcc/stars_processing/deciders/custom_decider.py:43-78) as a Spark SQL
+    expression: conjunction of per-column open/half-open ranges; ``None``
+    bound = unbounded side, no bound at all = ``TRUE``."""
+    terms = []
     for col, (lo, hi) in ranges.items():
-        c = F.col(col)
-        if lo is not None and hi is not None:
-            p = (c > F.lit(lo)) & (c < F.lit(hi))
-        elif lo is not None:
-            p = c > F.lit(lo)
-        elif hi is not None:
-            p = c < F.lit(hi)
-        else:
-            continue
-        cond = p if cond is None else (cond & p)
-    if cond is None:
-        return F.lit(True)
-    return cond
+        c = quote_ident(col)
+        sides = [f"{c} > {_sql_number(lo)}"] if lo is not None else []
+        sides += [f"{c} < {_sql_number(hi)}"] if hi is not None else []
+        if sides:
+            terms.append("(" + " AND ".join(sides) + ")")
+    return " AND ".join(terms) or "TRUE"
+
+
+def range_predicate(ranges: Mapping[str, tuple[float | None, float | None]]) -> Column:
+    """:func:`range_predicate_sql` as a Column (one Py4J round trip)."""
+    return F.expr(range_predicate_sql(ranges))

@@ -17,7 +17,11 @@ oracle can reproduce them with plain SQL:
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -315,6 +319,15 @@ def contamination_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contaminated.unionByName(clean)
 
 
+# The schema Spark inferred for each local parquet file, keyed on its
+# absolute path and stamped with its (st_mtime_ns, st_size): a repeat load
+# reads with the known schema and runs no schema-inference job (0.15 s
+# each on 4 cores), and a file rewritten in place gets a new stamp and is
+# inferred again. A pure cache: one entry per path, and two loads racing
+# on a miss both infer the same schema.
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # events.parquet stores TIMESTAMP(NANOS). On Spark ≤4.0 it is only
     # readable with nanosAsLong (raw longs); on 4.1+ that conf is a no-op
@@ -324,12 +337,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # sessions built outside session.get_spark (e.g. a driver harness).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None  # a remote or missing path: Spark resolves or reports it
+    if st is None or not stat.S_ISREG(st.st_mode):
+        # a directory's stamp misses part files rewritten in place
+        return spark.read.parquet(path)
+    key, stamp = os.path.abspath(path), (st.st_mtime_ns, st.st_size)
+    known = _SCHEMAS.get(key)
+    if known is not None and known[0] == stamp:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
 
 
 def observations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → OBSERVATIONS long format. t is float days since 2024-01-01,
     computed from integer nanoseconds so Spark and DuckDB agree bit-for-bit.
+
+    Built from SQL expressions: the driver builds each in one Py4J round
+    trip, where every Column-API node takes several.
     """
     e = load_table(spark, sf_dir, "events")
     ts_type = dict(e.dtypes)["ts"]
@@ -338,18 +368,16 @@ def observations(spark: SparkSession, sf_dir: str) -> DataFrame:
         # TIMESTAMP; the ntz→timestamp cast uses the session timezone,
         # which load_table pins to UTC, so this is exact (stamps are
         # whole microseconds — see _EPOCH_NS comment).
-        t = (
-            F.unix_micros(F.col("ts").cast("timestamp")) - F.lit(_EPOCH_US)
-        ) / F.lit(_US_PER_DAY)
+        t = f"(unix_micros(CAST(ts AS TIMESTAMP)) - {_EPOCH_US}L) / {_US_PER_DAY!r}D"
     else:
         # ≤4.0 path: nanosAsLong gave us raw int64 nanoseconds.
-        t = (F.col("ts") - F.lit(_EPOCH_NS)) / F.lit(_NS_PER_DAY)
-    return e.select(
-        F.col("user_id").alias("star_id"),
-        F.col("event_type").alias("band"),
-        t.alias("t"),
-        F.col("value").alias("mag"),
-        F.lit(None).cast("double").alias("err"),
+        t = f"(ts - {_EPOCH_NS}L) / {_NS_PER_DAY!r}D"
+    return e.selectExpr(
+        "user_id AS star_id",
+        "event_type AS band",
+        f"{t} AS t",
+        "value AS mag",
+        "CAST(NULL AS DOUBLE) AS err",
     )
 
 

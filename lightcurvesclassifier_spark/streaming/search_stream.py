@@ -9,7 +9,8 @@ file-source stream of query batches drained by ``foreachBatch``
 (SURVEY.md §2.6): each micro-batch runs the same declarative search
 plan and the same commit as the batch path (operators/searcher.py),
 giving exactly-once per-batch semantics via the checkpoint instead of
-redis bookkeeping.
+redis bookkeeping. The features are taken once per start (a snapshot
+under the checkpoint); restart the stream to refresh them.
 """
 
 from __future__ import annotations
@@ -43,19 +44,33 @@ def start_search_stream(
 ):
     """Drain the query stream through the batch search plan.
 
-    ``foreachBatch`` runs the batch plan and its commit,
+    Features contract: ``features_fn()`` is called once per start and
+    written to ``<checkpoint_dir>/features``; every batch of this start
+    searches that snapshot, so restart the stream to refresh the
+    features. The snapshot sits under the checkpoint, not the ledger, so
+    a glob over the ledger's batch directories reads ledger rows only.
+
+    ``foreachBatch`` collects the batch's (small, broadcast) query rows
+    into a driver-held table, then runs the batch plan and its commit,
     ``searcher.write_results``, into ``<ledger_path>/batch_id=N``; read
     the ledger with ``spark.read.parquet(ledger_path)``. The checkpoint
     makes restarts resume from the last committed batch (the reference's
     redis status ledger role); a batch replayed after a crash before its
     checkpoint commit replaces its earlier copy.
     """
+    snapshot_path = os.path.join(checkpoint_dir, "features")
+    features = features_fn()
+    features.write.mode("overwrite").parquet(snapshot_path)
+    snapshot = spark.read.schema(features.schema).parquet(snapshot_path)
     stream = query_stream(spark, queries_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        rows = batch_df.collect()
+        if not rows:
             return
-        ledger = searcher.run_search(features_fn(), batch_df, passed_ranges)
+        ledger = searcher.run_search(
+            snapshot, searcher.query_table(spark, rows), passed_ranges
+        )
         searcher.write_results(ledger, os.path.join(ledger_path, f"batch_id={batch_id}"))
 
     return (

@@ -74,6 +74,7 @@ def test_compare_flags_spark_null_against_duckdb_nan(spark):
 def test_run_reports_wall_and_jobs(spark):
     rec = harness.run(spark, entry_mod.queries()["pricing_summary"], SF_SMOKE)
     assert rec["wall"] > 0
+    assert 0 <= rec["construct"] <= rec["wall"]
     assert rec["jobs"] >= 1
     assert rec["stages"] >= rec["jobs"] and rec["tasks"] >= rec["stages"]
 

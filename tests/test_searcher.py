@@ -80,6 +80,11 @@ def test_streaming_search(spark, tmp_path):
     qdir.mkdir()
     ledger_path = str(tmp_path / "stream_ledger")
     ckpt = str(tmp_path / "ckpt")
+    starts = []
+
+    def features():
+        starts.append(1)
+        return _features(spark)
 
     (qdir / "batch1.csv").write_text("0,0,4\n1,5,9\n")
     (qdir / "batch2.csv").write_text("2,10,14\n")
@@ -87,7 +92,7 @@ def test_streaming_search(spark, tmp_path):
     q = start_search_stream(
         spark,
         str(qdir),
-        lambda: _features(spark),
+        features,
         RANGES,
         ledger_path,
         ckpt,
@@ -96,11 +101,14 @@ def test_streaming_search(spark, tmp_path):
     ledger = spark.read.parquet(ledger_path)
     assert ledger.select("query_id").distinct().count() == 3
     assert ledger.filter(F.col("passed")).count() > 0
+    # the feature snapshot sits under the checkpoint, not the ledger
+    assert all(n.startswith("batch_id=") for n in os.listdir(ledger_path))
+    assert os.path.isdir(os.path.join(ckpt, "features"))
 
     # restart with one more file: checkpoint resumes, old batches not rerun
     (qdir / "batch3.csv").write_text("3,0,14\n")
     q2 = start_search_stream(
-        spark, str(qdir), lambda: _features(spark), RANGES, ledger_path, ckpt
+        spark, str(qdir), features, RANGES, ledger_path, ckpt
     )
     q2.awaitTermination(120)
     after = spark.read.parquet(ledger_path)
@@ -118,13 +126,15 @@ def test_streaming_search(spark, tmp_path):
     for name in (str(last), f".{last}.crc"):
         os.remove(os.path.join(ckpt, "commits", name))
     q3 = start_search_stream(
-        spark, str(qdir), lambda: _features(spark), RANGES, ledger_path, ckpt
+        spark, str(qdir), features, RANGES, ledger_path, ckpt
     )
     q3.awaitTermination(120)
     replayed_files = sorted(os.listdir(bdir))
     assert replayed_files != before_files  # the batch did run again
     assert len(replayed_files) == len(before_files)
     assert _rows(spark.read.parquet(bdir)) == before
+    # every start took its own feature snapshot
+    assert len(starts) == 3
 
 
 def test_unsearched_queries_anti_join(spark):
@@ -243,9 +253,12 @@ def test_run_search_builds_without_jobs(spark):
 
 
 def test_search_and_stream_batch_compute_features_once(spark, tmp_path):
-    """One search_and_resume, and one stream batch, evaluate each
-    feature row once: a test-only UDF over the key counts evaluations."""
+    """One search_and_resume, and one stream start over two query files,
+    evaluate each feature row once: a test-only UDF over the key counts
+    evaluations. The stream calls ``features_fn`` once per start and its
+    batches search the snapshot."""
     acc = spark.sparkContext.accumulator(0)
+    calls = []
 
     def tick(v):
         acc.add(1)
@@ -254,6 +267,7 @@ def test_search_and_stream_batch_compute_features_once(spark, tmp_path):
     tick_udf = F.udf(tick, "long").asNondeterministic()
 
     def counted():
+        calls.append(1)
         return _features(spark).withColumn("star_id", tick_udf("star_id"))
 
     n_stars = _features(spark).count()
@@ -262,18 +276,21 @@ def test_search_and_stream_batch_compute_features_once(spark, tmp_path):
         spark, counted, plan, RANGES,
         str(tmp_path / "ledger"), str(tmp_path / "passed"),
     )
-    assert n == 3 and acc.value == n_stars
+    assert n == 3 and acc.value == n_stars and len(calls) == 1
 
     qdir = tmp_path / "queries_in"
     qdir.mkdir()
     (qdir / "batch1.csv").write_text("0,0,4\n1,2000,3000\n")
+    (qdir / "batch2.csv").write_text("2,5,9\n")
     acc.value = 0
+    calls.clear()
+    ledger_path = str(tmp_path / "stream_ledger")
     q = start_search_stream(
-        spark, str(qdir), counted, RANGES,
-        str(tmp_path / "stream_ledger"), str(tmp_path / "ckpt"),
+        spark, str(qdir), counted, RANGES, ledger_path, str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
-    assert acc.value == n_stars
+    assert len(os.listdir(ledger_path)) == 2  # one batch per query file
+    assert len(calls) == 1 and acc.value == n_stars
 
 
 def test_resume_when_ledger_has_nothing_published(spark, tmp_path):

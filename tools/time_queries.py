@@ -1,5 +1,6 @@
-"""Isolated per-query timing: best-of-N wall time plus the best run's
-job / stage / task counts (they attribute the FIXED latencies — job
+"""Isolated per-query timing: best-of-N wall time, the best run's
+construction time (the ``fn(spark, sf)`` call, before the noop write),
+plus its job / stage / task counts (they attribute the FIXED latencies — job
 launches, stage round-trips, broadcast builds — that dominate most
 queries at sf0.1) for the named queries, or every one with ``--all``.
 Reads $SPARK_GRAFT_SF_DIR (default sf0.1) and $SPARK_GRAFT_BENCH_RUNS
@@ -43,7 +44,11 @@ def main() -> None:
         targets[n] = r = harness.best_of(spark, qs[n], sf_dir, runs)
         if not as_json:
             shape = f"jobs={r['jobs']} stages={r['stages']} tasks={r['tasks']}"
-            print(f"{n}: best={r['best']:.3f} all={r['all']} {shape}", flush=True)
+            print(
+                f"{n}: best={r['best']:.3f} construct={r['construct']:.3f} "
+                f"all={r['all']} {shape}",
+                flush=True,
+            )
     if as_json:
         controls = {
             n: {**harness.best_of(spark, qs[n], sf_dir, runs), "quiet_floor": fl}
