@@ -74,6 +74,7 @@ from lightcurvesclassifier_spark.operators import warehouse as wh_ops
 from lightcurvesclassifier_spark.operators import pipelines as pipe_ops
 from lightcurvesclassifier_spark.plans.query_compiler import (
     apply_queries,
+    quote_ident,
     range_predicate,
 )
 from lightcurvesclassifier_spark.sources import testdata
@@ -110,9 +111,19 @@ def _spread_scan(df: DataFrame, key: str) -> DataFrame:
 
 
 def _round6(df: DataFrame, *cols: str) -> DataFrame:
-    for c in cols:
-        df = df.withColumn(c, F.round(F.col(c), 6))
-    return df
+    """``cols`` rounded to 6 decimals in one projection that keeps the
+    column order: one ``selectExpr`` is one analysis and one Py4J call,
+    where a ``withColumn`` chain analyses once per column. SQL
+    ``round(x, 6)`` is ``F.round(x, 6)``."""
+    named = set(cols)
+    return df.selectExpr(
+        *[
+            f"round({quote_ident(c)}, 6) AS {quote_ident(c)}"
+            if c in named
+            else quote_ident(c)
+            for c in df.columns
+        ]
+    )
 
 
 # ---------------------------------------------------------------------------

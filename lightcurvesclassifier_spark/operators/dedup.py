@@ -431,7 +431,12 @@ def _fused_eval_pairs(
     queries use it: their exhaustive-truth contract already pays the
     full shingle self-join, so the band rows ride a shuffle that must
     happen anyway (production banding paths keep verifying candidates
-    only)."""
+    only).
+
+    The verified flags diverge from the old shape only at the degenerate
+    threshold=1.0: a band collision with zero shingle overlap used to
+    count as verified (jaccard 0, distance 1 <= 1) and now counts as
+    unverified (its jaccard is NULL). No declared query uses 1.0."""
     u = shc.select(
         F.col(id_col),
         F.shiftleft(F.col("key"), 1).alias("_jk"),

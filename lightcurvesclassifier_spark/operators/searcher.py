@@ -28,14 +28,22 @@ builders are Spark SQL expression strings, so building a search costs
 the driver a few Py4J round trips rather than several per Column node.
 
 Features contract: ``search_and_resume`` calls ``features_fn()`` once
-per run; the stream takes it once per start (restart it to refresh).
+per run that has a query left, and the stream once per start (restart
+it to refresh). Both search :func:`feature_snapshot` of that frame, the
+one place the search path materializes features: a session writes the
+features of one plan over unchanged inputs once, and every later run
+and stream start reads that snapshot without a feature job.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
+import tempfile
 from typing import Callable, Mapping, Sequence
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -215,6 +223,88 @@ def unsearched_queries(plan: DataFrame, ledger: DataFrame) -> DataFrame:
     return plan.join(done, "query_id", "left_anti")
 
 
+# (applicationId, semanticHash) -> (features, input stamp, snapshot dir)
+_SNAPSHOTS: dict[tuple[str, int], tuple[DataFrame, tuple | None, str]] = {}
+
+
+@functools.cache
+def _snapshot_root() -> str:
+    """The one local directory of this process's snapshots, removed at
+    exit; never under a ledger, whose readers glob its part files."""
+    root = tempfile.mkdtemp(prefix="lcc-features-")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _input_stamp(features: DataFrame) -> tuple | None:
+    """``(uri, st_mtime_ns, st_size)`` of every input file of
+    ``features``, or ``None`` when its snapshot must not be reused: a
+    nondeterministic plan, or a leaf other than a local file scan or a
+    driver-held ``LocalRelation`` (an RDD or Python-list frame, a
+    connector, a non-``file:`` URI). The stamp sees what the plan cannot:
+    a file index compares only its root paths, so a file rewritten in
+    place leaves ``sameSemantics`` true."""
+    plan = features._jdf.queryExecution().analyzed()
+    if not plan.deterministic():
+        return None
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LocalRelation":
+            continue
+        if (
+            kind != "LogicalRelation"
+            or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+        ):
+            return None
+    stamp = []
+    for uri in sorted(features.inputFiles()):
+        url = urlparse(uri)
+        if url.scheme != "file":
+            return None
+        try:
+            st = os.stat(unquote(url.path))
+        except OSError:
+            return None  # gone: the features job reports it
+        stamp.append((uri, st.st_mtime_ns, st.st_size))
+    return tuple(stamp)
+
+
+def feature_snapshot(features: DataFrame) -> DataFrame:
+    """``features`` written once to local parquet and read back with
+    ``features.schema``: the only way the search path materializes
+    features, for the batch search and the stream start alike.
+
+    A session memo keeps one snapshot per ``(applicationId,
+    features.semanticHash())``. A later call whose plan has the same
+    semantics and whose input files keep their stamp reads the existing
+    snapshot and runs no feature job. A plan that fails
+    :func:`_input_stamp`'s rules is written afresh on every call. A
+    stamp mismatch or a missing directory replaces the snapshot, and the
+    replaced directory is deleted, so a frame read from it earlier stops
+    reading. Paths are local, as in :func:`write_results`."""
+    spark = features.sparkSession
+    key = (spark.sparkContext.applicationId, features.semanticHash())
+    stamp = _input_stamp(features)
+    known = _SNAPSHOTS.get(key)
+    if (
+        stamp is not None
+        and known is not None
+        and known[1] == stamp
+        and os.path.isdir(known[2])
+        and features.sameSemantics(known[0])
+    ):
+        path = known[2]
+    else:
+        path = tempfile.mkdtemp(dir=_snapshot_root())
+        features.write.mode("overwrite").parquet(path)
+        if known is not None:
+            shutil.rmtree(known[2], ignore_errors=True)
+        _SNAPSHOTS[key] = (features, stamp, path)
+    return spark.read.schema(features.schema).parquet(path)
+
+
 def search_and_resume(
     spark: SparkSession,
     features_fn: Callable[[], DataFrame],
@@ -228,7 +318,8 @@ def search_and_resume(
 
     The unsearched queries are collected once (they are broadcast
     anyway) into a driver-held :func:`query_table`, so the resume filter
-    runs once and ``features_fn()`` is called only when a query is left."""
+    runs once and ``features_fn()`` is called only when a query is left;
+    the queries search its :func:`feature_snapshot`."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
@@ -245,6 +336,8 @@ def search_and_resume(
     rows = todo.select("query_id", "lo", "hi").collect()
     if not rows:
         return 0
-    ledger = run_search(features_fn(), query_table(spark, rows), passed_ranges)
+    ledger = run_search(
+        feature_snapshot(features_fn()), query_table(spark, rows), passed_ranges
+    )
     write_results(ledger, ledger_path, passed_path)
     return len(rows)

@@ -9,8 +9,10 @@ file-source stream of query batches drained by ``foreachBatch``
 (SURVEY.md §2.6): each micro-batch runs the same declarative search
 plan and the same commit as the batch path (operators/searcher.py),
 giving exactly-once per-batch semantics via the checkpoint instead of
-redis bookkeeping. The features are taken once per start (a snapshot
-under the checkpoint); restart the stream to refresh them.
+redis bookkeeping. The features are taken once per start, as the
+search's session snapshot (``searcher.feature_snapshot``), so a start
+over unchanged inputs runs no feature job; restart the stream to refresh
+them.
 """
 
 from __future__ import annotations
@@ -44,11 +46,13 @@ def start_search_stream(
 ):
     """Drain the query stream through the batch search plan.
 
-    Features contract: ``features_fn()`` is called once per start and
-    written to ``<checkpoint_dir>/features``; every batch of this start
-    searches that snapshot, so restart the stream to refresh the
-    features. The snapshot sits under the checkpoint, not the ledger, so
-    a glob over the ledger's batch directories reads ledger rows only.
+    Features contract: ``features_fn()`` is called once per start, and
+    every batch of this start searches its
+    ``searcher.feature_snapshot``, the same session snapshot the batch
+    search reads, so restart the stream to refresh the features. The
+    snapshot sits in the process's snapshot directory, under neither the
+    ledger nor the checkpoint, so a glob over the ledger's batch
+    directories reads ledger rows only.
 
     ``foreachBatch`` collects the batch's (small, broadcast) query rows
     into a driver-held table, then runs the batch plan and its commit,
@@ -58,10 +62,7 @@ def start_search_stream(
     redis status ledger role); a batch replayed after a crash before its
     checkpoint commit replaces its earlier copy.
     """
-    snapshot_path = os.path.join(checkpoint_dir, "features")
-    features = features_fn()
-    features.write.mode("overwrite").parquet(snapshot_path)
-    snapshot = spark.read.schema(features.schema).parquet(snapshot_path)
+    snapshot = searcher.feature_snapshot(features_fn())
     stream = query_stream(spark, queries_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

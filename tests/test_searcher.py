@@ -4,6 +4,7 @@ reference's integration test shape, test/intergation/test_searcher.py:13-40 —
 N queries in, ledger rows per query out, passed stars > 0)."""
 
 import os
+import shutil
 from collections import Counter
 
 import pyarrow as pa
@@ -101,9 +102,16 @@ def test_streaming_search(spark, tmp_path):
     ledger = spark.read.parquet(ledger_path)
     assert ledger.select("query_id").distinct().count() == 3
     assert ledger.filter(F.col("passed")).count() > 0
-    # the feature snapshot sits under the checkpoint, not the ledger
+    # the ledger holds only batch directories, and the feature snapshot
+    # sits in the session's snapshot directory, under neither the ledger
+    # nor the checkpoint
     assert all(n.startswith("batch_id=") for n in os.listdir(ledger_path))
-    assert os.path.isdir(os.path.join(ckpt, "features"))
+    for _, _, snap in searcher._SNAPSHOTS.values():
+        for d in (ledger_path, ckpt):
+            assert os.path.commonpath([d, snap]) != d
+    assert not [
+        f for _, _, files in os.walk(ckpt) for f in files if f.endswith(".parquet")
+    ]
 
     # restart with one more file: checkpoint resumes, old batches not rerun
     (qdir / "batch3.csv").write_text("3,0,14\n")
@@ -433,3 +441,94 @@ def test_publish_key_is_min_over_all_part_files(spark, tmp_path):
     pq.write_table(rows, staging / "part-1.parquet", write_statistics=False)
     with pytest.raises(ValueError, match="no query_id min/max statistics"):
         searcher._min_query_id(str(staging))
+
+
+def test_feature_snapshot_reused_until_inputs_change(spark, tmp_path):
+    """Over unchanged inputs, a second search into a fresh ledger and a
+    stream start read the session snapshot and evaluate no feature row
+    (a deterministic counting UDF over the key); a touched, then a
+    rewritten, events file makes the next search recompute them."""
+    src = os.path.join(SF_SMOKE, "events.parquet")
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    events = sf / "events.parquet"
+    shutil.copyfile(src, events)
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        acc.add(1)
+        return v
+
+    tick_udf = F.udf(tick, "long")
+
+    def counted():
+        feats = curve_features(testdata.observations(spark, str(sf)))
+        return feats.withColumn("star_id", tick_udf("star_id"))
+
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9)])
+
+    def evaluated(run):
+        acc.value = 0
+        run()
+        return acc.value
+
+    def search(name):
+        return evaluated(lambda: searcher.search_and_resume(
+            spark, counted, plan, RANGES, str(tmp_path / name)
+        ))
+
+    n_stars = _features(spark).count()
+    assert search("l1") == n_stars
+    assert search("l2") == 0
+    snapshot = lambda: searcher.feature_snapshot(counted())  # noqa: E731
+    assert _jobs(spark, "snapshot-hit", snapshot) == 0
+
+    qdir = tmp_path / "queries_in"
+    qdir.mkdir()
+    (qdir / "batch1.csv").write_text("0,0,4\n")
+    ledger_path = str(tmp_path / "stream_ledger")
+
+    def stream():
+        start_search_stream(
+            spark, str(qdir), counted, RANGES, ledger_path, str(tmp_path / "ckpt")
+        ).awaitTermination(120)
+
+    assert evaluated(stream) == 0
+    assert spark.read.parquet(ledger_path).count() > 0
+
+    st = os.stat(events)
+    os.utime(events, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert search("l3") == n_stars
+    assert search("l4") == 0
+    events.unlink()
+    shutil.copyfile(src, events)
+    assert search("l5") == n_stars
+    want = _rows(spark.read.parquet(str(tmp_path / "l1")))
+    for name in ("l2", "l3", "l4", "l5"):
+        assert _rows(spark.read.parquet(str(tmp_path / name))) == want
+
+
+@pytest.mark.parametrize("leaf", ["rdd", "nondeterministic_udf"])
+def test_feature_snapshot_never_reuses_unsafe_plans(spark, leaf):
+    """A plan over an RDD leaf (a Python-list frame) or with a
+    nondeterministic UDF is written afresh on every call: each call runs
+    a write job into a new directory and reads back the same rows."""
+    if leaf == "rdd":
+        make = lambda: spark.createDataFrame(  # noqa: E731
+            [(1, 0.5), (2, 0.8)], "star_id long, abbe double"
+        )
+    else:
+        same = F.udf(lambda v: v, "long").asNondeterministic()
+        make = lambda: _features(spark).withColumn(  # noqa: E731
+            "star_id", same("star_id")
+        )
+    assert searcher._input_stamp(make()) is None
+    snaps = []
+    for i in range(2):
+        assert _jobs(
+            spark, f"unsafe-{leaf}-{i}",
+            lambda: snaps.append(searcher.feature_snapshot(make())),
+        ) > 0
+    first, second = (set(s.inputFiles()) for s in snaps)
+    assert first.isdisjoint(second)
+    assert _rows(snaps[1]) == _rows(make())
