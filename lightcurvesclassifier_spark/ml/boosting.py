@@ -10,7 +10,7 @@ their definitions (SAMME.R: Hastie, Rosset, Zhu & Zou 2009; extremely
 randomized trees: Geurts, Ernst & Wehenkel 2006) rather than substituting
 a different estimator family (the GBT/RF surrogates these replace).
 
-Both are ``NumpyDecider`` subclasses: the fit runs driver-side on the
+Both are ``ArrowDecider`` subclasses: the fit runs driver-side on the
 collected train sample (small by the reference's contract — it trains on
 tens-to-thousands of stars in a Python list), and the base's
 broadcast-parameter pandas UDF scores with ``proba`` so the 100 TB scan
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .deciders import DEFAULT_THRESHOLD, NumpyDecider, stack_samples
+from .deciders import DEFAULT_THRESHOLD, ArrowDecider, stack_samples
 
 _CLIP = np.finfo(np.float64).eps  # sklearn's log-proba clip
 
@@ -69,7 +69,7 @@ def _stump_proba(stump, x: np.ndarray) -> np.ndarray:
     return np.column_stack([1.0 - p1, p1])
 
 
-class AdaBoostDecider(NumpyDecider):
+class AdaBoostDecider(ArrowDecider):
     """SAMME.R boosting over gini stumps — the published algorithm the
     reference's ``AdaBoostDec`` runs (sklearn defaults: 50 estimators,
     learning_rate 1.0, depth-1 base trees).
@@ -192,7 +192,7 @@ def _tree_proba(node, x: np.ndarray, idx, out):
         stack.append((l, ix[mask]))
 
 
-class ExtraTreesDecider(NumpyDecider):
+class ExtraTreesDecider(ArrowDecider):
     """Extremely randomized trees — the published algorithm behind the
     reference's ``ExtraTreesDec`` (sklearn defaults: 10 trees, gini,
     no bootstrap, ``max_features=sqrt(d)``, grow to purity);

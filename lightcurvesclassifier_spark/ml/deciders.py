@@ -13,21 +13,25 @@ distributively*:
   the assembled train set (small — the reference trains on tens-to-
   thousands of stars) and score via ``model.transform`` — JVM-side.
 - **Numpy-fit** deciders subclass ``NumpyDecider``: the fit runs
-  driver-side with numpy on the collected train sample (tiny by
-  contract — the reference trains on tens-to-thousands of stars), and
-  scoring is one broadcast-parameter vectorized pandas UDF — the 100 TB
-  path is the scoring scan, which is fully distributed. Each subclass
-  gives only ``fit`` and ``proba``. (The container has no sklearn; these
-  are the published algorithms the reference uses, implemented from
-  their definitions — lcc/stars_processing/deciders/
-  supervised_deciders.py:12-219, deciders/neuron_decider.py:11-155.)
+  driver-side with numpy on the train sample, collected in one job
+  (tiny by contract — the reference trains on tens-to-thousands of
+  stars). (The container has no sklearn; these are the published
+  algorithms the reference uses, implemented from their definitions —
+  lcc/stars_processing/deciders/supervised_deciders.py:12-219,
+  deciders/neuron_decider.py:11-155.)
   - ``GaussianDecider`` (LDA / QDA / GaussianNB): textbook closed forms.
-  - AdaBoostDec and ExtraTreesDec: SAMME.R over gini stumps; extremely
-    randomized trees — ``ml/boosting.py``.
-  - SVCDec: SMO-trained RBF C-SVC with libsvm-style 5-fold Platt
-    scaling (``ml/svc.py``); NeuronDecider: the reference's Keras
-    2-layer relu→sigmoid net trained with Adam in numpy
-    (``ml/neural.py``).
+    The fitted discriminant is a polynomial of degree at most 2 in the
+    features, folded on the driver into one Spark SQL expression, so
+    scoring is code-generated JVM work with no Python worker (linear
+    for LDA, whose two classes share one inverse covariance).
+  - ``ArrowDecider`` subclasses score through one broadcast-parameter
+    vectorized pandas UDF over their ``proba``: the 100 TB path is the
+    scoring scan, which is fully distributed. AdaBoostDec and
+    ExtraTreesDec: SAMME.R over gini stumps; extremely randomized trees
+    — ``ml/boosting.py``. SVCDec: SMO-trained RBF C-SVC with
+    libsvm-style 5-fold Platt scaling (``ml/svc.py``); NeuronDecider:
+    the reference's Keras 2-layer relu→sigmoid net trained with Adam in
+    numpy (``ml/neural.py``).
 
 Probabilities are NOT rounded here; the ensemble combine rounds to 2
 decimals exactly where the reference does
@@ -43,6 +47,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..plans.query_compiler import quote_ident, range_predicate, sql_number
+
 LABEL = "_label"
 FEATURES = "_features"
 DEFAULT_THRESHOLD = 0.8  # base_decider.py:28
@@ -54,18 +60,6 @@ def _assemble(df: DataFrame, feature_cols: list[str]) -> DataFrame:
     return VectorAssembler(
         inputCols=list(feature_cols), outputCol=FEATURES, handleInvalid="skip"
     ).transform(df)
-
-
-def collect_features(df: DataFrame, feature_cols: list[str]) -> np.ndarray:
-    """Driver-side train-sample collect for ``NumpyDecider.learn``: drop
-    rows with missing features, densify. Raises on an empty sample —
-    silently fitting on nothing yields an all-NaN model that scores
-    every star 0.0 with no indication anything is wrong
-    (superv_base_decider fails loudly there too)."""
-    x = df.select(*feature_cols).na.drop().toPandas().to_numpy(dtype=float)
-    if not len(x):
-        raise ValueError("Decider can't be learned on an empty sample")
-    return x
 
 
 def stack_samples(x1: np.ndarray, x0: np.ndarray, negative: float = 0.0):
@@ -173,11 +167,10 @@ class MLlibDecider(BaseDecider):
 
 class NumpyDecider(BaseDecider):
     """A decider fit driver-side with numpy: the superv_base_decider
-    analog. ``learn`` collects both train samples and keeps
-    ``self.params = self.fit(x1, x0)``; ``evaluate`` scores through one
-    broadcast-parameter pandas UDF over ``array(feature_cols)`` —
-    Arrow-batched, no per-row Python. Subclasses give only ``fit`` and
-    ``proba``."""
+    analog. ``learn`` collects both train samples in one job and keeps
+    ``self.params = self.fit(x1, x0)``. Subclasses give ``fit`` and a
+    scoring path: ``GaussianDecider`` one SQL expression,
+    ``ArrowDecider`` subclasses a pandas UDF."""
 
     params = None
 
@@ -187,18 +180,37 @@ class NumpyDecider(BaseDecider):
         (``x0``) samples, as collected."""
         ...
 
+    def learn(self, searched, others, feature_cols):
+        """One ``toPandas`` of ``searched`` (label 1) then ``others``
+        (label 0), rows with a missing feature dropped, split by label
+        on the driver. Raises on an empty side: silently fitting on
+        nothing yields an all-NaN model that scores every star 0.0 with
+        no indication anything is wrong (superv_base_decider fails
+        loudly there too)."""
+        train = searched.select(*feature_cols, F.lit(1).alias(LABEL)).union(
+            others.select(*feature_cols, F.lit(0).alias(LABEL))
+        )
+        pdf = train.na.drop(subset=feature_cols).toPandas()
+        x1, x0 = (
+            pdf.loc[pdf[LABEL] == label, feature_cols].to_numpy(dtype=float)
+            for label in (1, 0)
+        )
+        if not (len(x1) and len(x0)):
+            raise ValueError("Decider can't be learned on an empty sample")
+        self.params = self.fit(x1, x0)
+        return self
+
+
+class ArrowDecider(NumpyDecider):
+    """A numpy decider scored through one broadcast-parameter pandas UDF
+    over ``array(feature_cols)``: Arrow-batched, no per-row Python.
+    Subclasses give ``fit`` and ``proba``."""
+
     @abc.abstractmethod
     def proba(self, x: np.ndarray) -> np.ndarray:
         """Membership probability of each row of ``x`` under
         ``self.params``."""
         ...
-
-    def learn(self, searched, others, feature_cols):
-        self.params = self.fit(
-            collect_features(searched, feature_cols),
-            collect_features(others, feature_cols),
-        )
-        return self
 
     def evaluate(self, df, feature_cols, out_col="prob"):
         proba = self.proba
@@ -224,7 +236,9 @@ class NumpyDecider(BaseDecider):
 
 class GaussianDecider(NumpyDecider):
     """Closed-form Gaussian discriminant deciders: 'lda' (shared
-    covariance), 'qda' (per-class covariance), 'nb' (diagonal)."""
+    covariance), 'qda' (per-class covariance), 'nb' (diagonal).
+    ``evaluate`` is one Spark SQL expression of the fitted discriminant
+    (:meth:`discriminant_sql`): no Python worker scores a star."""
 
     def __init__(self, kind: str = "lda", threshold: float = DEFAULT_THRESHOLD,
                  reg: float = 1e-6):
@@ -259,16 +273,46 @@ class GaussianDecider(NumpyDecider):
             "logdet": np.array([np.linalg.slogdet(c)[1] for c in covs]),
         }
 
-    def proba(self, x):
+    def discriminant(self):
+        """The fitted log-odds ``g(x) = ll1 - ll0 = c + b·x + xᵀQx`` as
+        ``(c, b, Q)``, where ``ll_k = -(maha_k + logdet_k)/2 + log
+        prior_k``. Each class's Mahalanobis form ``(x-m)ᵀA(x-m)``
+        expands to ``xᵀAx - (A+Aᵀ)m·x + mᵀAm``; the two are folded
+        before any term is written, so LDA's shared inverse leaves Q
+        exactly 0 (a linear score) and NB's diagonal ones a diagonal Q."""
         p = self.params
-        ll = np.empty((len(x), 2))
-        for k in (0, 1):
-            diff = x - p["means"][k]
-            maha = np.einsum("ij,jk,ik->i", diff, p["inv"][k], diff)
-            ll[:, k] = -0.5 * (maha + p["logdet"][k]) + np.log(p["priors"][k])
-        m = ll.max(axis=1, keepdims=True)
-        w = np.exp(ll - m)
-        return w[:, 1] / w.sum(axis=1)
+        (a0, a1), (m0, m1) = p["inv"], p["means"]
+        q = -0.5 * (a1 - a0)
+        b = 0.5 * ((a1 + a1.T) @ m1 - (a0 + a0.T) @ m0)
+        c = (
+            -0.5 * (m1 @ a1 @ m1 - m0 @ a0 @ m0 + p["logdet"][1] - p["logdet"][0])
+            + np.log(p["priors"][1]) - np.log(p["priors"][0])
+        )
+        return c, b, q
+
+    def discriminant_sql(self, feature_cols) -> str:
+        """The membership probability ``1 / (1 + exp(-g))`` as a Spark
+        SQL expression: 0 for a row with a NULL or NaN feature and for a
+        NaN probability (superv_base_decider.py:93-100). Zero terms of
+        ``g`` are left out; ``Q``'s pair (i, j) is one term."""
+        c, b, q = self.discriminant()
+        cols = [quote_ident(f) for f in feature_cols]
+        terms = [sql_number(c)]
+        terms += [f"{sql_number(w)} * {x}" for w, x in zip(b, cols) if w]
+        for i, xi in enumerate(cols):
+            for j in range(i, len(cols)):
+                w = q[i, i] if i == j else q[i, j] + q[j, i]
+                if w:
+                    terms.append(f"{sql_number(w)} * {xi} * {cols[j]}")
+        missing = " OR ".join(f"{x} IS NULL OR isnan({x})" for x in cols)
+        g = " + ".join(terms)
+        return (
+            f"CASE WHEN {missing} THEN 0.0D "
+            f"ELSE nanvl(1.0D / (1.0D + exp(-({g}))), 0.0D) END"
+        )
+
+    def evaluate(self, df, feature_cols, out_col="prob"):
+        return df.withColumn(out_col, F.expr(self.discriminant_sql(feature_cols)))
 
 
 class CustomDecider(BaseDecider):
@@ -283,8 +327,6 @@ class CustomDecider(BaseDecider):
         return self
 
     def evaluate(self, df, feature_cols, out_col="prob"):
-        from ..plans.query_compiler import range_predicate
-
         return df.withColumn(
             out_col, F.when(range_predicate(self.ranges), 1.0).otherwise(0.0)
         )

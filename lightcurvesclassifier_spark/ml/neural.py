@@ -24,7 +24,7 @@ softmax/logistic top and L-BFGS — a different model family):
 Deterministic given the seed (pure numpy — unlike the TF original,
 whose results vary run-to-run without global seeding).
 
-A ``NumpyDecider`` subclass: the fit runs driver-side on the collected
+An ``ArrowDecider`` subclass: the fit runs driver-side on the collected
 train sample (small by the reference's contract — it trains on a Python
 list of star coordinates), and the base's broadcast-parameter pandas
 UDF scores with the weights so the 100 TB scan stays fully distributed
@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .deciders import NumpyDecider, stack_samples
+from .deciders import ArrowDecider, stack_samples
 
 _EPS = 1e-7  # Keras backend epsilon (BCE clip)
 
@@ -111,7 +111,7 @@ def mlp_predict(params: dict, x: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-z2[:, 0]))
 
 
-class NeuronDecider(NumpyDecider):
+class NeuronDecider(ArrowDecider):
     """The reference's NN decider, exact architecture and optimizer.
 
     ``threshold=0.5`` and ``hidden_neurons=2`` are the reference's own

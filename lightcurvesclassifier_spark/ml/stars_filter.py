@@ -250,7 +250,7 @@ _LDA_LL_SQL = """         -0.5 * (((f1 - a1) * (f1 - a1) * i11 + (f2 - a2) * (f2
 def lda_pipeline_sql(feats_sql: str, split_pred: str = "abbe < 0.9",
                      reg: float = 1e-6, threshold: float = 0.5) -> str:
     """DuckDB oracle for the trained-LDA filter pipeline
-    (GaussianDecider 'lda' + filter_stars, ml/deciders.py:225-271): the
+    (GaussianDecider 'lda' + filter_stars, ml/deciders.py:237-315): the
     closed-form fit is plain SQL for d=3 features (mean_mag, std_mag,
     abbe) — per-class means, two-pass pooled scatter with the reg·I
     ridge, Cramer's-rule 3×3 inverse and log-determinant, Mahalanobis

@@ -19,7 +19,7 @@ than substituting a logistic regression (the surrogate this replaces):
 Deterministic given the seed (the CV fold shuffle and SMO pair draws are
 the only stochastic parts).
 
-A ``NumpyDecider`` subclass: driver-numpy fit on the collected train
+An ``ArrowDecider`` subclass: driver-numpy fit on the collected train
 sample (small by the reference's contract), scoring through the base's
 broadcast-parameter pandas UDF — support vectors and dual coefficients
 ship to executors once, the scoring scan stays distributed.
@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .deciders import NumpyDecider, stack_samples
+from .deciders import ArrowDecider, stack_samples
 
 
 def _rbf(a: np.ndarray, b: np.ndarray, gamma: float) -> np.ndarray:
@@ -171,7 +171,7 @@ def platt_fit(dec: np.ndarray, y: np.ndarray, max_iter: int = 100):
     return a, bb
 
 
-class SVCDecider(NumpyDecider):
+class SVCDecider(ArrowDecider):
     """The reference's SVCDec, exact algorithms (SMO + libsvm-style
     5-fold Platt scaling). ``threshold=0.5`` is the reference default."""
 

@@ -19,9 +19,10 @@ the long-running feed shape) and ``lcc filter_stars``
 and decides ``passed`` with the saved filters). The rq/redis work queue
 of the reference is replaced by partition parallelism.
 
-The path stays on the JVM and runs no job that writes nothing: the query
-table is a driver-held ``LocalTableScan`` (``queries_df``; a resume
-collects its unsearched rows once into the same kind of table), and the
+The path stays on the JVM and runs no job that writes nothing but the
+resume's read of the ledger's query ids: the query table is a
+driver-held ``LocalTableScan`` (``queries_df``; a resume filters the
+plan's rows on the driver into the same kind of table), and the
 commit takes its publish key from the staged files' parquet footers and
 reads them back with the ledger's schema (``write_results``). The plan
 builders are Spark SQL expression strings, so building a search costs
@@ -218,7 +219,8 @@ def write_results(
 def unsearched_queries(plan: DataFrame, ledger: DataFrame) -> DataFrame:
     """Resume semantics: planned queries minus already-logged ones
     (getUnsearchedQuery, status_resolver.py:257-264) — a left-anti join
-    on the query key."""
+    on the query key. ``search_and_resume`` applies the same filter on
+    the driver to the plan's collected rows."""
     done = ledger.select("query_id").distinct()
     return plan.join(done, "query_id", "left_anti")
 
@@ -271,26 +273,19 @@ def _input_stamp(features: DataFrame) -> tuple | None:
     return tuple(stamp)
 
 
-def feature_snapshot(features: DataFrame) -> DataFrame:
-    """``features`` written once to local parquet and read back with
-    ``features.schema``: the only way the search path materializes
-    features, for the batch search and the stream start alike.
-
-    A session memo keeps one snapshot per ``(applicationId,
-    features.semanticHash())``. A later call whose plan has the same
-    semantics and whose input files keep their stamp reads the existing
-    snapshot and runs no feature job. A plan that fails
-    :func:`_input_stamp`'s rules is written afresh on every call. A
-    stamp mismatch or a missing directory replaces the snapshot, and the
-    replaced directory is deleted, so a frame read from it earlier stops
-    reading. Paths are local, as in :func:`write_results`."""
+def _snapshot(features: DataFrame) -> tuple[DataFrame, str | None]:
+    """:func:`feature_snapshot` and, for a snapshot the memo does not
+    keep, its directory: the caller's to remove once it is read."""
     spark = features.sparkSession
-    key = (spark.sparkContext.applicationId, features.semanticHash())
     stamp = _input_stamp(features)
+    if stamp is None:
+        path = tempfile.mkdtemp(dir=_snapshot_root())
+        features.write.mode("overwrite").parquet(path)
+        return spark.read.schema(features.schema).parquet(path), path
+    key = (spark.sparkContext.applicationId, features.semanticHash())
     known = _SNAPSHOTS.get(key)
     if (
-        stamp is not None
-        and known is not None
+        known is not None
         and known[1] == stamp
         and os.path.isdir(known[2])
         and features.sameSemantics(known[0])
@@ -302,7 +297,25 @@ def feature_snapshot(features: DataFrame) -> DataFrame:
         if known is not None:
             shutil.rmtree(known[2], ignore_errors=True)
         _SNAPSHOTS[key] = (features, stamp, path)
-    return spark.read.schema(features.schema).parquet(path)
+    return spark.read.schema(features.schema).parquet(path), None
+
+
+def feature_snapshot(features: DataFrame) -> DataFrame:
+    """``features`` written once to local parquet and read back with
+    ``features.schema``: the only way the search path materializes
+    features, for the batch search and the stream start alike.
+
+    A session memo keeps one snapshot per ``(applicationId,
+    features.semanticHash())``. A later call whose plan has the same
+    semantics and whose input files keep their stamp reads the existing
+    snapshot and runs no feature job. A stamp mismatch or a missing
+    directory replaces the snapshot, and the replaced directory is
+    deleted, so a frame read from it earlier stops reading. A plan that
+    fails :func:`_input_stamp`'s rules is written afresh on every call
+    and takes no memo slot; its directory stays until process exit
+    (:func:`search_and_resume` removes the ones it makes once its commit
+    returns). Paths are local, as in :func:`write_results`."""
+    return _snapshot(features)[0]
 
 
 def search_and_resume(
@@ -316,28 +329,28 @@ def search_and_resume(
     """End-to-end driver: resume-filter the plan, run, commit. Returns the
     number of queries actually executed this run.
 
-    The unsearched queries are collected once (they are broadcast
-    anyway) into a driver-held :func:`query_table`, so the resume filter
-    runs once and ``features_fn()`` is called only when a query is left;
-    the queries search its :func:`feature_snapshot`."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        # with a schema, a ledger with nothing published yet reads as empty
-        done = spark.read.schema("query_id long").parquet(ledger_path)
-        todo = unsearched_queries(plan, done)
-    except AnalysisException as e:
-        # ONLY the missing-path case means "first run"; any other read
-        # failure (corrupt footer, permissions) must propagate — treating
-        # it as first-run would re-run and re-publish every query
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        todo = plan
-    rows = todo.select("query_id", "lo", "hi").collect()
+    The resume filter runs on the driver: the plan's (query_id, lo, hi)
+    rows are collected (no job for a driver-held :func:`query_table`),
+    and so is the ledger's ``distinct query_id``; a ledger directory
+    that does not exist yet is a first run, with no read of it at all.
+    A ledger holding nothing published reads as empty (the schema is
+    given); any other read failure propagates. ``features_fn()`` is
+    called only when a query is left, the queries search its
+    :func:`feature_snapshot` in a driver-held :func:`query_table`, and a
+    snapshot the session memo does not keep is removed once the commit
+    returns. Paths are local, as in :func:`write_results`."""
+    rows = plan.select("query_id", "lo", "hi").collect()
+    if rows and os.path.isdir(ledger_path):
+        logged = spark.read.schema("query_id long").parquet(ledger_path)
+        done = {r.query_id for r in logged.distinct().collect()}
+        rows = [r for r in rows if r.query_id not in done]
     if not rows:
         return 0
-    ledger = run_search(
-        feature_snapshot(features_fn()), query_table(spark, rows), passed_ranges
-    )
-    write_results(ledger, ledger_path, passed_path)
+    features, scratch = _snapshot(features_fn())
+    try:
+        ledger = run_search(features, query_table(spark, rows), passed_ranges)
+        write_results(ledger, ledger_path, passed_path)
+    finally:
+        if scratch is not None:
+            shutil.rmtree(scratch, ignore_errors=True)
     return len(rows)

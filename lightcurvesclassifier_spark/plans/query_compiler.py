@@ -100,7 +100,7 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _sql_number(v: float) -> str:
+def sql_number(v: float) -> str:
     """A Spark SQL literal of the type ``F.lit(v)`` gives: an integer as
     INT (BIGINT beyond 32 bits), a float as DOUBLE — the D suffix, since
     a bare ``0.95`` parses as DECIMAL."""
@@ -120,8 +120,8 @@ def range_predicate_sql(
     terms = []
     for col, (lo, hi) in ranges.items():
         c = quote_ident(col)
-        sides = [f"{c} > {_sql_number(lo)}"] if lo is not None else []
-        sides += [f"{c} < {_sql_number(hi)}"] if hi is not None else []
+        sides = [f"{c} > {sql_number(lo)}"] if lo is not None else []
+        sides += [f"{c} < {sql_number(hi)}"] if hi is not None else []
         if sides:
             terms.append("(" + " AND ".join(sides) + ")")
     return " AND ".join(terms) or "TRUE"

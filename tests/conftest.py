@@ -31,3 +31,15 @@ def duck():
         )
     yield con
     con.close()
+
+
+def job_count(spark, group, action):
+    """The number of Spark jobs ``action()`` launches."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are listener events
+    return len(sc.statusTracker().getJobIdsForGroup(group))

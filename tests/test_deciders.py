@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from lightcurvesclassifier_spark.ml.deciders import NumpyDecider, make_decider
 from lightcurvesclassifier_spark.ml.params_estim import ParamsEstimator
 from lightcurvesclassifier_spark.ml.stars_filter import StarsFilter
+from tests.conftest import job_count
 
 RNG = np.random.default_rng(3)
 DIM = 5
@@ -437,3 +438,55 @@ def test_mllib_scoring_survives_prior_connected_components(spark):
     dec.learn(s, o, FEATURES)
     scored = dec.evaluate(s.unionByName(o), FEATURES).toPandas()
     assert len(scored) == s.count() + o.count()
+
+
+def _gaussian_proba(params, x):
+    """The textbook two-class Gaussian posterior: per-class Mahalanobis
+    log-likelihoods, then a max-shifted softmax."""
+    ll = np.empty((len(x), 2))
+    for k in (0, 1):
+        diff = x - params["means"][k]
+        maha = np.einsum("ij,jk,ik->i", diff, params["inv"][k], diff)
+        ll[:, k] = -0.5 * (maha + params["logdet"][k]) + np.log(params["priors"][k])
+    w = np.exp(ll - ll.max(axis=1, keepdims=True))
+    return w[:, 1] / w.sum(axis=1)
+
+
+@pytest.mark.parametrize("name", ["LDADec", "QDADec", "GaussianNBDec"])
+def test_gaussian_decider_scores_on_the_jvm(spark, populations, name):
+    """The SQL discriminant equals the numpy closed form to 1e-12 (and
+    at the 2 decimals the combine rounds to), and scoring runs no Python
+    stage. LDA's score is linear: no product of two features."""
+    searched, others = populations
+    dec = make_decider(name).learn(searched, others, FEATURES)
+    scored = dec.evaluate(searched.unionByName(others), FEATURES)
+    physical = scored._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in physical and "BatchEvalPython" not in physical
+    pdf = scored.toPandas()
+    want = _gaussian_proba(dec.params, pdf[FEATURES].to_numpy(dtype=float))
+    got = pdf["prob"].to_numpy()
+    assert np.abs(got - want).max() <= 1e-12
+    assert (np.round(got, 2) == np.round(want, 2)).all()
+    products = [f"{a}` * `{b}" for a in FEATURES for b in FEATURES]
+    linear = not any(p in dec.discriminant_sql(FEATURES) for p in products)
+    assert linear == (name == "LDADec")
+
+
+@pytest.mark.parametrize("name", ["LDADec", "QDADec", "GaussianNBDec", "SVCDec"])
+def test_numpy_decider_learns_from_one_collect(spark, populations, name):
+    """``NumpyDecider.learn`` collects both samples in one job, and the
+    fitted params equal those fitted on two separate collects."""
+    searched, others = populations
+    dec = make_decider(name)
+    assert isinstance(dec, NumpyDecider)
+    assert job_count(
+        spark, f"learn-{name}", lambda: dec.learn(searched, others, FEATURES)
+    ) == 1
+    x1, x0 = (
+        df.select(*FEATURES).na.drop().toPandas().to_numpy(dtype=float)
+        for df in (searched, others)
+    )
+    want = make_decider(name).fit(x1, x0)
+    assert set(dec.params) == set(want)
+    for k in want:
+        assert np.array_equal(dec.params[k], want[k]), k

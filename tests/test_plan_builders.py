@@ -15,7 +15,7 @@ from pyspark.sql import Window, functions as F
 import __spark_entry__ as entry
 from lightcurvesclassifier_spark.functions.curves import curve_features
 from lightcurvesclassifier_spark.sources import testdata
-from tests.test_searcher import _jobs
+from tests.conftest import job_count
 
 EPOCH_US = 1_704_067_200_000_000
 US_PER_DAY = 86_400_000_000
@@ -41,8 +41,8 @@ def test_repeat_load_reuses_the_inferred_schema(spark, tmp_path):
     _write_events(tmp_path, [(1, 0, 10.0), (1, US_PER_DAY, 11.0)])
     loads = []
     load = lambda: loads.append(testdata.observations(spark, str(tmp_path)))  # noqa: E731
-    inferred = _jobs(spark, "memo-first", load)
-    repeat = _jobs(spark, "memo-repeat", load)
+    inferred = job_count(spark, "memo-first", load)
+    repeat = job_count(spark, "memo-repeat", load)
     first, again = loads
     assert inferred >= 1 and repeat == 0
     assert again.schema == first.schema

@@ -41,8 +41,6 @@ ARROW_OK = {
     "comp_hist_shape",
     "comp_variogram_shape",
     "comp_curves_shape",
-    "stars_filter_pipeline",
-    "lda_holdout",  # Gaussian-decider pandas-UDF scoring + 1-row final
     "ekvi_paa_exact",
     "variogram_slope",
     "embedding_topk",
@@ -70,6 +68,7 @@ SINGLE_OK = {
     "temperature_sample", # per-stratum weight normalization (|strata|)
     "tfidf_top_terms",    # broadcast corpus size N
     "confusion_stats",    # single-row stats
+    "lda_holdout",        # single-row confusion counts of the test fold
     "dq_audit",           # union of one-row check aggregates
     "small_qty_revenue",  # single-row final
     "session_concurrency_sweep",  # bounded day-axis cumulative window

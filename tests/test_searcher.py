@@ -10,13 +10,13 @@ from collections import Counter
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrameReader, functions as F
 
 from lightcurvesclassifier_spark.functions.curves import curve_features
 from lightcurvesclassifier_spark.operators import searcher
 from lightcurvesclassifier_spark.sources import testdata
 from lightcurvesclassifier_spark.streaming.search_stream import start_search_stream
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, job_count
 
 RANGES = {"abbe": (None, 0.95), "std_mag": (35.0, None)}
 
@@ -378,18 +378,6 @@ def test_queries_df_is_driver_local(spark, tmp_path):
     assert not any(os.path.exists(p) for p in paths)
 
 
-def _jobs(spark, group, action):
-    """The number of Spark jobs ``action()`` launches."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are listener events
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_write_results_runs_only_its_writes(spark, tmp_path):
     """The commit launches the jobs of its writes and nothing else: no
     publish-key probe and no schema inference when reading the staged
@@ -397,17 +385,17 @@ def test_write_results_runs_only_its_writes(spark, tmp_path):
     plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
     ledger = searcher.run_search(_features(spark), plan, RANGES)
     p = lambda k: str(tmp_path / k)  # noqa: E731
-    plain = _jobs(spark, "plain-write", lambda: ledger.write.parquet(p("plain")))
-    passed_slice = _jobs(
+    plain = job_count(spark, "plain-write", lambda: ledger.write.parquet(p("plain")))
+    passed_slice = job_count(
         spark,
         "plain-passed-write",
         lambda: spark.read.schema(ledger.schema).parquet(p("plain"))
         .filter(F.col("passed")).write.parquet(p("plain_passed")),
     )
     assert plain > 0 and passed_slice > 0
-    commit = _jobs(spark, "commit", lambda: searcher.write_results(ledger, p("ledger")))
+    commit = job_count(spark, "commit", lambda: searcher.write_results(ledger, p("ledger")))
     assert commit == plain
-    commit_passed = _jobs(
+    commit_passed = job_count(
         spark,
         "commit-passed",
         lambda: searcher.write_results(ledger, p("ledger2"), p("passed")),
@@ -481,7 +469,7 @@ def test_feature_snapshot_reused_until_inputs_change(spark, tmp_path):
     assert search("l1") == n_stars
     assert search("l2") == 0
     snapshot = lambda: searcher.feature_snapshot(counted())  # noqa: E731
-    assert _jobs(spark, "snapshot-hit", snapshot) == 0
+    assert job_count(spark, "snapshot-hit", snapshot) == 0
 
     qdir = tmp_path / "queries_in"
     qdir.mkdir()
@@ -525,10 +513,66 @@ def test_feature_snapshot_never_reuses_unsafe_plans(spark, leaf):
     assert searcher._input_stamp(make()) is None
     snaps = []
     for i in range(2):
-        assert _jobs(
+        assert job_count(
             spark, f"unsafe-{leaf}-{i}",
             lambda: snaps.append(searcher.feature_snapshot(make())),
         ) > 0
     first, second = (set(s.inputFiles()) for s in snaps)
     assert first.isdisjoint(second)
     assert _rows(snaps[1]) == _rows(make())
+
+
+def test_zero_query_resume_runs_two_jobs(spark, tmp_path, monkeypatch):
+    """A resume with nothing left reads the ledger's query ids once: two
+    jobs (the distinct's shuffle and its collect), no anti-join and no
+    feature job. A first run into a ledger directory that does not
+    exist yet reads no ledger."""
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
+    ledger_path = str(tmp_path / "ledger")
+    run = lambda: searcher.search_and_resume(  # noqa: E731
+        spark, lambda: _features(spark), plan, RANGES, ledger_path
+    )
+    parquet = DataFrameReader.parquet
+
+    def no_ledger_read(self, *paths, **options):
+        assert ledger_path not in paths, "a first run read the ledger"
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_ledger_read)
+    assert run() == 3
+    monkeypatch.undo()
+    n = []
+    assert job_count(spark, "zero-query-resume", lambda: n.append(run())) == 2
+    assert n == [0]
+
+
+def test_resume_propagates_ledger_read_errors(spark, tmp_path):
+    """A ledger that cannot be read is an error, not a first run: a run
+    that read it as empty would re-run and re-publish every query."""
+    plan = searcher.queries_df(spark, [(0, 4)])
+    ledger_path = tmp_path / "ledger"
+    ledger_path.mkdir()
+    (ledger_path / "q0-part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        searcher.search_and_resume(
+            spark, lambda: _features(spark), plan, RANGES, str(ledger_path)
+        )
+
+
+def test_unsafe_snapshots_leave_nothing_behind(spark, tmp_path):
+    """Searches over a Python-list frame (an RDD leaf: a new
+    ``semanticHash`` on every call) take no memo slot, and each removes
+    its snapshot directory once its commit returns."""
+    root = searcher._snapshot_root()
+    before, memo = set(os.listdir(root)), dict(searcher._SNAPSHOTS)
+    plan = searcher.queries_df(spark, [(1, 2), (1000, 2000)])
+    for i in range(3):
+        feats = spark.createDataFrame(
+            [(1, 0.5), (2, 0.8)], "star_id long, abbe double"
+        )
+        assert searcher.search_and_resume(
+            spark, lambda: feats, plan, {"abbe": (None, 0.9)},
+            str(tmp_path / f"ledger{i}"),
+        ) == 2
+    assert set(os.listdir(root)) == before
+    assert searcher._SNAPSHOTS == memo
