@@ -96,7 +96,13 @@ class StarsFilter:
         out = self.predictions(df)
         prob_cols = [self._prob_col(d, i) for i, d in enumerate(self.deciders)]
         out = combine_probabilities(out, prob_cols, meth)
-        return out.filter(F.col("prob") >= F.lit(self.mean_threshold()))
+        # A Filter on ``prob`` would be pushed below the projection with
+        # every score inlined, evaluating each decider twice per star; a
+        # generator over a one-element array is not pushed down.
+        thr = F.lit(self.mean_threshold())
+        return out.withColumn(
+            "prob", F.explode(F.filter(F.array("prob"), lambda p: p >= thr))
+        )
 
     def _positive_counts(self, df: DataFrame, thresholds) -> tuple[int, list[int]]:
         """Row count and, per threshold, how many rows' mean-combined

@@ -662,8 +662,14 @@ sorted AS (
 ),
 pv_src AS (SELECT star_id, vals_s AS vals, m FROM sorted),
 {_paa_list_sql("pv", "pv_src", bins)},
+-- numpy's log10(0) is -inf, where DuckDB's raises: a curve of fewer
+-- observations than bins repeats PAA frames, whose zero-lag pairs make
+-- a zero first bin. The -inf turns the normalized series into NaN,
+-- which both engines letter as the last letter (kernels.variogram)
 va AS (
-  SELECT star_id, list_transform(paa, v -> log10(v)) AS vals,
+  SELECT star_id,
+         list_transform(paa, v -> CASE WHEN v = 0 THEN CAST('-inf' AS DOUBLE)
+                                       ELSE log10(v) END) AS vals,
          len(paa) AS m
   FROM pv
 ),

@@ -9,7 +9,10 @@ file-source stream of query batches drained by ``foreachBatch``
 (SURVEY.md §2.6): each micro-batch runs the same declarative search
 plan and the same commit as the batch path (operators/searcher.py),
 giving exactly-once per-batch semantics via the checkpoint instead of
-redis bookkeeping. The features are taken once per start, as the
+redis bookkeeping. The reference defines no batch boundaries either, so
+a start drains its whole backlog of query files in one micro-batch and
+pays the per-batch jobs (collect, commit, offset and commit logs) once,
+not once per file. The features are taken once per start, as the
 search's session snapshot (``searcher.feature_snapshot``), so a start
 over unchanged inputs runs no feature job; restart the stream to refresh
 them.
@@ -26,14 +29,11 @@ from ..operators import searcher
 
 
 def query_stream(spark: SparkSession, queries_dir: str) -> DataFrame:
-    """File-source stream: each CSV dropped into ``queries_dir`` is a
-    batch of (query_id, lo, hi) queries — the enqueue side of the
-    reference's work queue."""
-    return (
-        spark.readStream.schema(searcher.QUERY_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .csv(queries_dir)
-    )
+    """File-source stream: each CSV dropped into ``queries_dir`` holds
+    (query_id, lo, hi) queries — the enqueue side of the reference's
+    work queue. No rate limit is set, so one micro-batch takes every file
+    present when it is planned."""
+    return spark.readStream.schema(searcher.QUERY_SCHEMA).csv(queries_dir)
 
 
 def start_search_stream(
@@ -54,13 +54,18 @@ def start_search_stream(
     ledger nor the checkpoint, so a glob over the ledger's batch
     directories reads ledger rows only.
 
-    ``foreachBatch`` collects the batch's (small, broadcast) query rows
-    into a driver-held table, then runs the batch plan and its commit,
-    ``searcher.write_results``, into ``<ledger_path>/batch_id=N``; read
-    the ledger with ``spark.read.parquet(ledger_path)``. The checkpoint
-    makes restarts resume from the last committed batch (the reference's
-    redis status ledger role); a batch replayed after a crash before its
-    checkpoint commit replaces its earlier copy.
+    A start drains its backlog in one micro-batch: every query file
+    present when it plans the batch. ``foreachBatch`` collects the
+    batch's (small, broadcast) query rows into a driver-held table, then
+    runs the batch plan and its commit, ``searcher.write_results``, into
+    ``<ledger_path>/batch_id=N``; read the ledger with
+    ``spark.read.parquet(ledger_path)``. The checkpoint makes restarts
+    resume from the last committed batch (the reference's redis status
+    ledger role). The file source logs each batch's file list under
+    ``<checkpoint>/sources/0/N`` before the batch runs, so a batch
+    replayed after a crash before its checkpoint commit covers exactly
+    its logged files and replaces its earlier copy; files dropped since
+    go to the next batch.
     """
     snapshot = searcher.feature_snapshot(features_fn())
     stream = query_stream(spark, queries_dir)

@@ -104,3 +104,51 @@ def test_curves_noslide_word_path_matches_kernel_path(spark, curve_arrays):
         days_per_bin=2.0, alphabet_size=10, slide=0,
     )._jdf.queryExecution().optimizedPlan().toString()
     assert "pythonUDF" in plan or "word" in plan
+
+
+def test_variogram_word_of_a_short_curve_matches_mirror(spark, duck):
+    """A curve with fewer observations than bins repeats PAA frames, so
+    its variogram has zero-lag pairs and a zero first bin: numpy's
+    log10 gives -inf, the normalized series is all NaN and every letter
+    is the last one. The DuckDB mirror used to raise on log10(0); it
+    now takes -inf too and scores the star like the engine."""
+    rng = np.random.default_rng(5)
+    curves = {}
+    for sid, n in [(0, 30), (1, 25), (2, 40), (3, 5), (4, 35)]:
+        t = np.sort(rng.uniform(0.0, 60.0, n))
+        curves[sid] = (t, 12.0 + np.sin(t / (sid + 1.0)) + rng.normal(0.0, 0.1, n))
+    params = dict(bins=10, alphabet_size=10)
+    series = comparative._SERIES_FNS["variogram_shape"](*curves[3], 10)
+    assert np.isneginf(series[0])
+    assert sax_mod.sax_word(series, 10, 10)[0] == "j" * 10
+
+    df = spark.createDataFrame(
+        [(sid, t.tolist(), m.tolist()) for sid, (t, m) in curves.items()],
+        "star_id long, time array<double>, mag array<double>",
+    )
+    templates = df.filter(F.col("star_id").isin([0, 1, 2]))
+    scores = comparative.comparative_scores(df, templates, "variogram_shape", **params)
+    got = {
+        r["star_id"]: r["feature"]
+        for r in comparative.reduce_scores(scores, "best2", n_templates=3)
+        .select("star_id", F.round("feature", 6).alias("feature"))
+        .collect()
+    }
+    obs = [
+        (sid, float(ti), float(mi))
+        for sid, (t, m) in curves.items()
+        for ti, mi in zip(t, m)
+    ]
+    duck.execute("CREATE OR REPLACE TEMP TABLE _vg_short(star_id BIGINT, t DOUBLE, mag DOUBLE)")
+    duck.executemany("INSERT INTO _vg_short VALUES (?, ?, ?)", obs)
+    want = dict(
+        duck.execute(
+            comparative.comparative_variogram_sql(
+                "SELECT * FROM _vg_short", [0, 1, 2], meth="best2", **params
+            )
+        ).fetchall()
+    )
+    assert set(got) == set(want) == set(curves)
+    for sid in curves:
+        assert got[sid] == want[sid], sid
+    assert got == _numpy_feature(curves, "variogram_shape", "best2", params)

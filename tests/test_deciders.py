@@ -490,3 +490,32 @@ def test_numpy_decider_learns_from_one_collect(spark, populations, name):
     assert set(dec.params) == set(want)
     for k in want:
         assert np.array_equal(dec.params[k], want[k]), k
+
+
+@pytest.mark.parametrize("pass_method", ["all", "mean", "one"])
+def test_filter_stars_scores_each_star_once(spark, populations, pass_method):
+    """The threshold is not pushed below the scoring projection: the
+    optimized plan of ``filter_stars`` holds one ``EXP(`` per Gaussian
+    decider, and its rows and ``prob`` equal those of a plain filter on
+    the combined probability, bit for bit."""
+    from lightcurvesclassifier_spark.ml.stars_filter import (
+        _PASS_METHOD,
+        combine_probabilities,
+    )
+
+    searched, others = populations
+    filt = StarsFilter([make_decider("LDADec"), make_decider("QDADec")], FEATURES)
+    filt.learn(searched, others)
+    df = searched.unionByName(others).coalesce(1)  # one scan leaf
+    out = filt.filter_stars(df, pass_method=pass_method)
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("EXP(") == len(filt.deciders)
+    prob_cols = [c for c in out.columns if c.startswith("prob_")]
+    plain = combine_probabilities(
+        filt.predictions(df), prob_cols, _PASS_METHOD[pass_method]
+    ).filter(F.col("prob") >= F.lit(filt.mean_threshold()))
+    assert out.columns == plain.columns
+    got, want = (
+        d.toPandas().sort_values(FEATURES).reset_index(drop=True) for d in (out, plain)
+    )
+    assert len(got) > 0 and got.equals(want)

@@ -113,36 +113,79 @@ def test_streaming_search(spark, tmp_path):
         f for _, _, files in os.walk(ckpt) for f in files if f.endswith(".parquet")
     ]
 
-    # restart with one more file: checkpoint resumes, old batches not rerun
+    # the start drained its two-file backlog in one batch
+    assert os.listdir(ledger_path) == ["batch_id=0"]
+
+    # restart with two more files: checkpoint resumes, old batches not
+    # rerun, and both new files form one batch
     (qdir / "batch3.csv").write_text("3,0,14\n")
+    (qdir / "batch4.csv").write_text("4,5,9\n")
     q2 = start_search_stream(
         spark, str(qdir), features, RANGES, ledger_path, ckpt
     )
     q2.awaitTermination(120)
     after = spark.read.parquet(ledger_path)
-    assert after.select("query_id").distinct().count() == 4
+    assert after.select("query_id").distinct().count() == 5
     assert after.filter(F.col("query_id") == 0).count() == ledger.filter(
         F.col("query_id") == 0
     ).count()
+    assert sorted(os.listdir(ledger_path)) == ["batch_id=0", "batch_id=1"]
 
-    # crash after the last batch's commit but before its checkpoint
-    # commit: the restart replays it, and the replay replaces its copy
+    # crash after the two-file batch's commit but before its checkpoint
+    # commit, then one more file arrives: the restart replays exactly the
+    # batch's logged files, replacing its copy, and the new file goes to
+    # the next batch
     last = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
+    assert last == 1
     bdir = os.path.join(ledger_path, f"batch_id={last}")
     before_files = sorted(os.listdir(bdir))
     before = _rows(spark.read.parquet(bdir))
+    assert {r[0] for r in before} == {3, 4}
     for name in (str(last), f".{last}.crc"):
         os.remove(os.path.join(ckpt, "commits", name))
+    (qdir / "batch5.csv").write_text("5,10,14\n")
     q3 = start_search_stream(
         spark, str(qdir), features, RANGES, ledger_path, ckpt
     )
     q3.awaitTermination(120)
     replayed_files = sorted(os.listdir(bdir))
-    assert replayed_files != before_files  # the batch did run again
+    assert not set(replayed_files) & set(before_files)  # the batch did run again
     assert len(replayed_files) == len(before_files)
     assert _rows(spark.read.parquet(bdir)) == before
+    nxt = spark.read.parquet(os.path.join(ledger_path, f"batch_id={last + 1}"))
+    assert {r["query_id"] for r in nxt.select("query_id").collect()} == {5}
+    assert sorted(os.listdir(ledger_path)) == [
+        "batch_id=0", "batch_id=1", "batch_id=2"
+    ]
     # every start took its own feature snapshot
     assert len(starts) == 3
+
+
+def test_stream_backlog_costs_one_batch(spark, tmp_path):
+    """With a warm feature snapshot, a start over a three-file backlog
+    runs one micro-batch and launches as many jobs as a start over one
+    file. Stream execution runs its batches under the run id as job
+    group."""
+    sc = spark.sparkContext
+    searcher.feature_snapshot(_features(spark))  # warm the session snapshot
+    jobs = {}
+    for n_files in (1, 3):
+        qdir = tmp_path / f"queries_{n_files}"
+        qdir.mkdir()
+        for i in range(n_files):
+            (qdir / f"batch{i}.csv").write_text(f"{i},{5 * i},{5 * i + 4}\n")
+        ledger_path = str(tmp_path / f"ledger_{n_files}")
+        q = start_search_stream(
+            spark, str(qdir), lambda: _features(spark), RANGES, ledger_path,
+            str(tmp_path / f"ckpt_{n_files}"),
+        )
+        q.awaitTermination(120)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[n_files] = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+        assert os.listdir(ledger_path) == ["batch_id=0"]
+        got = spark.read.parquet(ledger_path).select("query_id").distinct().count()
+        assert got == n_files
+    assert jobs[1] > 0 and jobs[3] == jobs[1], jobs
 
 
 def test_unsearched_queries_anti_join(spark):
@@ -297,7 +340,7 @@ def test_search_and_stream_batch_compute_features_once(spark, tmp_path):
         spark, str(qdir), counted, RANGES, ledger_path, str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
-    assert len(os.listdir(ledger_path)) == 2  # one batch per query file
+    assert len(os.listdir(ledger_path)) == 1  # one batch per start's backlog
     assert len(calls) == 1 and acc.value == n_stars
 
 
