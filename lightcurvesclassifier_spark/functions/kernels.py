@@ -149,6 +149,13 @@ def variogram(
     ``bins``; enumerate all ordered pairs i≠j (both directions — lags are
     double-counted, faithfully to the reference); lag = |x_i-x_j|, value =
     (y_i-y_j)²; sort by lag; PAA both series to ``bins``; log10/log10.
+
+    Short-curve contract, faithful to the reference's ``np.log10``: a
+    curve of at most ``bins/2`` observations repeats every PAA point, so
+    zero lags fill the first lag bin and its first point is
+    ``(-inf, -inf)`` (numpy warns of a divide by zero). Its SAX word is
+    then all last letters (``jjjjjjjjjj`` at bins=10, alphabet 10)
+    whatever the curve's shape; the star is kept, not dropped.
     """
     if not bins:
         bins = 20

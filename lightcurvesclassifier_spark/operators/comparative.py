@@ -104,6 +104,12 @@ def comparative_scores(
     keeps per-pair raw-curve access, because it re-SAXes windows of the
     longer curve with the pair-dependent word size
     (curves_shape_descr.py:95-150).
+
+    ``variogram_shape`` keeps the reference's short-curve behaviour (see
+    ``kernels.variogram``): a star with at most ``bins/2`` observations
+    gets the all-last-letter word, so its template scores say nothing
+    about its shape. Only curves with fewer than 2 distinct timestamps
+    are dropped.
     """
     word_path = kind in _SERIES_FNS or (
         kind == "curves_shape" and not params.get("slide", 0.25)

@@ -3,7 +3,9 @@ semantics, and the Structured Streaming work-queue analog (mirrors the
 reference's integration test shape, test/intergation/test_searcher.py:13-40 —
 N queries in, ledger rows per query out, passed stars > 0)."""
 
+import errno
 import os
+import re
 import shutil
 from collections import Counter
 
@@ -14,6 +16,7 @@ from pyspark.sql import DataFrameReader, functions as F
 
 from lightcurvesclassifier_spark.functions.curves import curve_features
 from lightcurvesclassifier_spark.operators import searcher
+from lightcurvesclassifier_spark.plans.query_compiler import range_predicate_sql
 from lightcurvesclassifier_spark.sources import testdata
 from lightcurvesclassifier_spark.streaming.search_stream import start_search_stream
 from tests.conftest import SF_SMOKE, job_count
@@ -364,9 +367,10 @@ def test_search_crash_resumes_to_same_ledger_and_passed(
     spark, tmp_path, monkeypatch, crash_at
 ):
     """Fault injection at each publish step: the run crashes after
-    staging (before the passed publish) or after the passed publish
-    (before the ledger publish). The rerun must leave ledger and passed
-    rows equal, as multisets, to those of a run that did not crash."""
+    staging and its journal (before the passed publish) or after the
+    passed publish (before the ledger publish). The rerun completes the
+    journal instead of searching again, and leaves ledger and passed rows
+    equal, as multisets, to those of a run that did not crash."""
     plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
     feats = lambda: _features(spark)  # noqa: E731
     paths = {k: str(tmp_path / k) for k in ("ledger", "passed", "want_l", "want_p")}
@@ -376,11 +380,11 @@ def test_search_crash_resumes_to_same_ledger_and_passed(
 
     publish, calls = searcher._publish, []
 
-    def crashing(*args):
-        calls.append(args)
+    def crashing(ops):
+        calls.append(ops)
         if len(calls) == {"staged": 1, "passed_published": 2}[crash_at]:
             raise RuntimeError("injected crash")
-        publish(*args)
+        publish(ops)
 
     monkeypatch.setattr(searcher, "_publish", crashing)
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -388,18 +392,105 @@ def test_search_crash_resumes_to_same_ledger_and_passed(
             spark, feats, plan, RANGES, paths["ledger"], paths["passed"]
         )
     monkeypatch.setattr(searcher, "_publish", publish)
+    assert _journals(paths["ledger"])
     n = searcher.search_and_resume(
         spark, feats, plan, RANGES, paths["ledger"], paths["passed"]
     )
-    assert n == 3
+    assert n == 0
     read = lambda k: _rows(spark.read.parquet(paths[k]))  # noqa: E731
     assert read("ledger") == read("want_l")
     assert read("passed") == read("want_p") and read("passed")
     for k in ("ledger", "passed"):
         assert not os.path.exists(os.path.join(paths[k], "_staging"))
-    assert searcher.search_and_resume(
-        spark, feats, plan, RANGES, paths["ledger"], paths["passed"]
-    ) == 0
+    assert not _journals(paths["ledger"])
+
+
+def _journals(ledger_path):
+    return [n for n in os.listdir(ledger_path) if n.startswith("_commit-")]
+
+
+class _Crashing:
+    """A stand-in for a module whose ``names`` count their calls in a
+    shared ``counter`` and raise at call number ``counter["at"]``."""
+
+    def __init__(self, module, names, counter):
+        self._module, self._names, self._counter = module, names, counter
+
+    def __getattr__(self, name):
+        attr = getattr(self._module, name)
+        if name not in self._names:
+            return attr
+
+        def counted(*args, **kwargs):
+            self._counter["calls"] += 1
+            if self._counter["calls"] == self._counter["at"]:
+                raise RuntimeError("injected crash")
+            return attr(*args, **kwargs)
+
+        return counted
+
+
+def _crash_searcher_at(monkeypatch, at):
+    """Make the searcher's ``os.link``, ``os.replace``, ``os.remove`` and
+    ``shutil.rmtree`` crash at call number ``at`` (never for 0); returns
+    the call counter."""
+    counter = {"calls": 0, "at": at}
+    monkeypatch.setattr(searcher, "os", _Crashing(os, {"link", "replace", "remove"}, counter))
+    monkeypatch.setattr(searcher, "shutil", _Crashing(shutil, {"rmtree"}, counter))
+    return counter
+
+
+@pytest.mark.parametrize("commit", ["search", "replay"])
+def test_commit_crash_at_every_operation_rolls_forward(
+    spark, tmp_path, monkeypatch, commit
+):
+    """Crash one commit at each of its links, renames and removals in
+    turn, then rerun: the ledger and the passed store equal a clean
+    run's as multisets, with no staging directory or journal left. The
+    search commit is a resumable run over features in three partitions,
+    so a crash inside the ledger's renames leaves some of its queries
+    unpublished: a rerun that searched them again, rather than
+    completing the journal, would publish their passed rows twice. The
+    replay commit publishes over an earlier copy of the same batch, so
+    it also removes what that copy published."""
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9), (40, 44), (2000, 3000)])
+    feats = lambda: _features(spark).repartitionByRange(3, "star_id")  # noqa: E731
+    batch = searcher.run_search(searcher.feature_snapshot(feats()), plan, RANGES)
+
+    def paths(name):
+        return str(tmp_path / name / "ledger"), str(tmp_path / name / "passed")
+
+    def earlier(name):  # what the commit publishes over
+        if commit == "replay":
+            searcher.write_results(batch, *paths(name))
+
+    def run(name):
+        if commit == "search":
+            searcher.search_and_resume(spark, feats, plan, RANGES, *paths(name))
+        else:
+            searcher.write_results(batch, *paths(name))
+        return paths(name)
+
+    read = lambda path: _rows(spark.read.parquet(path))  # noqa: E731
+    earlier("clean")
+    counter = _crash_searcher_at(monkeypatch, 0)
+    want = [read(p) for p in run("clean")]
+    n_ops = counter["calls"]
+    monkeypatch.undo()
+    names = os.listdir(str(tmp_path / "clean" / "ledger"))
+    assert len([n for n in names if n.endswith(".parquet")]) >= 4, names
+    assert want[1] and n_ops >= 8, n_ops
+    for at in range(1, n_ops + 1):
+        earlier(f"crash{at}")
+        _crash_searcher_at(monkeypatch, at)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run(f"crash{at}")
+        monkeypatch.undo()
+        ledger, passed = run(f"crash{at}")
+        assert [read(ledger), read(passed)] == want, at
+        assert not _journals(ledger)
+        for path in (ledger, passed):
+            assert not os.path.exists(os.path.join(path, "_staging"))
 
 
 def test_queries_df_is_driver_local(spark, tmp_path):
@@ -422,20 +513,15 @@ def test_queries_df_is_driver_local(spark, tmp_path):
 
 
 def test_write_results_runs_only_its_writes(spark, tmp_path):
-    """The commit launches the jobs of its writes and nothing else: no
-    publish-key probe and no schema inference when reading the staged
-    ledger back for the passed slice."""
+    """The commit launches the jobs of its write and nothing else: no
+    publish-key probe, no read-back of the staged ledger, and the passed
+    store costs no job of its own, so a commit with a passed store runs
+    as many jobs as a plain write of the ledger."""
     plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
     ledger = searcher.run_search(_features(spark), plan, RANGES)
     p = lambda k: str(tmp_path / k)  # noqa: E731
     plain = job_count(spark, "plain-write", lambda: ledger.write.parquet(p("plain")))
-    passed_slice = job_count(
-        spark,
-        "plain-passed-write",
-        lambda: spark.read.schema(ledger.schema).parquet(p("plain"))
-        .filter(F.col("passed")).write.parquet(p("plain_passed")),
-    )
-    assert plain > 0 and passed_slice > 0
+    assert plain > 0
     commit = job_count(spark, "commit", lambda: searcher.write_results(ledger, p("ledger")))
     assert commit == plain
     commit_passed = job_count(
@@ -443,7 +529,10 @@ def test_write_results_runs_only_its_writes(spark, tmp_path):
         "commit-passed",
         lambda: searcher.write_results(ledger, p("ledger2"), p("passed")),
     )
-    assert commit_passed == plain + passed_slice
+    assert commit_passed == plain
+    assert _rows(spark.read.parquet(p("passed"))) == _rows(
+        spark.read.parquet(p("plain")).filter("passed")
+    )
 
 
 def test_publish_key_is_min_over_all_part_files(spark, tmp_path):
@@ -462,7 +551,14 @@ def test_publish_key_is_min_over_all_part_files(spark, tmp_path):
         assert names and all(n.startswith("q0-") for n in names), names
     published = spark.read.parquet(ledger_path)
     assert published.agg(F.min("query_id")).first()[0] == 0
-    assert len(published.inputFiles()) == 3
+    assert _rows(published) == _rows(ledger)
+    # the passed store's files are links of the ledger's passed-flag files
+    in_ledger, in_passed = (
+        {n for n in os.listdir(path) if n.endswith(".parquet")}
+        for path in (ledger_path, passed_path)
+    )
+    assert in_passed and in_passed < in_ledger
+    assert all(n.startswith("q0-passed-") for n in in_passed)
 
     rows = pa.table({"query_id": pa.array([9, 8, 7, 3, 5, 6], pa.int64())})
     staging = tmp_path / "staging"
@@ -619,3 +715,195 @@ def test_unsafe_snapshots_leave_nothing_behind(spark, tmp_path):
         ) == 2
     assert set(os.listdir(root)) == before
     assert searcher._SNAPSHOTS == memo
+
+
+def _union_window_ledger(found, queries, key="star_id"):
+    """The status ledger as it was built before the query-preserving
+    join: the found rows, unioned with one found=false stub per query,
+    and a ``max(found)`` window over query_id that keeps a stub only for
+    a query with no found row."""
+    types = {f.name: f.dataType.simpleString() for f in found.schema.fields}
+    cols = [key] + [c for c in types if c not in (key, "query_id", "passed")]
+    matched = found.selectExpr("query_id", *cols, "TRUE AS found", "passed")
+    stubs = queries.selectExpr(
+        "query_id",
+        *[f"CAST(NULL AS {types[c]}) AS {c}" for c in cols],
+        "FALSE AS found",
+        "FALSE AS passed",
+    )
+    return (
+        matched.unionByName(stubs)
+        .withColumn("_any_found", F.expr("max(found) OVER (PARTITION BY query_id)"))
+        .filter("found OR NOT _any_found")
+        .drop("_any_found")
+    )
+
+
+def _union_window_search(features, queries, ranges):
+    """``run_search`` as it was: an inner broadcast range join, then the
+    union-and-window ledger."""
+    found = features.join(
+        F.broadcast(queries), F.expr("star_id >= lo AND star_id <= hi"), "inner"
+    ).selectExpr("query_id", *features.columns, f"{range_predicate_sql(ranges)} AS passed")
+    return _union_window_ledger(found, queries)
+
+
+def _small_features(spark):
+    return spark.createDataFrame(
+        [(1, None, 40.0), (2, 0.5, 40.0), (3, 0.5, None), (4, 0.99, 40.0)],
+        "star_id long, abbe double, std_mag double",
+    )
+
+
+SEARCH_CASES = {
+    "overlapping_ranges": (None, [(0, 7), (5, 14), (3, 3)]),
+    "ranges_past_the_last_star": (None, [(0, 4), (995, 1010), (10**6, 2 * 10**6)]),
+    "empty_features": ("empty", [(0, 4), (5, 9)]),
+    "null_feature_star": ("small", [(1, 3), (2, 9), (7, 8)]),
+    "equal_ranges": (None, [(0, 4), (0, 4), (2000, 3000)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(SEARCH_CASES))
+def test_run_search_matches_union_window_ledger(spark, case):
+    """The query-preserving range join gives the rows, column names and
+    types of the union-and-window ledger it replaced."""
+    kind, ranges = SEARCH_CASES[case]
+    feats = _features(spark)
+    if kind == "empty":
+        feats = feats.limit(0)
+    elif kind == "small":
+        feats = _small_features(spark)
+    plan = searcher.queries_df(spark, ranges)
+    new = searcher.run_search(feats, plan, RANGES)
+    old = _union_window_search(feats, plan, RANGES)
+    assert new.schema.simpleString() == old.schema.simpleString()
+    assert _rows(new) == _rows(old)
+    assert {r.query_id for r in new.select("query_id").collect()} == set(range(len(ranges)))
+
+
+def test_status_ledger_matches_union_window_ledger(spark):
+    """The CLI's attribution (query, star) rows joined to per-star flags,
+    some queries finding no star: ``queries LEFT JOIN found`` gives the
+    rows of the union-and-window ledger."""
+    flags = spark.createDataFrame(
+        [(1, 0.5, True), (2, None, False), (3, 0.9, False)],
+        "star_id long, abbe double, passed boolean",
+    )
+    pairs = spark.createDataFrame(
+        [(0, 1), (0, 2), (2, 2), (2, 3), (4, 1)], "query_id long, star_id long"
+    )
+    found = pairs.join(flags, "star_id")
+    queries = spark.range(6).toDF("query_id")
+    new = searcher.status_ledger(found, queries)
+    old = _union_window_ledger(found, queries)
+    assert new.schema.simpleString() == old.schema.simpleString()
+    assert _rows(new) == _rows(old)
+    assert sorted(r.query_id for r in new.filter("NOT found").collect()) == [1, 3, 5]
+
+
+def test_run_search_plans_one_broadcast_range_join(spark):
+    """The ledger plan is one ``BroadcastNestedLoopJoin BuildLeft,
+    LeftOuter``: no shuffle exchange and no window, which the
+    union-and-window form needs. The features are a snapshot, whose plan
+    is one scan."""
+    feats = searcher.feature_snapshot(_features(spark))
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9), (2000, 3000)])
+
+    def physical(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    new = physical(searcher.run_search(feats, plan, RANGES))
+    assert re.search(r"BroadcastNestedLoopJoin BuildLeft, LeftOuter", new), new
+    assert "BroadcastExchange" in new
+    assert not re.search(r"(?<!Broadcast)Exchange|Window", new), new
+    old = physical(_union_window_search(feats, plan, RANGES))
+    assert re.search(r"(?<!Broadcast)Exchange", old) and "Window" in old
+
+
+def _staged_dirs(monkeypatch, ledger_path):
+    """Record the entries of the staging directory at each commit's
+    publish."""
+    seen, complete = [], searcher._complete
+
+    def spy(journal):
+        seen.append(sorted(os.listdir(os.path.join(ledger_path, "_staging"))))
+        complete(journal)
+
+    monkeypatch.setattr(searcher, "_complete", spy)
+    return seen
+
+
+def test_null_passed_star_stays_in_ledger_not_in_passed(spark, tmp_path):
+    """A found star whose predicate reads a NULL feature has ``passed``
+    NULL: it is a ledger row, and the passed store does not hold it."""
+    ledger_path, passed_path = str(tmp_path / "ledger"), str(tmp_path / "passed")
+    plan = searcher.queries_df(spark, [(1, 4)])
+    searcher.write_results(
+        searcher.run_search(_small_features(spark), plan, RANGES), ledger_path, passed_path
+    )
+    ledger = {r.star_id: r.passed for r in spark.read.parquet(ledger_path).collect()}
+    assert ledger == {1: None, 2: True, 3: None, 4: False}
+    assert [r.star_id for r in spark.read.parquet(passed_path).collect()] == [2]
+
+
+def test_commit_without_passed_rows(spark, tmp_path, monkeypatch):
+    """A commit with no passed row stages no ``_passed=true`` directory;
+    the passed store gets a file of no row and reads back with the
+    ledger's schema."""
+    ledger_path, passed_path = str(tmp_path / "ledger"), str(tmp_path / "passed")
+    seen = _staged_dirs(monkeypatch, ledger_path)
+    ledger = searcher.run_search(
+        _features(spark), searcher.queries_df(spark, [(0, 4), (2000, 3000)]),
+        {"abbe": (None, -1.0)},
+    )
+    searcher.write_results(ledger, ledger_path, passed_path)
+    assert "_passed=false" in seen[0] and "_passed=true" not in seen[0]
+    passed = spark.read.parquet(passed_path)
+    assert passed.count() == 0
+    assert passed.schema.simpleString() == ledger.schema.simpleString()
+    assert spark.read.parquet(ledger_path).count() == ledger.count() > 1
+    assert not os.path.exists(os.path.join(ledger_path, "_staging"))
+
+
+@pytest.mark.parametrize("with_passed", [False, True])
+def test_empty_ledger_commit(spark, tmp_path, with_passed):
+    """An empty ledger publishes one file of no row under key ``None``
+    to the ledger (and to the passed store), readable with the ledger's
+    schema, and leaves no staging directory or journal."""
+    ledger = searcher.run_search(_features(spark), searcher.queries_df(spark, []), RANGES)
+    paths = [str(tmp_path / "ledger")] + ([str(tmp_path / "passed")] if with_passed else [])
+    searcher.write_results(ledger, *paths)
+    for path in paths:
+        names = os.listdir(path)
+        assert len(names) == 1 and names[0].startswith("qNone-"), names
+        back = spark.read.parquet(path)
+        assert back.count() == 0
+        assert back.schema.simpleString() == ledger.schema.simpleString()
+
+
+def test_passed_link_falls_back_to_copy(spark, tmp_path, monkeypatch):
+    """The passed store holds hard links of the ledger's passed files;
+    where ``os.link`` raises ``EXDEV`` (another device), a copy."""
+    plan = searcher.queries_df(spark, [(0, 4), (5, 9)])
+    ledger = searcher.run_search(_features(spark), plan, RANGES)
+
+    def commit(name):
+        ledger_path, passed_path = str(tmp_path / name / "l"), str(tmp_path / name / "p")
+        searcher.write_results(ledger, ledger_path, passed_path)
+        (linked,) = os.listdir(passed_path)
+        return os.stat(os.path.join(ledger_path, linked)), os.stat(
+            os.path.join(passed_path, linked)
+        ), _rows(spark.read.parquet(passed_path))
+
+    in_ledger, in_passed, want = commit("linked")
+    assert in_ledger.st_ino == in_passed.st_ino and in_passed.st_nlink == 2
+
+    def cross_device(src, dst):
+        raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), src, None, dst)
+
+    monkeypatch.setattr(os, "link", cross_device)
+    in_ledger, in_passed, got = commit("copied")
+    assert in_ledger.st_ino != in_passed.st_ino and in_passed.st_nlink == 1
+    assert got == want
+    assert not [n for n in os.listdir(tmp_path / "copied" / "p") if n.startswith(".")]
