@@ -16,20 +16,24 @@ connector name (sources/remote.py) is the network path. The per-query
 loop of the reference becomes one union + one distributed feature pass;
 the filter applies to every star in a single scan.
 
-The CLI attributes stars to queries and decides ``passed``; it is a
-caller of the searcher's ``status_ledger`` and ``write_results``
-(operators/searcher.py). Curves are written before the commit, the two
-text files after it from the published ledger; a rerun replaces its run.
+The CLI attributes stars to queries, decides ``passed`` once per star
+(``stars_filter.decide``) and commits through the searcher's
+``status_ledger`` and ``write_results`` (operators/searcher.py). Curves
+are written before the commit; the text files and the passed count come
+from one collect of the published ledger. A rerun replaces its run.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
+import sys
 
 from pyspark.sql import functions as F
 
 from ..ml import persistence
+from ..ml.stars_filter import decide
 from ..operators import searcher
 from ..sources import files
 from . import descriptors as descr_registry
@@ -77,27 +81,23 @@ def main(project_settings, argv: list[str] | None = None) -> int:
         raise FileNotFoundError(f"filter {name!r} not found under FILTERS")
 
     filter_paths = [_filter_path(name) for name in opts.filt]
-    filters = [persistence.load_filter(spark, p) for p in filter_paths]
+    filters = [persistence.load_filter(spark, path) for path in filter_paths]
 
     # descriptor params each filter was trained with (make_filter's
     # descr_params.json sidecar) — featurizing with defaults instead
     # would skew the served feature distribution vs training
-    import json
-
     descr_params: dict = {}
-    for p in filter_paths:
-        sidecar = os.path.join(os.path.dirname(p), "descr_params.json")
+    for path in filter_paths:
+        sidecar = os.path.join(os.path.dirname(path), "descr_params.json")
         if not os.path.exists(sidecar):
             # pre-sidecar filter: params it was trained with are unknown —
             # featurization falls back to defaults/other filters' params.
             # Warn loudly rather than skew silently.
-            import sys as _sys
-
             print(
-                f"warning: {p} has no descr_params.json — descriptor "
+                f"warning: {path} has no descr_params.json — descriptor "
                 "params it was trained with are unknown; featurizing "
                 "with defaults (possible train/serve skew)",
-                file=_sys.stderr,
+                file=sys.stderr,
             )
             continue
         with open(sidecar) as f:
@@ -144,15 +144,11 @@ def main(project_settings, argv: list[str] | None = None) -> int:
     # curve_density, zeroing half the successive-diff terms of abbe)
     # and into the saved .dat curves
     star_queries = obs.select("star_id", "query_id").distinct().cache()
-    dedup_key = [
-        c for c in ("star_id", "band", "t", "mag") if c in obs.columns
-    ]
+    dedup_key = [c for c in ("star_id", "band", "t", "mag") if c in obs.columns]
     obs = obs.drop("query_id").dropDuplicates(dedup_key).cache()
 
     # features required by the loaded filters (default descriptor params)
-    needed = set()
-    for filt in filters:
-        needed.update(filt.feature_cols)
+    needed = {c for filt in filters for c in filt.feature_cols}
     col_to_descr = {
         c: name
         for name, (cols, _) in descr_registry.REGISTRY.items()
@@ -175,41 +171,38 @@ def main(project_settings, argv: list[str] | None = None) -> int:
     else:
         feats = star_queries.select("star_id").distinct()
 
-    # one passed decision per star, by the filters in sequence
-    passed = feats
-    for filt in filters:
-        passed = filt.filter_stars(passed).drop("prob")
-    flagged = feats.join(
-        passed.select("star_id", F.lit(True).alias("passed")), "star_id", "left"
-    ).withColumn("passed", F.coalesce("passed", F.lit(False))).cache()
-    passed_ids = flagged.filter("passed").select("star_id")
-    files.save_dat_curves(obs.join(passed_ids, "star_id"), lcs_dir)
+    # one passed decision per star, scored before the star→query join
+    decided = decide(filters, feats).cache()
+    files.save_dat_curves(
+        obs.join(decided.filter("passed").select("star_id"), "star_id"), lcs_dir
+    )
 
     ledger = searcher.status_ledger(
-        star_queries.join(flagged, "star_id"), spark.range(len(q_rows)).toDF("query_id")
+        star_queries.join(decided, "star_id"), spark.range(len(q_rows)).toDF("query_id")
     )
     ledger_dir = os.path.join(run_dir, "ledger")
     searcher.write_results(ledger, ledger_dir, os.path.join(run_dir, "passed"))
 
-    # text exports of the published ledger
-    published = spark.read.parquet(ledger_dir)
+    # text exports and the passed count from one read of the published
+    # ledger, ordered as Spark's orderBy would (a NULL star_id first)
+    published = spark.read.schema(ledger.schema).parquet(ledger_dir).collect()
+    published.sort(key=lambda r: (r.query_id, r.star_id is not None, r.star_id))
     with open(os.path.join(run_dir, "query_status.txt"), "w") as f:
         f.write("#query_id;star_id;found;passed\n")
-        status = published.select("query_id", "star_id", "found", "passed")
-        for r in status.orderBy("query_id", "star_id").collect():
+        for r in published:
             star = "" if r.star_id is None else r.star_id
             f.write(f"{r.query_id};{star};{r.found};{r.passed}\n")
 
     if opts.save_coords == "y" and descr_names:
         cols = sorted(needed & set(feats.columns))
-        coords = published.filter("found").dropDuplicates(["star_id"])
+        coords = {r.star_id: r for r in published if r.found}
         with open(os.path.join(run_dir, "coords.dat"), "w") as f:
             f.write("# star_id\t" + "\t".join(cols) + "\n")
-            for r in coords.orderBy("star_id").collect():
+            for sid, r in sorted(coords.items()):
                 vals = (float("nan") if r[c] is None else r[c] for c in cols)
-                f.write(f"{r.star_id}\t" + "\t".join(f"{v:.3f}" for v in vals) + "\n")
+                f.write(f"{sid}\t" + "\t".join(f"{v:.3f}" for v in vals) + "\n")
 
-    n_passed = passed_ids.count()
+    n_passed = len({r.star_id for r in published if r.passed})
     print(
         f"Done. {len(q_rows)} queries, {n_passed} stars passed; "
         f"results in {run_dir}"

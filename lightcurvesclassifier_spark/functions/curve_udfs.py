@@ -60,56 +60,6 @@ def variogram_slope(curves: DataFrame, bins: int = 20, absolute: bool = False) -
     )
 
 
-def grouped_curve_features(obs: DataFrame, bins: int | None = None) -> DataFrame:
-    """The applyInPandas idiom (SURVEY.md §2.3): kernels over long-format
-    ``observations`` grouped by star — no collected-array view needed.
-
-    Equivalent to running the kernel library on ``curves``; useful when
-    a pipeline stays in long format end-to-end (the group's rows arrive
-    as one pandas frame, sorted here, kernels applied per group). Same
-    shuffle count as the array path; prefer the declarative
-    ``functions/curves.py`` aggregates when the feature decomposes into
-    SQL — this path is for kernels that don't.
-    """
-    schema = (
-        "star_id long, n_obs long, mean_mag double, std_mag double, "
-        "abbe double, variogram_slope double"
-    )
-
-    def _safe(fn, *args) -> float:
-        # one degenerate star (single point, constant curve) must yield
-        # NaN for ITS feature, not abort the whole Spark job
-        try:
-            return float(fn(*args))
-        except Exception:
-            return float("nan")
-
-    def per_star(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["t", "mag"])
-        t = pdf["t"].to_numpy(dtype=float)
-        m = pdf["mag"].to_numpy(dtype=float)
-        if bins:
-            _, m_red = kernels.to_ekvi_paa(t, m, bins=bins)
-        else:
-            m_red = m
-        return pd.DataFrame(
-            [
-                {
-                    "star_id": pdf["star_id"].iloc[0],
-                    "n_obs": len(m),
-                    "mean_mag": m.mean(),
-                    "std_mag": m.std(),
-                    "abbe": _safe(kernels.abbe, m_red, len(m)),
-                    "variogram_slope": _safe(kernels.variogram_slope, t, m),
-                }
-            ]
-        )
-
-    return obs.select("star_id", "t", "mag").groupBy("star_id").applyInPandas(
-        per_star, schema=schema
-    )
-
-
 def ekvi_paa_exact(curves: DataFrame, bins: int) -> DataFrame:
     """Exact-parity to_ekvi_PAA: per-star reduced (t, mag) series with the
     reference's NaN interpolation (fix_missing) applied — long format,

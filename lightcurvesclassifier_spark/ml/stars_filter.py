@@ -8,6 +8,8 @@ Spark shape: the feature DataFrame replaces the "space coordinates"
 pandas frame; each decider appends one probability column in a single
 pass over the data; combine/threshold/confusion stats are column
 expressions and one aggregate — no driver-side loops over stars.
+:func:`decide` is the same scoring as a flag: every row kept, one
+``passed`` column over any number of filters (``lcc filter_stars``).
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.query_compiler import quote_ident, sql_number
 from .deciders import BaseDecider
 
 # lcc/stars_processing/stars_filter.py:291-327: combine = mean/max/min of
@@ -66,25 +69,24 @@ class StarsFilter:
         self.learned = True
         return self
 
-    def _prob_col(self, dec: BaseDecider, i: int) -> str:
-        return f"prob_{i}_{dec.name()}"
+    def _prob_cols(self) -> list[str]:
+        return [f"prob_{i}_{dec.name()}" for i, dec in enumerate(self.deciders)]
+
+    def _scores(self, df: DataFrame) -> DataFrame:
+        for dec, col in zip(self.deciders, self._prob_cols()):
+            df = dec.evaluate(df, self.feature_cols, col)
+        return df
 
     def predictions(self, df: DataFrame) -> DataFrame:
         """One probability column per decider (getAllPredictions,
         stars_filter.py:264-288) — all appended in one scan."""
-        df = df.na.drop(subset=self.feature_cols)
-        for i, dec in enumerate(self.deciders):
-            df = dec.evaluate(df, self.feature_cols, self._prob_col(dec, i))
-        return df
+        return self._scores(df.na.drop(subset=self.feature_cols))
 
-    def all_predictions(self, df: DataFrame) -> DataFrame:
-        out = self.predictions(df)
-        passed_all = None
-        for i, dec in enumerate(self.deciders):
-            c = F.col(self._prob_col(dec, i)) > F.lit(dec.threshold)  # strict >
-            out = out.withColumn(f"passed_{i}_{dec.name()}", c)
-            passed_all = c if passed_all is None else (passed_all & c)
-        return out.withColumn("passed", passed_all)
+    def _combined(self, df: DataFrame, meth: str, out_col: str = "prob") -> DataFrame:
+        """Every row of ``df`` with one probability column per decider
+        and their ``meth`` combination ``out_col``: the scoring step of
+        :meth:`filter_stars`, :meth:`statistics` and :func:`decide`."""
+        return combine_probabilities(self._scores(df), self._prob_cols(), meth, out_col)
 
     def mean_threshold(self) -> float:
         # stars_filter.py:103: threshold = mean of decider thresholds
@@ -92,10 +94,9 @@ class StarsFilter:
 
     def filter_stars(self, df: DataFrame, pass_method: str = "all") -> DataFrame:
         """stars_filter.py:78-117: combined probability >= mean threshold."""
-        meth = _PASS_METHOD[pass_method]
-        out = self.predictions(df)
-        prob_cols = [self._prob_col(d, i) for i, d in enumerate(self.deciders)]
-        out = combine_probabilities(out, prob_cols, meth)
+        out = self._combined(
+            df.na.drop(subset=self.feature_cols), _PASS_METHOD[pass_method]
+        )
         # A Filter on ``prob`` would be pushed below the projection with
         # every score inlined, evaluating each decider twice per star; a
         # generator over a one-element array is not pushed down.
@@ -107,8 +108,7 @@ class StarsFilter:
     def _positive_counts(self, df: DataFrame, thresholds) -> tuple[int, list[int]]:
         """Row count and, per threshold, how many rows' mean-combined
         probability reaches it — one aggregate over ``df``."""
-        prob_cols = [self._prob_col(d, i) for i, d in enumerate(self.deciders)]
-        out = combine_probabilities(self.predictions(df), prob_cols, "mean")
+        out = self._combined(df.na.drop(subset=self.feature_cols), "mean")
         row = out.agg(
             F.count("*").alias("n"),
             *(
@@ -179,6 +179,24 @@ class StarsFilter:
             )
             for i, t in enumerate(thresholds)
         ]
+
+
+def decide(
+    filters: list[StarsFilter], df: DataFrame, pass_method: str = "all"
+) -> DataFrame:
+    """Every row of ``df`` plus one non-NULL boolean ``passed``: true
+    where every filter's :meth:`~StarsFilter.filter_stars` keeps the row
+    (no filter: every row passes). A row missing a filter's feature (NULL
+    or NaN) does not pass, whatever its deciders score it. Each decider
+    scores each row once, and no probability column is kept."""
+    meth, cols, conds = _PASS_METHOD[pass_method], df.columns, []
+    for i, filt in enumerate(filters):
+        prob = f"_prob_{i}"
+        df = filt._combined(df, meth, prob).drop(*filt._prob_cols())
+        conds += [f"NOT ({x} IS NULL OR isnan({x}))" for x in map(quote_ident, filt.feature_cols)]
+        conds.append(f"{prob} >= {sql_number(filt.mean_threshold())}")
+    passed = " AND ".join(conds) or "TRUE"
+    return df.selectExpr(*map(quote_ident, cols), f"coalesce({passed}, FALSE) AS passed")
 
 
 def _lda_fit_ctes_sql(reg: float) -> str:

@@ -201,53 +201,6 @@ FROM long_v GROUP BY dim
 """
 
 
-def referential_violations(
-    child: DataFrame, child_key: str, parent: DataFrame, parent_key: str,
-    check_name: str,
-) -> DataFrame:
-    """One-row referential-integrity check: child rows whose key has no
-    parent (orphans). Left join against the DISTINCT parent keys + null
-    flag in a single aggregate — at warehouse scale this is one shuffle
-    join Catalyst is free to broadcast when the parent side is small,
-    and NULL child keys count as violations (an orphan by definition)."""
-    pk = parent.select(F.col(parent_key).alias("__pk")).distinct()
-    joined = child.join(
-        pk, child[child_key] == F.col("__pk"), "left"
-    )
-    return joined.agg(
-        F.lit(check_name).alias("check_name"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.when(F.col("__pk").isNull(), 1).otherwise(0)
-        ).cast("long").alias("n_bad"),
-    ).select(
-        "check_name",
-        "n_rows",
-        "n_bad",
-        F.round(F.col("n_bad") / F.col("n_rows"), 6).alias("bad_rate"),
-    )
-
-
-def predicate_violations(
-    df: DataFrame, bad: F.Column, check_name: str
-) -> DataFrame:
-    """One-row constraint check: count of rows where ``bad`` holds
-    (NULL-safe: a NULL predicate counts as bad — an unevaluable
-    constraint is a violation, matching warehouse DQ-tool semantics)."""
-    return df.agg(
-        F.lit(check_name).alias("check_name"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.when(F.coalesce(bad, F.lit(True)), 1).otherwise(0)
-        ).cast("long").alias("n_bad"),
-    ).select(
-        "check_name",
-        "n_rows",
-        "n_bad",
-        F.round(F.col("n_bad") / F.col("n_rows"), 6).alias("bad_rate"),
-    )
-
-
 # The dq_audit check inventory — ONE list drives both the Spark plan
 # (predicates parsed with F.expr) and the DuckDB oracle (the same
 # strings spliced into generated SQL), so the two sides cannot drift.

@@ -6,7 +6,8 @@ query dict — fetch stars, keep those with curves, run the filter's
 getAllPredictions, persist passed stars, append one status-ledger row
 per (query, star) with the features, per-decider probabilities and
 passed flags; ``getUnsearchedQuery`` (lcc/data_manager/
-status_resolver.py:257-264) resumes by subtracting logged queries.
+status_resolver.py:257-264) resumes by subtracting logged queries, which
+``search_and_resume`` does on the driver (the only resume filter).
 
 Spark shape: the per-query Python loop becomes two steps. Attribution
 pairs queries with stars and builds the ledger in the same join: for
@@ -19,13 +20,13 @@ elsewhere, and ``write_results`` commits the ledger, for the batch
 driver, the Structured Streaming wrapper (``streaming/search_stream.py``,
 the long-running feed shape) and ``lcc filter_stars``
 (``cli/filter_stars.py``, which attributes through its connector fetch
-and decides ``passed`` with the saved filters). A commit with a passed
-store is one write job: the stage is partitioned on the passed flag,
-and the passed files are hard-linked into the store; a roll-forward
-journal finishes a commit that crashed while publishing. It writes at
-most one file per feature partition that holds a match (two with a
-passed store), plus one. The rq/redis work queue of the reference is
-replaced by partition parallelism.
+and decides ``passed`` once per star with ``stars_filter.decide``). A
+commit with a passed store is one write job: the stage is partitioned
+on the passed flag, and the passed files are hard-linked into the
+store; a roll-forward journal finishes a commit that crashed while
+publishing. It writes at most one file per feature partition that holds
+a match (two with a passed store), plus one. The rq/redis work queue of
+the reference is replaced by partition parallelism.
 
 The path stays on the JVM and runs no job that writes nothing but the
 resume's read of the ledger's query ids: the query table is a
@@ -349,15 +350,6 @@ def write_results(
         json.dump(commit, fh)
     os.replace(journal + ".tmp", journal)
     _complete(journal)
-
-
-def unsearched_queries(plan: DataFrame, ledger: DataFrame) -> DataFrame:
-    """Resume semantics: planned queries minus already-logged ones
-    (getUnsearchedQuery, status_resolver.py:257-264) — a left-anti join
-    on the query key. ``search_and_resume`` applies the same filter on
-    the driver to the plan's collected rows."""
-    done = ledger.select("query_id").distinct()
-    return plan.join(done, "query_id", "left_anti")
 
 
 # (applicationId, semanticHash) -> (features, input stamp, snapshot dir)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from lightcurvesclassifier_spark.cli import lcc as cli
 from lightcurvesclassifier_spark.sources import files, testdata
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, job_count
 
 
 @pytest.fixture(scope="module")
@@ -289,6 +289,59 @@ def _filter_run(project, run, qname):
     )
     assert rc == 0
     return os.path.join(project, "query_results", run)
+
+
+def _status(run_dir):
+    """``query_status.txt`` as {(query_id, star_id): passed}."""
+    lines = open(os.path.join(run_dir, "query_status.txt")).read().splitlines()[1:]
+    return {tuple(l.split(";")[:2]): l.endswith(";True") for l in lines}
+
+
+@pytest.mark.usefixtures("smoke_filter")
+def test_filter_stars_two_filters_pass_both(project, spark):
+    """With two ``-f`` filters a star passes where both single-filter
+    runs pass it: SmokeFilter (GaussianNB on abbe) and a CustomDecider
+    filter cutting curve_density at the searched stars' median."""
+    from lightcurvesclassifier_spark.cli import descriptors as descr_registry
+    from lightcurvesclassifier_spark.ml.deciders import make_decider
+    from lightcurvesclassifier_spark.ml.persistence import save_filter
+    from lightcurvesclassifier_spark.ml.stars_filter import StarsFilter
+
+    obs = files.load_dat_curves(spark, os.path.join(project, "inp_lcs", "searched"))
+    feats, _ = descr_registry.featurize(obs, ["CurveDensityDescr"])
+    dens = sorted(r.curve_density for r in feats.collect() if r.curve_density is not None)
+    dec = make_decider("CustomDecider", ranges={"curve_density": (None, dens[len(dens) // 2])})
+    filt = StarsFilter([dec], ["curve_density"])
+    filt.learned = True
+    save_filter(filt, os.path.join(project, "filters", "Dense", "Dense.filter"))
+    with open(os.path.join(project, "queries", "search.txt"), "w") as f:
+        f.write("#path\nsearched\ncontam\n")
+
+    runs = {}
+    for run, names in (("f_smoke", ["SmokeFilter"]), ("f_dense", ["Dense"]),
+                       ("f_both", ["SmokeFilter", "Dense"])):
+        argv = ["filter_stars", "-r", run, "-q", "search.txt", "-d", "FileManager"]
+        assert cli.main(argv + [a for n in names for a in ("-f", n)], path=project) == 0
+        runs[run] = _status(os.path.join(project, "query_results", run))
+    smoke, dense, both = runs["f_smoke"], runs["f_dense"], runs["f_both"]
+    assert smoke.keys() == dense.keys() == both.keys()
+    assert both == {k: smoke[k] and dense[k] for k in both}
+    assert 0 < sum(both.values()) < sum(smoke.values())
+
+
+@pytest.mark.usefixtures("smoke_filter")
+def test_filter_stars_warm_run_jobs(project, spark):
+    """A warm run launches 9 Spark jobs: the query file's read and
+    collect, the feature and decide stages the curves' write runs, that
+    write, the commit's jobs and one collect of the published ledger for
+    both text files and the passed count."""
+    with open(os.path.join(project, "queries", "search.txt"), "w") as f:
+        f.write("#path\nsearched\ncontam\n")
+    _filter_run(project, "run_jobs", "search.txt")
+    n = job_count(
+        spark, "filter-stars-warm", lambda: _filter_run(project, "run_jobs", "search.txt")
+    )
+    assert n == 9
 
 
 @pytest.fixture(scope="module")

@@ -482,13 +482,16 @@ def test_dq_referential_counts_planted_orphans(spark):
         [(1, "a"), (2, "b"), (4, "c"), (None, "d")], "k int, v string"
     )
     parent = spark.createDataFrame([(1,), (2,), (3,)], "pk int")
-    out = profile_ops.referential_violations(
-        child, "k", parent, "pk", "orphans"
-    ).collect()[0]
-    assert out.check_name == "orphans"
-    assert out.n_rows == 4
-    assert out.n_bad == 2
-    assert out.bad_rate == 0.5
+    out = profile_ops.dq_audit(
+        {"child": child, "parent": parent},
+        referential=[("orphans", "child", "k", "parent", "pk")],
+        predicate=[],
+    ).collect()
+    assert len(out) == 1
+    assert out[0].check_name == "orphans"
+    assert out[0].n_rows == 4
+    assert out[0].n_bad == 2
+    assert out[0].bad_rate == 0.5
 
 
 def test_dq_predicate_null_counts_as_violation(spark):
@@ -497,12 +500,13 @@ def test_dq_predicate_null_counts_as_violation(spark):
     df = spark.createDataFrame(
         [(1.0,), (-2.0,), (None,)], "x double"
     )
-    out = profile_ops.predicate_violations(
-        df, F.col("x") < 0, "neg_x"
-    ).collect()[0]
+    out = profile_ops.dq_audit(
+        {"t": df}, referential=[], predicate=[("neg_x", "t", "x < 0")]
+    ).collect()
     # -2.0 violates; NULL is unevaluable → counted as a violation
-    assert out.n_rows == 3
-    assert out.n_bad == 2
+    assert [r.check_name for r in out] == ["neg_x"]
+    assert out[0].n_rows == 3
+    assert out[0].n_bad == 2
 
 
 def test_percentile_auto_switch_exact_below_sketch_above(spark, monkeypatch):

@@ -55,29 +55,6 @@ def test_variogram_slope_all_finite(spark):
     assert all(v is not None and np.isfinite(v) for v in vals)
 
 
-def test_grouped_applyinpandas_matches_declarative(spark):
-    """The applyInPandas long-format path agrees with the declarative
-    aggregates and the array-view UDFs on shared features."""
-    from pyspark.sql import functions as F
-
-    from lightcurvesclassifier_spark.functions.curves import curve_features
-
-    obs = testdata.observations(spark, SF_SMOKE)
-    grouped = {
-        r["star_id"]: r
-        for r in curve_udfs.grouped_curve_features(obs).collect()
-    }
-    declarative = {r["star_id"]: r for r in curve_features(obs).collect()}
-    assert set(grouped) == set(declarative)
-    for sid, d in declarative.items():
-        g = grouped[sid]
-        assert g["n_obs"] == d["n_obs"]
-        assert g["mean_mag"] == pytest.approx(d["mean_mag"], rel=1e-12)
-        assert g["std_mag"] == pytest.approx(d["std_mag"], rel=1e-12)
-        assert g["abbe"] == pytest.approx(d["abbe"], rel=1e-9)
-        assert g["variogram_slope"] is not None
-
-
 def test_curve_descr_height_matches_reference_semantics(spark, curve_rows):
     """The height/fractional-bins CurveDescr paths must reproduce the
     reference's numpy chain (curve_descr.py:66-84, minus the min-shift

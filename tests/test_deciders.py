@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from lightcurvesclassifier_spark.ml.deciders import NumpyDecider, make_decider
 from lightcurvesclassifier_spark.ml.params_estim import ParamsEstimator
-from lightcurvesclassifier_spark.ml.stars_filter import StarsFilter
+from lightcurvesclassifier_spark.ml.stars_filter import StarsFilter, decide
 from tests.conftest import job_count
 
 RNG = np.random.default_rng(3)
@@ -81,11 +81,10 @@ def test_stars_filter_end_to_end(spark, populations):
     passed_o = filt.filter_stars(others).count()
     assert passed_s > 50 and passed_o < 10  # score-gap assertion
 
-    preds = filt.all_predictions(searched)
+    preds = filt.predictions(searched)
     prob_cols = [c for c in preds.columns if c.startswith("prob_")]
-    passed_cols = [c for c in preds.columns if c.startswith("passed_")]
-    assert len(prob_cols) == 2 and len(passed_cols) == 2
-    assert "passed" in preds.columns
+    assert len(prob_cols) == 2
+    assert decide([filt], searched).columns == searched.columns + ["passed"]
 
     stats = filt.statistics(searched, others)
     assert stats["precision"] > 0.9
@@ -229,11 +228,11 @@ def test_boosting_deciders_deterministic_and_persistable(
         [make_decider("AdaBoostDec"), make_decider("ExtraTreesDec")], FEATURES
     )
     filt.learn(searched, others)
-    before = filt.all_predictions(searched).toPandas()
+    before = filt.predictions(searched).toPandas()
     path = str(tmp_path / "boost.filter")
     save_filter(filt, path)
     loaded = load_filter(spark, path)
-    after = loaded.all_predictions(searched).toPandas()
+    after = loaded.predictions(searched).toPandas()
     cols = sorted(before.columns)
     b2 = before[cols].sort_values(cols).reset_index(drop=True)
     a2 = after[cols].sort_values(cols).reset_index(drop=True)
@@ -299,11 +298,11 @@ def test_neural_svc_persistence_round_trip(spark, populations, tmp_path):
         [make_decider("NeuronDecider"), make_decider("SVCDec")], FEATURES
     )
     filt.learn(searched, others)
-    before = filt.all_predictions(searched).toPandas()
+    before = filt.predictions(searched).toPandas()
     path = str(tmp_path / "ns.filter")
     save_filter(filt, path)
     loaded = load_filter(spark, path)
-    after = loaded.all_predictions(searched).toPandas()
+    after = loaded.predictions(searched).toPandas()
     cols = sorted(before.columns)
     b = before[cols].sort_values(cols).reset_index(drop=True)
     a = after[cols].sort_values(cols).reset_index(drop=True)
@@ -519,3 +518,68 @@ def test_filter_stars_scores_each_star_once(spark, populations, pass_method):
         d.toPandas().sort_values(FEATURES).reset_index(drop=True) for d in (out, plain)
     )
     assert len(got) > 0 and got.equals(want)
+
+
+def _with_ids(spark, df, extra=()):
+    """``df``'s rows, then ``extra``, numbered by an ``id`` column."""
+    rows = [tuple(r) for r in df.collect()] + list(extra)
+    schema = "id long, " + ", ".join(f"{c} double" for c in FEATURES)
+    return spark.createDataFrame([(i, *r) for i, r in enumerate(rows)], schema)
+
+
+HOLEY = [
+    tuple([None] + [1.5] * (DIM - 1)),
+    tuple([1.5, float("nan")] + [1.5] * (DIM - 2)),
+]
+
+
+@pytest.mark.parametrize("pass_method", ["all", "mean", "one"])
+def test_decide_passes_what_filter_stars_keeps(spark, populations, pass_method):
+    """``decide`` keeps every row and passes exactly the rows
+    ``filter_stars`` keeps, for a filter of a Gaussian and a KMeans
+    decider (KMeans scores a missing feature NULL) and for two filters
+    (the rows that chained ``filter_stars`` calls keep)."""
+    searched, others = populations
+    both = StarsFilter(
+        [make_decider("GaussianNBDec"), make_decider("KMeansDecider")], FEATURES
+    ).learn(searched, others)
+    lda = StarsFilter([make_decider("LDADec")], FEATURES[:2]).learn(searched, others)
+    df = _with_ids(spark, searched.unionByName(others), HOLEY).cache()
+
+    def kept(filters):
+        out = df
+        for filt in filters:
+            out = filt.filter_stars(out, pass_method).drop("prob")
+        return {r.id for r in out.collect()}
+
+    for filters in ([both], [lda], [both, lda]):
+        rows = decide(filters, df, pass_method).collect()
+        assert len(rows) == df.count()
+        assert all(r.passed is not None for r in rows)
+        passed = {r.id for r in rows if r.passed}
+        assert passed == kept(filters)
+        assert not passed & {len(rows) - 2, len(rows) - 1}  # the HOLEY rows
+    # KMeans numbers its clusters arbitrarily, so only the LDA filter's
+    # pass set has a known size: the searched population's
+    assert abs(len(kept([lda])) - searched.count()) < 10
+
+
+def test_decide_missing_feature_never_passes(spark, populations):
+    """A NULL-feature and a NaN-feature row get ``passed = False``, not
+    NULL, also under a mean threshold of 0 where every complete row
+    passes; ``passed`` is non-nullable and each Gaussian decider's
+    discriminant is evaluated once per row."""
+    searched, others = populations
+    filt = StarsFilter(
+        [make_decider("LDADec", threshold=0.0), make_decider("QDADec", threshold=0.0)],
+        FEATURES,
+    ).learn(searched, others)
+    df = _with_ids(spark, searched.limit(3), HOLEY)
+    out = decide([filt], df)
+    assert out.columns == df.columns + ["passed"]
+    assert not out.schema["passed"].nullable
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("EXP(") == len(filt.deciders)
+    got = {r.id: r.passed for r in out.collect()}
+    assert got == {0: True, 1: True, 2: True, 3: False, 4: False}
+    assert decide([], df).filter("passed").count() == 5

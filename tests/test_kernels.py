@@ -161,18 +161,3 @@ def test_sample_fraction_full_keeps_everything(spark):
     n_half = sample_fraction(df, "k", 0.5).count()
     assert 90 < n_half < 166  # Bernoulli ~0.5
 
-
-def test_grouped_curve_features_degenerate_star(spark):
-    """One single-observation star must yield NaN features, not abort
-    the whole job (ZeroDivision in abbe / SVD failure in polyfit)."""
-    from lightcurvesclassifier_spark.functions.curve_udfs import (
-        grouped_curve_features,
-    )
-
-    obs = spark.createDataFrame(
-        [(1, float(t), float(t % 7)) for t in range(30)] + [(2, 1.0, 5.0)],
-        "star_id long, t double, mag double",
-    )
-    out = grouped_curve_features(obs).toPandas().set_index("star_id")
-    assert np.isnan(out.loc[2, "abbe"])
-    assert np.isfinite(out.loc[1, "abbe"])

@@ -191,13 +191,6 @@ def test_stream_backlog_costs_one_batch(spark, tmp_path):
     assert jobs[1] > 0 and jobs[3] == jobs[1], jobs
 
 
-def test_unsearched_queries_anti_join(spark):
-    plan = searcher.queries_df(spark, [(0, 1), (2, 3), (4, 5)])
-    done = plan.filter(F.col("query_id") < 2).select("query_id", "lo", "hi")
-    todo = searcher.unsearched_queries(plan, done)
-    assert [r["query_id"] for r in todo.collect()] == [2]
-
-
 def test_zero_match_query_gets_ledger_row_and_resume_stops(spark, tmp_path):
     """A query matching no star must still log one found=false row so
     resume marks it done (it previously re-executed forever) — also when
