@@ -47,7 +47,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..plans.query_compiler import quote_ident, range_predicate, sql_number
+from ..plans.query_compiler import missing_sql, quote_ident, range_predicate, sql_number
 
 LABEL = "_label"
 FEATURES = "_features"
@@ -304,10 +304,9 @@ class GaussianDecider(NumpyDecider):
                 w = q[i, i] if i == j else q[i, j] + q[j, i]
                 if w:
                     terms.append(f"{sql_number(w)} * {xi} * {cols[j]}")
-        missing = " OR ".join(f"{x} IS NULL OR isnan({x})" for x in cols)
         g = " + ".join(terms)
         return (
-            f"CASE WHEN {missing} THEN 0.0D "
+            f"CASE WHEN {missing_sql(feature_cols)} THEN 0.0D "
             f"ELSE nanvl(1.0D / (1.0D + exp(-({g}))), 0.0D) END"
         )
 

@@ -18,7 +18,7 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.query_compiler import quote_ident, sql_number
+from ..plans.query_compiler import missing_sql, quote_ident, sql_number
 from .deciders import BaseDecider
 
 # lcc/stars_processing/stars_filter.py:291-327: combine = mean/max/min of
@@ -181,19 +181,18 @@ class StarsFilter:
         ]
 
 
-def decide(
-    filters: list[StarsFilter], df: DataFrame, pass_method: str = "all"
-) -> DataFrame:
+def decide(filters: list[StarsFilter], df: DataFrame) -> DataFrame:
     """Every row of ``df`` plus one non-NULL boolean ``passed``: true
     where every filter's :meth:`~StarsFilter.filter_stars` keeps the row
-    (no filter: every row passes). A row missing a filter's feature (NULL
-    or NaN) does not pass, whatever its deciders score it. Each decider
-    scores each row once, and no probability column is kept."""
-    meth, cols, conds = _PASS_METHOD[pass_method], df.columns, []
+    under its default pass method, ``all`` (no filter: every row passes).
+    A row missing a filter's feature (NULL or NaN) does not pass, whatever
+    its deciders score it. Each decider scores each row once, and no
+    probability column is kept."""
+    cols, conds = df.columns, []
     for i, filt in enumerate(filters):
         prob = f"_prob_{i}"
-        df = filt._combined(df, meth, prob).drop(*filt._prob_cols())
-        conds += [f"NOT ({x} IS NULL OR isnan({x}))" for x in map(quote_ident, filt.feature_cols)]
+        df = filt._combined(df, _PASS_METHOD["all"], prob).drop(*filt._prob_cols())
+        conds.append(f"NOT ({missing_sql(filt.feature_cols)})")
         conds.append(f"{prob} >= {sql_number(filt.mean_threshold())}")
     passed = " AND ".join(conds) or "TRUE"
     return df.selectExpr(*map(quote_ident, cols), f"coalesce({passed}, FALSE) AS passed")

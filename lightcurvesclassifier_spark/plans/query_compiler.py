@@ -100,6 +100,14 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def missing_sql(names) -> str:
+    """Spark SQL that is true where any of the columns ``names`` is
+    missing: NULL or NaN. Never NULL itself (``isnan(NULL)`` is false)."""
+    return " OR ".join(
+        f"{x} IS NULL OR isnan({x})" for x in map(quote_ident, names)
+    )
+
+
 def sql_number(v: float) -> str:
     """A Spark SQL literal of the type ``F.lit(v)`` gives: an integer as
     INT (BIGINT beyond 32 bits), a float as DOUBLE — the D suffix, since
