@@ -12,8 +12,9 @@ family needs template stars and lives in operators/comparative.py.
 
 Descriptors that share an aggregation are grouped into FAMILIES and
 computed in ONE pass: requesting Abbe+density+skewness+kurtosis runs
-two aggregations and one join, not four aggregations and three joins
-(inside make_filter this multiplies by the tuning-combo count).
+one aggregation (``curves.per_curve``) and no join, not four
+aggregations and three joins (inside make_filter this multiplies by the
+tuning-combo count).
 """
 
 from __future__ import annotations
@@ -48,14 +49,8 @@ def _collect_curves(obs: DataFrame) -> DataFrame:
 
 
 def _curve_features(obs: DataFrame, params: dict) -> DataFrame:
-    return curve_fns.curve_features(obs).select(
-        "star_id", "curve_density", "abbe"
-    )
-
-
-def _moments(obs: DataFrame, params: dict) -> DataFrame:
-    return curve_fns.skewness_kurtosis(obs).select(
-        "star_id", "skewness", "kurtosis"
+    return curve_fns.per_curve(
+        obs, ("curve_density", "abbe", "skewness", "kurtosis")
     )
 
 
@@ -69,7 +64,6 @@ def _variogram(obs: DataFrame, params: dict) -> DataFrame:
 # family → extractor(obs, params) producing every column of the family
 FAMILIES: dict[str, callable] = {
     "curve_features": _curve_features,
-    "moments": _moments,
     "variogram": _variogram,
 }
 
@@ -77,8 +71,8 @@ FAMILIES: dict[str, callable] = {
 REGISTRY: dict[str, tuple[list[str], str]] = {
     "AbbeValueDescr": (["abbe"], "curve_features"),
     "CurveDensityDescr": (["curve_density"], "curve_features"),
-    "SkewnessDescr": (["skewness"], "moments"),
-    "KurtosisDescr": (["kurtosis"], "moments"),
+    "SkewnessDescr": (["skewness"], "curve_features"),
+    "KurtosisDescr": (["kurtosis"], "curve_features"),
     "VariogramSlopeDescr": (["variogram_slope"], "variogram"),
 }
 

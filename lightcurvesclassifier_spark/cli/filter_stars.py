@@ -59,10 +59,9 @@ def main(project_settings, argv: list[str] | None = None) -> int:
 
     spark = get_spark("lcc-filter-stars")
 
-    queries = files.load_query_file(
-        spark, os.path.join(project_settings.QUERIES, opts.query)
+    q_rows = files.load_query_file(
+        os.path.join(project_settings.QUERIES, opts.query)
     )
-    q_rows = [r.asDict() for r in queries.collect()]
     if not q_rows:
         raise ValueError("Query file is empty")
 
@@ -112,6 +111,25 @@ def main(project_settings, argv: list[str] | None = None) -> int:
                 )
             descr_params[dname] = params
 
+    # features required by the loaded filters (default descriptor params)
+    needed = {c for filt in filters for c in filt.feature_cols}
+    col_to_descr = {
+        c: name
+        for name, (cols, _) in descr_registry.REGISTRY.items()
+        for c in cols
+    }
+    descr_names = sorted({col_to_descr[c] for c in needed if c in col_to_descr})
+    # EVERY needed feature must resolve — a partial match would pass
+    # here and die later inside the Spark plan with an opaque
+    # unresolved-column error on the missing ones
+    unresolved = sorted(needed - col_to_descr.keys())
+    if unresolved and filters:
+        raise ValueError(
+            f"Filters need features {unresolved} which no CLI "
+            f"descriptor provides (available: "
+            f"{sorted(descr_registry.REGISTRY)})"
+        )
+
     run_dir = os.path.join(project_settings.RESULTS, opts.run)
     lcs_dir = os.path.join(run_dir, "lcs")
     os.makedirs(lcs_dir, exist_ok=True)
@@ -147,25 +165,6 @@ def main(project_settings, argv: list[str] | None = None) -> int:
     dedup_key = [c for c in ("star_id", "band", "t", "mag") if c in obs.columns]
     obs = obs.drop("query_id").dropDuplicates(dedup_key).cache()
 
-    # features required by the loaded filters (default descriptor params)
-    needed = {c for filt in filters for c in filt.feature_cols}
-    col_to_descr = {
-        c: name
-        for name, (cols, _) in descr_registry.REGISTRY.items()
-        for c in cols
-    }
-    descr_names = sorted({col_to_descr[c] for c in needed if c in col_to_descr})
-    # EVERY needed feature must resolve — a partial match would pass
-    # here and die later inside the Spark plan with an opaque
-    # unresolved-column error on the missing ones
-    unresolved = sorted(needed - col_to_descr.keys())
-    if unresolved and filters:
-        raise ValueError(
-            f"Filters need features {unresolved} which no CLI "
-            f"descriptor provides (available: "
-            f"{sorted(descr_registry.REGISTRY)})"
-        )
-
     if descr_names:
         feats, _ = descr_registry.featurize(obs, descr_names, descr_params)
     else:
@@ -173,15 +172,21 @@ def main(project_settings, argv: list[str] | None = None) -> int:
 
     # one passed decision per star, scored before the star→query join
     decided = decide(filters, feats).cache()
-    files.save_dat_curves(
-        obs.join(decided.filter("passed").select("star_id"), "star_id"), lcs_dir
-    )
-
-    ledger = searcher.status_ledger(
-        star_queries.join(decided, "star_id"), spark.range(len(q_rows)).toDF("query_id")
-    )
     ledger_dir = os.path.join(run_dir, "ledger")
-    searcher.write_results(ledger, ledger_dir, os.path.join(run_dir, "passed"))
+    try:
+        files.save_dat_curves(
+            obs.join(decided.filter("passed").select("star_id"), "star_id"),
+            lcs_dir,
+        )
+        ledger = searcher.status_ledger(
+            star_queries.join(decided, "star_id"),
+            spark.range(len(q_rows)).toDF("query_id"),
+        )
+        searcher.write_results(ledger, ledger_dir, os.path.join(run_dir, "passed"))
+    finally:
+        # the run's cached frames go with it, also when it fails
+        for df in (star_queries, obs, decided):
+            df.unpersist()
 
     # text exports and the passed count from one read of the published
     # ledger, ordered as Spark's orderBy would (a NULL star_id first)

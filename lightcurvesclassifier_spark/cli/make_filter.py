@@ -86,10 +86,12 @@ def main(project_settings, argv: list[str] | None = None) -> int:
         spark, opts.cont, project_settings.INP_LCS, project_settings.QUERIES
     ).cache()
 
-    combos_df = files.load_query_file(
-        spark, os.path.join(project_settings.TUN_PARAMS, opts.input)
-    )
-    combos = [_parse_combo(r.asDict()) for r in combos_df.collect()]
+    combos = [
+        _parse_combo(r)
+        for r in files.load_query_file(
+            os.path.join(project_settings.TUN_PARAMS, opts.input)
+        )
+    ]
     if not combos:
         raise ValueError("Empty parameters file")
 

@@ -106,12 +106,7 @@ def load_spec(
         from ..sources import remote
 
         queries = coerce_query_values(
-            [
-                {k: r[k] for k in r.asDict()}
-                for r in files.load_query_file(
-                    spark, os.path.join(query_path or ".", qfile)
-                ).collect()
-            ]
+            files.load_query_file(os.path.join(query_path or ".", qfile))
         )
         config = remote.get_provider(conn_name)
         stars = remote.fetch_stars(spark, config, queries, _http_transport)

@@ -1,10 +1,13 @@
 """Per-curve features as built-in Spark SQL expressions (the fast path).
 
-Each function here is a *descriptor* from the reference re-expressed as
-declarative DataFrame aggregations over the long-format ``observations``
-table — whole-stage-codegen'd, shuffle once per groupBy, no Python in the
-hot path. Descriptors that genuinely need array-at-a-time logic (SAX,
-variogram, ekvi-PAA parity) live in ``curve_udfs.py`` instead.
+Every per-curve descriptor here is a projection of ONE aggregate over
+the long-format ``observations`` table (:func:`per_curve`): a lag window
+plus per-star power sums, of which Catalyst keeps only what a projection
+reads. The mergeable states of ``operators/rollup`` and
+``streaming/stats_stream`` finalize through the same column formulas
+(:func:`finalize_sums`). No Python in the hot path; descriptors that
+need array-at-a-time logic (SAX, variogram, ekvi-PAA parity) live in
+``curve_udfs.py``.
 
 Mirrored semantics (file:line into /root/reference):
 
@@ -17,103 +20,76 @@ Mirrored semantics (file:line into /root/reference):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from collections.abc import Iterable
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..plans.query_compiler import quote_ident as _q
 
 KEY = "star_id"
 
-
-def _pop_moments(mag: str = "mag") -> list[Column]:
-    """Power sums — the building blocks for population moments computed
-    identically in Spark and the DuckDB oracle (same cancellation, same
-    rounding behaviour)."""
-    m = F.col(mag)
-    return [
-        F.count(m).alias("_n"),
-        F.sum(m).alias("_s1"),
-        F.sum(m * m).alias("_s2"),
-        F.sum(m * m * m).alias("_s3"),
-        F.sum(m * m * m * m).alias("_s4"),
-    ]
-
-
-def lc_stats(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Per-star curve summary: n_obs, mean/std magnitude (population std —
-    numpy semantics, data_analysis.py:164), timespan and curve density.
-
-    One shuffle on the group key; at 100 TB this is a straight partial→final
-    hash aggregate with map-side combine, no skew risk (group = one star).
-    """
-    keys = keys or [KEY]
-    agg = obs.groupBy(*keys).agg(
-        F.count("mag").alias("n_obs"),
-        F.sum("mag").alias("_s1"),
-        F.sum(F.col("mag") * F.col("mag")).alias("_s2"),
-        F.min("t").alias("t_min"),
-        F.max("t").alias("t_max"),
-    )
-    n = F.col("n_obs")
-    mean = F.col("_s1") / n
-    ss = F.col("_s2") - F.col("_s1") * F.col("_s1") / n
-    return agg.select(
-        *keys,
-        "n_obs",
-        mean.alias("mean_mag"),
-        F.when(n > 0, F.sqrt(F.greatest(ss, F.lit(0.0)) / n)).alias("std_mag"),
-        (F.col("t_max") - F.col("t_min")).alias("timespan"),
-        F.when(
-            F.col("t_max") != F.col("t_min"),
-            n / (F.col("t_max") - F.col("t_min")),
-        ).alias("curve_density"),
-    )
-
-
-def abbe_value(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Abbe value per star: ``n/(2(n-1)) * Σ(Δmag)² / Σ(mag-mean)²``
-    (lcc/utils/data_analysis.py:167-193), computed with a window lag for
-    the numerator and power sums for the denominator — the ``abbe``
-    column of :func:`curve_features`, whose unused aggregates Catalyst
-    prunes.
-    """
-    keys = keys or [KEY]
-    return curve_features(obs, keys).select(*keys, "n_obs", "abbe")
-
-
-# curve_features' power sums and its feature columns over them, as Spark
-# SQL: the driver builds each expression in one Py4J round trip, where
-# every Column-API node (F.col, an operator, an alias) takes several.
-# Double literals carry the D suffix: a bare 1.0 or 2.0 parses as
-# DECIMAL, and `_n / (2.0 * (_n - 1.0))` computed in DECIMAL changes the
-# bits of the Abbe value.
-_CURVE_SUMS = (
+# The per-curve aggregate and the columns over it, as Spark SQL: the
+# driver builds each expression in one Py4J round trip, where every
+# Column-API node (F.col, an operator, an alias) takes several. Power
+# sums rather than Spark's stddev/skewness/kurtosis, so the DuckDB
+# oracles reproduce each column with the identical formula. Double
+# literals carry the D suffix: a bare 1.0 or 2.0 parses as DECIMAL, and
+# `_n / (2.0 * (_n - 1.0))` computed in DECIMAL changes the bits of the
+# Abbe value.
+_SUMS = (
     "count(mag) AS _n",
     "sum(_d * _d) AS _sum_sq_diff",
     "sum(mag) AS _s1",
     "sum(mag * mag) AS _s2",
+    "sum(mag * mag * mag) AS _s3",
+    "sum(mag * mag * mag * mag) AS _s4",
     "min(t) AS _tmin",
     "max(t) AS _tmax",
 )
 _SS = "(_s2 - _s1 * _s1 / _n)"
-_CURVE_COLUMNS = (
-    "_n AS n_obs",
-    "_s1 / _n AS mean_mag",
-    f"CASE WHEN _n > 0 THEN sqrt(greatest({_SS}, 0.0D) / _n) END AS std_mag",
-    "_tmax - _tmin AS timespan",
-    "CASE WHEN _tmax - _tmin <> 0.0D THEN _n / (_tmax - _tmin) END AS curve_density",
-    f"CASE WHEN _n > 1 AND {_SS} <> 0.0D "
-    f"THEN _n / (2.0D * (_n - 1.0D)) * _sum_sq_diff / {_SS} END AS abbe",
+# name -> expression; lc_stats' columns come first, abbe last. The
+# std_mag guard: an all-NULL-mag star has _n = 0 and NULL sums, and
+# greatest(NULL, 0.0D) is 0.0, so unguarded it is 0.0 / 0, an ANSI
+# DIVIDE_BY_ZERO (DuckDB's double 0/0 is NULL, which the guard matches).
+# A one-point star has a zero span, so its density is NULL.
+_CURVE_COLUMNS = {
+    "n_obs": "_n",
+    "mean_mag": "_s1 / _n",
+    "std_mag": f"CASE WHEN _n > 0 THEN sqrt(greatest({_SS}, 0.0D) / _n) END",
+    "timespan": "_tmax - _tmin",
+    "curve_density": "CASE WHEN _tmax - _tmin <> 0.0D THEN _n / (_tmax - _tmin) END",
+    "abbe": f"CASE WHEN _n > 1 AND {_SS} <> 0.0D "
+    f"THEN _n / (2.0D * (_n - 1.0D)) * _sum_sq_diff / {_SS} END",
+}
+_LC_STATS = tuple(_CURVE_COLUMNS)[:-1]
+# central moments from raw power sums; `m1 * 3` keeps the operand order
+# the Column API's `3 * m1` planned as
+_M1 = "(_s1 / _n)"
+_M2 = f"(_s2 / _n - {_M1} * {_M1})"
+_M3 = f"(_s3 / _n - {_M1} * 3 * _s2 / _n + {_M1} * 2 * {_M1} * {_M1})"
+_M4 = (
+    f"(_s4 / _n - {_M1} * 4 * _s3 / _n + {_M1} * 6 * {_M1} * _s2 / _n"
+    f" - {_M1} * 3 * {_M1} * {_M1} * {_M1})"
 )
+_MOMENT_COLUMNS = {
+    "skewness": f"CASE WHEN {_M2} > 0.0D THEN {_M3} / power({_M2}, 1.5D) END",
+    "kurtosis": f"CASE WHEN {_M2} > 0.0D THEN {_M4} / ({_M2} * {_M2}) - 3.0D END",
+}
+_COLUMNS = {**_CURVE_COLUMNS, **_MOMENT_COLUMNS}
 
 
-def curve_features(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """All cheap per-curve features in ONE pass: n_obs, mean/std mag,
-    timespan, curve density, Abbe value.
+def per_curve(
+    obs: DataFrame, columns: Iterable[str], keys: list[str] | None = None
+) -> DataFrame:
+    """The named per-curve ``columns`` (any of n_obs, mean_mag, std_mag,
+    timespan, curve_density, abbe, skewness, kurtosis) per ``keys``
+    group, as one projection of the one per-curve aggregate.
 
-    Single shuffle on ``star_id``: the lag window sorts within partitions,
-    then the hash aggregate reuses the same partitioning — the plan at
-    100 TB is scan → shuffle(star_id) → sort → window → partial/final agg,
-    with no second exchange (verified via .explain: one Exchange node).
+    Single shuffle on the keys: the lag window sorts within partitions,
+    then the hash aggregate reuses the same partitioning — scan →
+    shuffle → sort → window → partial/final agg, with no second
+    exchange. Without ``abbe`` the window is pruned and the plan is a
+    straight partial→final hash aggregate with map-side combine.
     """
     keys = keys or [KEY]
     part = ", ".join(map(_q, keys))
@@ -121,9 +97,40 @@ def curve_features(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
     return (
         obs.withColumn("_d", F.expr(lag))
         .groupBy(*keys)
-        .agg(*map(F.expr, _CURVE_SUMS))
-        .selectExpr(*map(_q, keys), *_CURVE_COLUMNS)
+        .agg(*map(F.expr, _SUMS))
+        .selectExpr(*map(_q, keys), *(f"{_COLUMNS[c]} AS {c}" for c in columns))
     )
+
+
+def lc_stats(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """Per-star curve summary: n_obs, mean/std magnitude (population std —
+    numpy semantics, data_analysis.py:164), timespan and curve density."""
+    return per_curve(obs, _LC_STATS, keys)
+
+
+def finalize_sums(sums: DataFrame) -> DataFrame:
+    """:func:`lc_stats`' columns rounded to 6 decimals from per-star
+    sums already named ``_n, _s1, _s2, _tmin, _tmax`` — the read side of
+    a mergeable state (``rollup.finalize_lc_stats``,
+    ``stats_stream.finalize_um_state``)."""
+    return sums.selectExpr(
+        KEY,
+        "_n AS n_obs",
+        *(f"round({_CURVE_COLUMNS[c]}, 6) AS {c}" for c in _LC_STATS[1:]),
+    )
+
+
+def abbe_value(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """Abbe value per star: ``n/(2(n-1)) * Σ(Δmag)² / Σ(mag-mean)²``
+    (lcc/utils/data_analysis.py:167-193), computed with a window lag for
+    the numerator and power sums for the denominator."""
+    return per_curve(obs, ("n_obs", "abbe"), keys)
+
+
+def curve_features(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """All cheap per-curve features in ONE pass: n_obs, mean/std mag,
+    timespan, curve density, Abbe value."""
+    return per_curve(obs, _CURVE_COLUMNS, keys)
 
 
 def skewness_kurtosis(obs: DataFrame, keys: list[str] | None = None) -> DataFrame:
@@ -134,24 +141,7 @@ def skewness_kurtosis(obs: DataFrame, keys: list[str] | None = None) -> DataFram
     can reproduce them with the identical formula (Spark's built-in
     ``skewness``/``kurtosis`` use a different accumulation order).
     """
-    keys = keys or [KEY]
-    agg = obs.groupBy(*keys).agg(*_pop_moments())
-    n = F.col("_n")
-    m1 = F.col("_s1") / n
-    m2 = F.col("_s2") / n - m1 * m1
-    m3 = F.col("_s3") / n - 3 * m1 * F.col("_s2") / n + 2 * m1 * m1 * m1
-    m4 = (
-        F.col("_s4") / n
-        - 4 * m1 * F.col("_s3") / n
-        + 6 * m1 * m1 * F.col("_s2") / n
-        - 3 * m1 * m1 * m1 * m1
-    )
-    return agg.select(
-        *keys,
-        n.alias("n_obs"),
-        F.when(m2 > 0.0, m3 / F.pow(m2, 1.5)).alias("skewness"),
-        F.when(m2 > 0.0, m4 / (m2 * m2) - 3.0).alias("kurtosis"),
-    )
+    return per_curve(obs, ("n_obs", *_MOMENT_COLUMNS), keys)
 
 
 def detrend_stats(obs: DataFrame) -> DataFrame:

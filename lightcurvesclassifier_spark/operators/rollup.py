@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions import curves
 from ..sources import testdata
 
 
@@ -241,9 +242,6 @@ WINDOW w AS (PARTITION BY star_id ORDER BY t
 # A day's ingest then costs one pass over the DELTA, never a recompute
 # over the full history.
 
-LC_STATE_COLS = ("n", "s1", "s2", "tmin", "tmax")
-
-
 def lc_stats_state(obs: DataFrame) -> DataFrame:
     """Per-star mergeable state for :func:`~..functions.curves.lc_stats`."""
     m = F.col("mag")
@@ -279,28 +277,13 @@ def merge_lc_states(*states: DataFrame) -> DataFrame:
 
 
 def finalize_lc_stats(state: DataFrame) -> DataFrame:
-    """Derive the curve_stats surface from the state (same formulas and
-    derivation order as ``functions.curves.lc_stats``, rounded 6)."""
-    n = F.col("n")
-    mean = F.col("s1") / n
-    ss = F.col("s2") - F.col("s1") * F.col("s1") / n
-    span = F.col("tmax") - F.col("tmin")
-    # single-point keys have span 0 — density is undefined, not an
-    # ANSI divide-by-zero crash (same CASE guard in the SQL mirror)
-    density = F.when(span != 0, n / span)
-    return state.select(
-        "star_id",
-        n.alias("n_obs"),
-        F.round(mean, 6).alias("mean_mag"),
-        # n > 0 guard: an all-NULL-mag star has n = count(mag) = 0 and a
-        # NULL ss; greatest(NULL, 0) is 0.0, so the unguarded form was
-        # 0.0/0 — an ANSI DIVIDE_BY_ZERO job-killer (DuckDB's double
-        # 0/0 is NULL, which the guard's NULL now matches exactly)
-        F.round(
-            F.when(n > 0, F.sqrt(F.greatest(ss, F.lit(0.0)) / n)), 6
-        ).alias("std_mag"),
-        F.round(span, 6).alias("timespan"),
-        F.round(density, 6).alias("curve_density"),
+    """Derive the curve_stats surface from the state: the sums renamed to
+    the per-curve aggregate's names, then ``curves.finalize_sums``."""
+    return curves.finalize_sums(
+        state.selectExpr(
+            "star_id", "n AS _n", "s1 AS _s1", "s2 AS _s2",
+            "tmin AS _tmin", "tmax AS _tmax",
+        )
     )
 
 

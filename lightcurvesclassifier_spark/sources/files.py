@@ -13,6 +13,8 @@ StatusResolver (lcc/data_manager/status_resolver.py:101-167).
 
 from __future__ import annotations
 
+import csv
+import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -118,45 +120,42 @@ def save_dat_curves(obs: DataFrame, path: str, round_decimals: int = 3) -> None:
     )
 
 
-def load_query_file(spark: SparkSession, path: str) -> DataFrame:
-    """``#a;b;c`` + ``;``-rows → queries DataFrame
-    (StatusResolver.getQueries, status_resolver.py:101-110). The ``#``
-    marks the header line; all columns come back as strings (the
-    reference evals types downstream — we leave casting to the caller).
+def load_query_file(path: str) -> list[dict]:
+    """``#a;b;c`` + ``;``-rows → one dict per query row
+    (StatusResolver.getQueries, status_resolver.py:101-110), read on the
+    driver: a query file is a small local artifact every caller needs as
+    rows. The ``#`` marks the header line; every value comes back as a
+    string and an empty cell as None (the reference evals types
+    downstream — we leave casting to the caller). Blank lines are
+    skipped.
 
     The delimiter is sniffed from the header line (``;`` default):
-    prepare_query honors a custom ``-d``, so a fixed ``sep=';'`` read
-    would collapse a ``,``-written file into one unusable column."""
-    sep = ";"
-    try:
-        with open(path) as f:
-            header = f.readline()
-        counts = {c: header.count(c) for c in (";", ",", "\t", "|")}
-        best = max(counts, key=counts.get)
-        if counts[best] > 0:
-            sep = best
-    except OSError:
-        pass  # non-local path: fall through to the default separator
-    df = spark.read.csv(path, sep=sep, header=True)
-    first = df.columns[0]
-    if first.startswith("#"):
-        df = df.withColumnRenamed(first, first.lstrip("#").strip())
-    return df
+    prepare_query honors a custom ``-d``, so a fixed ``;`` read would
+    collapse a ``,``-written file into one unusable column."""
+    with open(path, newline="") as f:
+        lines = [line for line in f if line.strip()]
+    if not lines:
+        return []
+    counts = {c: lines[0].count(c) for c in (";", ",", "\t", "|")}
+    best = max(counts, key=counts.get)
+    reader = csv.reader(lines, delimiter=best if counts[best] else ";")
+    names = next(reader)
+    if names[0].startswith("#"):
+        names[0] = names[0].lstrip("#").strip()
+    return [
+        {k: v or None for k, v in itertools.zip_longest(names, row[: len(names)])}
+        for row in reader
+    ]
 
 
-def save_query_file(queries: DataFrame, path: str) -> None:
-    """Inverse of :func:`load_query_file` (status_resolver.py:139-167).
+def save_query_file(queries: list[dict], path: str) -> None:
+    """Inverse of :func:`load_query_file` (status_resolver.py:139-167):
+    the header from the first row's keys, an empty cell for None.
     Query plans are small driver-side artifacts (they parameterize
     searches); written directly, not through a distributed sink."""
-    import pandas as pd
-
-    pdf = queries.toPandas()
-    cols = list(pdf.columns)
 
     def _cell(v) -> str:
-        # pd.isna covers both None and the NaN that toPandas turns
-        # nulls into (a bare `is None` check wrote the literal 'nan')
-        if v is None or (not isinstance(v, (list, dict)) and pd.isna(v)):
+        if v is None:
             return ""
         out = str(v)
         if ";" in out:
@@ -166,6 +165,6 @@ def save_query_file(queries: DataFrame, path: str) -> None:
         return out
 
     with open(path, "w") as f:
-        f.write("#" + ";".join(cols) + "\n")
-        for _, row in pdf.iterrows():
-            f.write(";".join(_cell(v) for v in row) + "\n")
+        f.write("#" + ";".join(queries[0]) + "\n")
+        for row in queries:
+            f.write(";".join(_cell(v) for v in row.values()) + "\n")

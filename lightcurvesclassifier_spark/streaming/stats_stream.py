@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import curves
+
 OBS_STREAM_SCHEMA = (
     "star_id long, t double, mag double, event_time timestamp"
 )
@@ -59,22 +61,16 @@ def um_stats_state(obs: DataFrame) -> DataFrame:
 
 
 def finalize_um_state(state: DataFrame) -> DataFrame:
-    """Derive the curve-stats surface from the integer state (divide
-    the exact sums once; same guards as rollup.finalize_lc_stats)."""
-    n = F.col("n")
-    s1 = F.col("s1_um").cast("double") / 1e6
-    s2 = F.col("s2_um").cast("double") / 1e12
-    mean = s1 / n
-    ss = s2 - s1 * s1 / n
-    span = F.col("tmax") - F.col("tmin")
-    density = F.when(span != 0, n / span)
-    return state.select(
-        "star_id",
-        n.alias("n_obs"),
-        F.round(mean, 6).alias("mean_mag"),
-        F.round(
-            F.when(n > 0, F.sqrt(F.greatest(ss, F.lit(0.0)) / n)), 6
-        ).alias("std_mag"),
-        F.round(span, 6).alias("timespan"),
-        F.round(density, 6).alias("curve_density"),
+    """Derive the curve-stats surface from the integer state: divide the
+    exact sums once into the per-curve aggregate's names, then
+    ``curves.finalize_sums`` (the formulas of rollup.finalize_lc_stats)."""
+    return curves.finalize_sums(
+        state.selectExpr(
+            "star_id",
+            "n AS _n",
+            "CAST(s1_um AS DOUBLE) / 1000000.0D AS _s1",
+            "CAST(s2_um AS DOUBLE) / 1000000000000.0D AS _s2",
+            "tmin AS _tmin",
+            "tmax AS _tmax",
+        )
     )

@@ -331,17 +331,18 @@ def test_filter_stars_two_filters_pass_both(project, spark):
 
 @pytest.mark.usefixtures("smoke_filter")
 def test_filter_stars_warm_run_jobs(project, spark):
-    """A warm run launches 9 Spark jobs: the query file's read and
-    collect, the feature and decide stages the curves' write runs, that
-    write, the commit's jobs and one collect of the published ledger for
-    both text files and the passed count."""
+    """A rerun in a warm session launches 14 Spark jobs, as many as the
+    first run: a run unpersists what it cached, so it computes its
+    curves, features and decisions again, writes the curves, commits and
+    collects the published ledger once. The query file is read on the
+    driver, with no job."""
     with open(os.path.join(project, "queries", "search.txt"), "w") as f:
         f.write("#path\nsearched\ncontam\n")
     _filter_run(project, "run_jobs", "search.txt")
     n = job_count(
         spark, "filter-stars-warm", lambda: _filter_run(project, "run_jobs", "search.txt")
     )
-    assert n == 9
+    assert n == 14
 
 
 @pytest.fixture(scope="module")
@@ -411,7 +412,27 @@ def test_filter_stars_crash_replays_to_clean_run(
     assert passed.count() == sum(l.endswith(";True") for l in body)
 
 
-def test_query_file_custom_delimiter_round_trip(project, spark):
+@pytest.mark.usefixtures("smoke_filter")
+def test_filter_stars_unpersists_its_frames(project, empty_query, spark, monkeypatch):
+    """A run caches its star→query pairs, observations and decisions;
+    none of them may outlive the run, also when its commit fails."""
+    from lightcurvesclassifier_spark.operators import searcher
+
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = cached()
+    _filter_run(project, "run_cache", empty_query)
+    assert cached() == before
+
+    def crashing(*args):
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(searcher, "_publish", crashing)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _filter_run(project, "run_cache", empty_query)
+    assert cached() == before
+
+
+def test_query_file_custom_delimiter_round_trip(project):
     """prepare_query honors -d; load_query_file must sniff the
     delimiter instead of collapsing a ','-written file into one
     column."""
@@ -427,11 +448,8 @@ def test_query_file_custom_delimiter_round_trip(project, spark):
         path=project,
     )
     assert rc == 0
-    df = files.load_query_file(
-        spark, os.path.join(project, "queries", "qcomma.txt")
-    )
-    assert df.columns == ["a", "b"]
-    assert df.count() == 4
+    rows = files.load_query_file(os.path.join(project, "queries", "qcomma.txt"))
+    assert [list(r) for r in rows] == [["a", "b"]] * 4
 
 
 def test_query_value_coercion():

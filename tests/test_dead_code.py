@@ -1,8 +1,8 @@
-"""Dead-code guard: every public top-level def or class in the package
-must be referenced somewhere outside its own body — in the package,
-the tools, the docs, the benchmark, the bench and entry scripts, or the
-tests. A def nothing names is code nobody runs; delete it instead of
-carrying it. Pure AST and text scan, no Spark."""
+"""Dead-code guard: every public top-level def, class or assigned name
+in the package must be referenced somewhere outside its own statement —
+in the package, the tools, the docs, the benchmark, the bench and entry
+scripts, or the tests. A name nothing reads is code nobody runs; delete
+it instead of carrying it. Pure AST and text scan, no Spark."""
 
 import ast
 import re
@@ -37,15 +37,24 @@ def unreferenced_defs() -> list[str]:
             continue
         lines = text.splitlines()
         for node in ast.parse(text).body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) or node.name.startswith("_"):
-                continue
             body = "\n".join(lines[node.lineno - 1:node.end_lineno])
-            own = IDENT.findall(body).count(node.name)
-            if counts[node.name] == own:
-                dead.append(f"{f.relative_to(ROOT)}:{node.name}")
+            for name in _public_names(node):
+                if counts[name] == IDENT.findall(body).count(name):
+                    dead.append(f"{f.relative_to(ROOT)}:{name}")
     return dead
+
+
+def _public_names(node) -> list[str]:
+    """The public names a top-level statement binds: a def, a class, or
+    the plain-name targets of an assignment."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        names = [node.name]
+    elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        names = [t.id for t in targets if isinstance(t, ast.Name)]
+    else:
+        names = []
+    return [n for n in names if not n.startswith("_")]
 
 
 def test_every_public_def_is_referenced():

@@ -55,15 +55,18 @@ def test_dat_round_trip(spark, tmp_path):
     assert got.exceptAll(orig).count() == 0
 
 
-def test_query_file_round_trip(spark, tmp_path):
+def test_query_file_round_trip(tmp_path):
+    """Strings per cell, None for an empty one, blank lines skipped."""
     p = tmp_path / "queries.txt"
-    p.write_text("#ra;dec;delta\n1.5;2.5;10\n3.0;4.0;20\n")
-    q = files.load_query_file(spark, str(p))
-    assert q.columns == ["ra", "dec", "delta"]
-    assert q.count() == 2
+    p.write_text("#ra;dec;delta\n1.5;2.5;10\n\n3.0;;20\n")
+    q = files.load_query_file(str(p))
+    assert q == [
+        {"ra": "1.5", "dec": "2.5", "delta": "10"},
+        {"ra": "3.0", "dec": None, "delta": "20"},
+    ]
     p2 = tmp_path / "queries_out.txt"
     files.save_query_file(q, str(p2))
-    assert p2.read_text() == "#ra;dec;delta\n1.5;2.5;10\n3.0;4.0;20\n"
+    assert p2.read_text() == "#ra;dec;delta\n1.5;2.5;10\n3.0;;20\n"
 
 
 def test_fits_codec_round_trip():

@@ -24,12 +24,12 @@ FEATURES = ("mean_mag", "std_mag", "timespan", "curve_density", "abbe")
 
 def _write_events(path, rows, extra=False):
     """``events.parquet`` in the testdata layout from (star, t_us, mag)."""
-    stars, t_us, mags = zip(*rows)
+    stars, t_us, mags = zip(*rows) if rows else ((), (), ())
     cols = {
         "event_id": pa.array(range(len(rows)), pa.int64()),
         "ts": pa.array([EPOCH_US + t for t in t_us], pa.timestamp("us")),
         "user_id": pa.array(stars, pa.int64()),
-        "event_type": pa.array(["V"] * len(rows)),
+        "event_type": pa.array(["V"] * len(rows), pa.string()),
         "value": pa.array(mags, pa.float64()),
     }
     if extra:

@@ -7,6 +7,9 @@ test rather than a plan audit."""
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
+from lightcurvesclassifier_spark.cli.descriptors import featurize
+from lightcurvesclassifier_spark.functions import curves
+from lightcurvesclassifier_spark.sources import testdata
 from tests.conftest import SF_SMOKE
 
 
@@ -47,6 +50,35 @@ def test_abbe_value_single_shuffle(spark):
     plan = _plan(spark, "abbe_value")
     assert plan.count("Exchange") == 1, plan
     assert "Python" not in plan
+
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_curve_stats_and_moments_prune_the_lag_window(spark):
+    # projections of the per-curve aggregate that read no abbe plan as
+    # one hash aggregate: Catalyst prunes the lag window and unused sums
+    obs = testdata.observations(spark, SF_SMOKE)
+    for df in (
+        curves.lc_stats(obs),
+        curves.lc_stats(obs, keys=["star_id", "band"]),
+        curves.skewness_kurtosis(obs),
+    ):
+        plan = _optimized(df)
+        assert plan.count("Aggregate [") == 1 and "Window" not in plan, plan
+
+
+def test_cli_curve_descriptors_are_one_aggregate(spark):
+    # Abbe, density, skewness and kurtosis: one aggregate, no join
+    obs = testdata.observations(spark, SF_SMOKE).drop("band")
+    feats, cols = featurize(
+        obs,
+        ["AbbeValueDescr", "CurveDensityDescr", "SkewnessDescr", "KurtosisDescr"],
+    )
+    assert cols == ["abbe", "curve_density", "skewness", "kurtosis"]
+    plan = _optimized(feats)
+    assert plan.count("Aggregate [") == 1 and "Join" not in plan, plan
 
 
 def test_phase_fold_broadcasts_period_dim(spark):
