@@ -86,66 +86,74 @@ def main(project_settings, argv: list[str] | None = None) -> int:
         spark, opts.cont, project_settings.INP_LCS, project_settings.QUERIES
     ).cache()
 
-    combos = [
-        _parse_combo(r)
-        for r in files.load_query_file(
-            os.path.join(project_settings.TUN_PARAMS, opts.input)
+    best = None
+    try:
+        combos = [
+            _parse_combo(r)
+            for r in files.load_query_file(
+                os.path.join(project_settings.TUN_PARAMS, opts.input)
+            )
+        ]
+        if not combos:
+            raise ValueError("Empty parameters file")
+
+        def build(combo):
+            feats_s, cols = descr_registry.featurize(searched, opts.descriptors, combo)
+            feats_o, _ = descr_registry.featurize(others, opts.descriptors, combo)
+            # the combo's decider params (e.g. 'NeuronDecider:alpha') reach
+            # the constructors, so combos varying only them differ
+            deciders = [make_decider(d, **combo.get(d, {})) for d in opts.deciders]
+            return StarsFilter(deciders, cols), feats_s, feats_o
+
+        best = ParamsEstimator(
+            searched, others, build, combos, train_ratio=train / (train + test)
+        ).fit()
+        filt, combo = best.filt, best.combo
+
+        filt_name = opts.filt_name.rsplit(".", 1)[0] if "." in opts.filt_name else opts.filt_name
+        filter_dir = os.path.join(project_settings.FILTERS, filt_name)
+        os.makedirs(filter_dir, exist_ok=True)
+
+        persistence.save_filter(filt, os.path.join(filter_dir, filt_name + ".filter"))
+
+        # descriptor configuration the winning filter was TRAINED with —
+        # filter_stars must featurize with the same params or the deciders
+        # score a differently-distributed feature (train/serve skew)
+        import json
+
+        with open(os.path.join(filter_dir, "descr_params.json"), "w") as f:
+            json.dump(
+                {"descriptors": opts.descriptors, "params": combo}, f, indent=2
+            )
+
+        roc = filt.roc(best.s_test, best.o_test, n_thresholds=30)
+        roc_stats = [
+            {"threshold": thr, "false_positive_rate": fpr, "true_positive_rate": tpr}
+            for thr, fpr, tpr in roc
+        ]
+        stats_artifacts.save_roc_file(roc_stats, filter_dir, file_name="ROC_data.dat")
+        stats_artifacts.save_stats(
+            [{k: v for k, v in r.items() if k != "params"} for r in best.stats],
+            filter_dir,
+            file_name="stats.dat",
         )
-    ]
-    if not combos:
-        raise ValueError("Empty parameters file")
 
-    def build(combo):
-        feats_s, cols = descr_registry.featurize(searched, opts.descriptors, combo)
-        feats_o, _ = descr_registry.featurize(others, opts.descriptors, combo)
-        # the combo's decider params (e.g. 'NeuronDecider:alpha') reach
-        # the constructors, so combos varying only them differ
-        deciders = [make_decider(d, **combo.get(d, {})) for d in opts.deciders]
-        return StarsFilter(deciders, cols), feats_s, feats_o
-
-    best = ParamsEstimator(
-        searched, others, build, combos, train_ratio=train / (train + test)
-    ).fit()
-    filt, combo = best.filt, best.combo
-
-    filt_name = opts.filt_name.rsplit(".", 1)[0] if "." in opts.filt_name else opts.filt_name
-    filter_dir = os.path.join(project_settings.FILTERS, filt_name)
-    os.makedirs(filter_dir, exist_ok=True)
-
-    persistence.save_filter(filt, os.path.join(filter_dir, filt_name + ".filter"))
-
-    # descriptor configuration the winning filter was TRAINED with —
-    # filter_stars must featurize with the same params or the deciders
-    # score a differently-distributed feature (train/serve skew)
-    import json
-
-    with open(os.path.join(filter_dir, "descr_params.json"), "w") as f:
-        json.dump(
-            {"descriptors": opts.descriptors, "params": combo}, f, indent=2
-        )
-
-    roc = filt.roc(best.s_test, best.o_test, n_thresholds=30)
-    roc_stats = [
-        {"threshold": thr, "false_positive_rate": fpr, "true_positive_rate": tpr}
-        for thr, fpr, tpr in roc
-    ]
-    stats_artifacts.save_roc_file(roc_stats, filter_dir, file_name="ROC_data.dat")
-    stats_artifacts.save_stats(
-        [{k: v for k, v in r.items() if k != "params"} for r in best.stats],
-        filter_dir,
-        file_name="stats.dat",
-    )
-
-    # searched/contam coords — the tuned feature vectors (make_filter.py:374-379)
-    for df, fname in (
-        (best.feats_s, "searched_coords.dat"),
-        (best.feats_o, "contam_coords.dat"),
-    ):
-        pdf = df.select(*filt.feature_cols).toPandas()
-        with open(os.path.join(filter_dir, fname), "w") as f:
-            f.write("# " + "\t".join(filt.feature_cols) + "\n")
-            for _, row in pdf.iterrows():
-                f.write("\t".join(f"{v:.3f}" for v in row.to_numpy()) + "\n")
+        # searched/contam coords — the tuned feature vectors (make_filter.py:374-379)
+        for df, fname in (
+            (best.feats_s, "searched_coords.dat"),
+            (best.feats_o, "contam_coords.dat"),
+        ):
+            pdf = df.select(*filt.feature_cols).toPandas()
+            with open(os.path.join(filter_dir, fname), "w") as f:
+                f.write("# " + "\t".join(filt.feature_cols) + "\n")
+                for _, row in pdf.iterrows():
+                    f.write("\t".join(f"{v:.3f}" for v in row.to_numpy()) + "\n")
+    finally:
+        # the samples and the winner's test folds are cached for the
+        # tuning; none of them may outlive the run, also when it fails
+        tuned = (best.s_test, best.o_test) if best is not None else ()
+        for df in (searched, others, *tuned):
+            df.unpersist()
 
     print(
         f"Done. Best combo {combo} (precision {best.score}); "

@@ -14,10 +14,14 @@ Reference semantics (lcc/db_tier/base_query.py:38-91):
 
 Spark-first: the box is a pair of BETWEEN predicates Catalyst pushes into
 the parquet scan (partition/row-group pruning at scale); the refine is a
-deterministic column expression; nearest is a global ``ORDER BY sep
+deterministic expression; nearest is a global ``ORDER BY sep
 LIMIT 1`` (TakeOrderedAndProject — no full sort at scale), with
 ``star_id`` as the tie-break (the reference's np.argmin first-index rule
 is list-order-dependent; documented divergence for determinism).
+
+The box and the separation are SQL text shared with the DuckDB mirror
+:func:`cone_search_sql`, so both engines prefilter the same superset and
+compute the same doubles.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from .sky import separation_deg, separation_sql
+from .sky import separation_sql, sql_double
 
 
 def _ra_box(ra: float, dec: float, delta_deg: float):
@@ -51,6 +55,22 @@ def _ra_box(ra: float, dec: float, delta_deg: float):
     return [(0.0, hi), (lo, 360.0)]
 
 
+def _box_sql(ra: float, dec: float, delta_deg: float) -> str:
+    """The prefilter box: dec within ±delta and RA within the band(s) of
+    :func:`_ra_box`."""
+    box = (
+        f"dec_deg BETWEEN {sql_double(dec - delta_deg)} "
+        f"AND {sql_double(dec + delta_deg)}"
+    )
+    ra_ranges = _ra_box(ra, dec, delta_deg)
+    if ra_ranges is None:
+        return box
+    return box + " AND (" + " OR ".join(
+        f"ra_deg BETWEEN {sql_double(lo)} AND {sql_double(hi)}"
+        for lo, hi in ra_ranges
+    ) + ")"
+
+
 def cone_search(
     stars: DataFrame,
     ra: float,
@@ -66,24 +86,16 @@ def cone_search(
     and never win ``nearest``.
     """
     out = stars
-    coordless = F.col("ra_deg").isNull() | F.col("dec_deg").isNull()
+    coordless = "ra_deg IS NULL OR dec_deg IS NULL"
     if prefilter_box:
-        box = F.col("dec_deg").between(dec - delta_deg, dec + delta_deg)
-        ra_ranges = _ra_box(ra, dec, delta_deg)
-        if ra_ranges is not None:
-            ra_pred = None
-            for lo, hi in ra_ranges:
-                p = F.col("ra_deg").between(lo, hi)
-                ra_pred = p if ra_pred is None else (ra_pred | p)
-            box = box & ra_pred
-        out = out.filter(coordless | box)
-    sep = separation_deg(
-        F.lit(float(ra)), F.lit(float(dec)), F.col("ra_deg"), F.col("dec_deg")
+        out = out.filter(f"{coordless} OR ({_box_sql(ra, dec, delta_deg)})")
+    sep = separation_sql(sql_double(ra), sql_double(dec), "ra_deg", "dec_deg")
+    out = out.withColumn(
+        "sep_deg", F.expr(f"CASE WHEN {coordless} THEN NULL ELSE {sep} END")
     )
-    out = out.withColumn("sep_deg", F.when(coordless, F.lit(None)).otherwise(sep))
-    out = out.filter(coordless | (F.col("sep_deg") < F.lit(float(delta_deg))))
+    out = out.filter(f"{coordless} OR sep_deg < {sql_double(delta_deg)}")
     if nearest:
-        out = out.filter(~coordless).orderBy("sep_deg", "star_id").limit(1)
+        out = out.filter(f"NOT ({coordless})").orderBy("sep_deg", "star_id").limit(1)
     return out
 
 
@@ -95,23 +107,13 @@ def cone_search_sql(
     nearest: bool = False,
     extra_cols: str = "*",
 ) -> str:
-    """DuckDB mirror of :func:`cone_search` (non-null-coordinate path) —
-    identical driver-side box literals, so both engines prefilter the
-    same superset."""
-    sep = separation_sql(repr(float(ra)), repr(float(dec)), "ra_deg", "dec_deg")
-    ra_ranges = _ra_box(ra, dec, delta_deg)
-    if ra_ranges is None:
-        ra_sql = "TRUE"
-    else:
-        ra_sql = " OR ".join(
-            f"ra_deg BETWEEN {lo!r} AND {hi!r}" for lo, hi in ra_ranges
-        )
+    """DuckDB mirror of :func:`cone_search` (non-null-coordinate path)."""
+    sep = separation_sql(sql_double(ra), sql_double(dec), "ra_deg", "dec_deg")
     base = (
         f"SELECT {extra_cols}, {sep} AS sep_deg FROM ({table_sql}) "
-        f"WHERE ({ra_sql}) "
-        f"AND dec_deg BETWEEN {dec - delta_deg!r} AND {dec + delta_deg!r}"
+        f"WHERE {_box_sql(ra, dec, delta_deg)}"
     )
-    q = f"SELECT * FROM ({base}) WHERE sep_deg < {float(delta_deg)!r}"
+    q = f"SELECT * FROM ({base}) WHERE sep_deg < {sql_double(delta_deg)}"
     if nearest:
         q += " ORDER BY sep_deg, star_id LIMIT 1"
     return q

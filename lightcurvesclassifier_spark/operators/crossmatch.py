@@ -28,8 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.query_compiler import quote_ident
 from ..schemas import CROSSMATCH_EPS_DEG
-from .sky import separation_deg, separation_sql
+from .sky import separation_sql, sql_double
 
 
 def crossmatch(
@@ -55,23 +56,18 @@ def crossmatch(
     left_cols = left_cols or ["star_id"]
     right_cols = right_cols or ["star_id"]
 
-    l = left.select(
-        *[F.col(c).alias(f"l_{c}") for c in left_cols],
-        F.col("ra_deg").alias("l_ra"),
-        F.col("dec_deg").alias("l_dec"),
-        F.floor(F.col("dec_deg") / F.lit(zone_deg)).alias("_zone"),
+    zone = f"floor(dec_deg / {sql_double(zone_deg)})"
+    l = left.selectExpr(
+        *[f"{quote_ident(c)} AS {quote_ident('l_' + c)}" for c in left_cols],
+        "ra_deg AS l_ra",
+        "dec_deg AS l_dec",
+        f"{zone} AS _zone",
     )
-    r = right.select(
-        *[F.col(c).alias(f"r_{c}") for c in right_cols],
-        F.col("ra_deg").alias("r_ra"),
-        F.col("dec_deg").alias("r_dec"),
-        F.explode(
-            F.array(
-                F.floor(F.col("dec_deg") / F.lit(zone_deg)) - 1,
-                F.floor(F.col("dec_deg") / F.lit(zone_deg)),
-                F.floor(F.col("dec_deg") / F.lit(zone_deg)) + 1,
-            )
-        ).alias("_zone"),
+    r = right.selectExpr(
+        *[f"{quote_ident(c)} AS {quote_ident('r_' + c)}" for c in right_cols],
+        "ra_deg AS r_ra",
+        "dec_deg AS r_dec",
+        f"explode(array({zone} - 1, {zone}, {zone} + 1)) AS _zone",
     )
 
     # Exact wrap-aware RA band (prefilter only — exactness comes from
@@ -82,25 +78,24 @@ def crossmatch(
     # genuine matches. When sin(eps/2) ≥ cos(m) the asin argument
     # saturates (least 1.0) and the band degenerates to 180° = no RA
     # pruning — the correct near-pole behavior.
-    dra = F.abs(F.col("l_ra") - F.col("r_ra"))
-    dra = F.least(dra, 360.0 - dra)
-    max_abs_dec = F.greatest(F.abs(F.col("l_dec")), F.abs(F.col("r_dec")))
-    half_eps = F.radians(F.lit(eps_deg)) / 2.0
-    cosm = F.cos(F.radians(max_abs_dec))
+    eps = sql_double(eps_deg)
+    dra = "abs(l_ra - r_ra)"
+    cosm = "cos(radians(greatest(abs(l_dec), abs(r_dec))))"
+    sin_half_eps = f"sin(radians({eps}) / 2.0)"
     # cos(m) ≤ sin(eps/2) — within eps/2 of a pole (including the
     # nonphysical |dec| ≥ 90 rows synthetic jitter can produce, where
     # cos goes non-positive): every RA is reachable, skip the prefilter
-    ra_band = F.degrees(2.0 * F.asin(F.least(F.lit(1.0), F.sin(half_eps) / cosm)))
-    ra_ok = (cosm <= F.sin(half_eps)) | (dra <= ra_band)
-    sep = separation_deg(
-        F.col("l_ra"), F.col("l_dec"), F.col("r_ra"), F.col("r_dec")
+    ra_ok = (
+        f"{cosm} <= {sin_half_eps} OR least({dra}, 360.0 - {dra}) <= "
+        f"degrees(2.0 * asin(least(1.0, {sin_half_eps} / {cosm})))"
     )
+    sep = separation_sql("l_ra", "l_dec", "r_ra", "r_dec")
 
     return (
         l.join(r, "_zone")
         .filter(ra_ok)
-        .withColumn("sep_deg", sep)
-        .filter(F.col("sep_deg") < F.lit(eps_deg))
+        .withColumn("sep_deg", F.expr(sep))
+        .filter(f"sep_deg < {eps}")
         .drop("_zone", "l_ra", "l_dec", "r_ra", "r_dec")
     )
 
@@ -184,5 +179,5 @@ def crossmatch_sql(
     return (
         f"SELECT {sel_l}, {sel_r}, {sep} AS sep_deg "
         f"FROM ({left_sql}) l, ({right_sql}) r "
-        f"WHERE {sep} < {float(eps_deg)!r}"
+        f"WHERE {sep} < {sql_double(eps_deg)}"
     )

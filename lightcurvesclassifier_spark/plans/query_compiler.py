@@ -1,4 +1,4 @@
-"""Compile the reference's dict-based query language to Catalyst predicates.
+"""Compile the reference's dict-based query language to Spark SQL.
 
 The reference expresses queries as ``list[dict]`` — one dict per query,
 with three predicate forms (lcc/db_tier/TAP_query.py:116-171,
@@ -6,14 +6,17 @@ README.md:238-241):
 
 - ``{"col": value}``          → equality
 - ``{"col": (lo, hi)}``       → BETWEEN (inclusive)
-- ``{"col": "<5"}`` / ``">…"`` / ``"=…"`` → raw comparison
+- ``{"col": "<5"}`` / ``">…"`` / ``"=…"`` / ``"<=…"`` / ``">=…"`` /
+  ``"!=…"`` → raw comparison
 - ``{"ra": .., "dec": .., "delta": ..[, "nearest": True]}`` → cone search
   (handled by ``operators/cone_search.py``, not here)
 
-Compiling these to ``Column`` expressions makes every predicate visible
-to Catalyst — pushed into the parquet scan, used for partition pruning —
-instead of being applied per-object in Python like the reference.
-A query *list* is a disjunction of its per-dict conjunctions.
+:func:`parse_condition` reads a value once; :func:`compile_condition`
+renders it as Spark SQL and ``sources.remote.adql_condition`` as ADQL.
+Compiling to one SQL predicate makes every condition visible to Catalyst
+— pushed into the parquet scan, used for partition pruning — instead of
+being applied per-object in Python like the reference. A query *list* is
+a disjunction of its per-dict conjunctions.
 """
 
 from __future__ import annotations
@@ -27,54 +30,59 @@ from pyspark.sql import Column, DataFrame, functions as F
 CONE_KEYS = {"ra", "dec", "delta", "nearest"}
 
 
-def compile_condition(col: str, value: Any) -> Column:
-    """One predicate: the three forms of TAP_query.py:116-171, plus the
-    Kepler connector's ``"lo..hi"`` range token (kepler.py:111-146)."""
-    c = F.col(col)
+def parse_condition(value: Any) -> tuple[str, tuple]:
+    """One DSL value as (operator, operands): ``BETWEEN`` with (lo, hi),
+    else one of ``= < > <= >= <>`` with one operand; a renderer joins
+    the operands with ``AND``. The three forms of TAP_query.py:116-171,
+    plus the Kepler connector's ``"lo..hi"`` range token
+    (kepler.py:111-146)."""
     if isinstance(value, (tuple, list)) and len(value) == 2:
-        return c.between(F.lit(value[0]), F.lit(value[1]))
-    if isinstance(value, str) and ".." in value:
+        return "BETWEEN", tuple(value)
+    if not isinstance(value, str):
+        return "=", (value,)
+    if ".." in value:
         lo, _, hi = value.partition("..")
         try:
-            return c.between(F.lit(float(lo)), F.lit(float(hi)))
+            return "BETWEEN", (float(lo), float(hi))
         except ValueError:
             pass  # not numeric — fall through to the comparison forms
-    if isinstance(value, str) and value[:1] in ("<", ">", "=", "!"):
-        # two-char operators first: '>=5' must not parse as '>' '=5'
-        # (a string literal that ANSI mode fails to cast at runtime)
-        if value[:2] in (">=", "<=", "!="):
-            op, raw = value[:2], value[2:].strip()
-        elif value[:1] == "!":
-            return c == F.lit(value)  # bare '!' is not an operator
-        else:
-            op, raw = value[0], value[1:].strip()
-        try:
-            lit: Any = float(raw) if "." in raw or "e" in raw.lower() else int(raw)
-        except ValueError:
-            lit = raw
-        if op == "<":
-            return c < F.lit(lit)
-        if op == ">":
-            return c > F.lit(lit)
-        if op == "<=":
-            return c <= F.lit(lit)
-        if op == ">=":
-            return c >= F.lit(lit)
-        if op == "!=":
-            return c != F.lit(lit)
-        return c == F.lit(lit)
-    return c == F.lit(value)
+    # two-char operators first: '>=5' must not parse as '>' '=5'; a bare
+    # '!' is not an operator, so '!x' is an equality with the string
+    op = next((o for o in (">=", "<=", "!=", "<", ">", "=") if value.startswith(o)), None)
+    if op is None:
+        return "=", (value,)
+    raw = value[len(op):].strip()
+    try:
+        lit: Any = float(raw) if "." in raw or "e" in raw.lower() else int(raw)
+    except ValueError:
+        lit = raw
+    return ("<>" if op == "!=" else op), (lit,)
 
 
-def compile_query(query: Mapping[str, Any]) -> Column | None:
-    """Conjunction of one query dict's predicates (cone keys excluded)."""
-    cond: Column | None = None
-    for col, value in query.items():
-        if col in CONE_KEYS:
-            continue
-        p = compile_condition(col, value)
-        cond = p if cond is None else (cond & p)
-    return cond
+def sql_literal(v: Any) -> str:
+    """``v`` as a Spark SQL literal of the type ``F.lit(v)`` gives."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, numbers.Real):
+        return sql_number(v)
+    raise TypeError(f"no Spark SQL literal for {v!r}")
+
+
+def compile_condition(col: str, value: Any) -> str:
+    """One predicate as Spark SQL."""
+    op, operands = parse_condition(value)
+    return f"({quote_ident(col)} {op} {' AND '.join(map(sql_literal, operands))})"
+
+
+def compile_query(query: Mapping[str, Any]) -> str | None:
+    """Conjunction of one query dict's predicates (cone keys excluded);
+    None when it constrains nothing."""
+    conds = [compile_condition(c, v) for c, v in query.items() if c not in CONE_KEYS]
+    return " AND ".join(conds) or None
 
 
 def apply_queries(df: DataFrame, queries: Sequence[Mapping[str, Any]]) -> DataFrame:
@@ -85,14 +93,11 @@ def apply_queries(df: DataFrame, queries: Sequence[Mapping[str, Any]]) -> DataFr
         # an empty DISJUNCTION matches nothing (the reference's loop
         # over zero queries yields zero results) — returning the full
         # table here silently processed the entire corpus
-        return df.filter(F.lit(False))
-    disj: Column | None = None
-    for q in queries:
-        c = compile_query(q)
-        if c is None:
-            return df  # an unconstrained query matches everything
-        disj = c if disj is None else (disj | c)
-    return df if disj is None else df.filter(disj)
+        return df.filter("FALSE")
+    conds = [compile_query(q) for q in queries]
+    if None in conds:
+        return df  # an unconstrained query matches everything
+    return df.filter(" OR ".join(f"({c})" for c in conds))
 
 
 def quote_ident(name: str) -> str:

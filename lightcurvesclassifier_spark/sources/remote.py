@@ -27,6 +27,8 @@ from typing import Any, Callable, Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.query_compiler import parse_condition
+
 # ---------------------------------------------------------------------------
 # ADQL building — TapClient semantics (lcc/db_tier/TAP_query.py:116-171)
 
@@ -42,25 +44,10 @@ def _fmt_val(v: Any) -> str:
 
 
 def adql_condition(col: str, value: Any) -> str:
-    """One WHERE clause: equality, (lo, hi) → BETWEEN, or a raw
-    ``<``/``>``/``=`` comparison string — the three predicate forms."""
-    q = _quote_ident(col)
-    if isinstance(value, (tuple, list)) and len(value) == 2:
-        return f"({q} BETWEEN {_fmt_val(value[0])} AND {_fmt_val(value[1])})"
-    if isinstance(value, str) and ".." in value:
-        lo, _, hi = value.partition("..")
-        try:
-            return f"({q} BETWEEN {float(lo)} AND {float(hi)})"
-        except ValueError:
-            pass
-    if isinstance(value, str) and value[:1] in ("<", ">", "="):
-        op, raw = value[0], value[1:].strip()
-        try:
-            lit = float(raw) if "." in raw or "e" in raw.lower() else int(raw)
-            return f"({q} {op} {lit})"
-        except ValueError:
-            return f"({q} {op} {_fmt_val(raw)})"
-    return f"({q} = {_fmt_val(value)})"
+    """One WHERE clause, from the query DSL's one value parse
+    (``plans.query_compiler.parse_condition``)."""
+    op, operands = parse_condition(value)
+    return f"({_quote_ident(col)} {op} {' AND '.join(map(_fmt_val, operands))})"
 
 
 def cone_box_conditions(

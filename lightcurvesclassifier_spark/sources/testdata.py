@@ -3,8 +3,8 @@
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file each under ``{sf_dir}/``.
 
-The astronomy-shaped views are derived deterministically so the DuckDB
-oracle can reproduce them with plain SQL:
+The derived views are deterministic functions of those tables, so the
+DuckDB oracle reproduces them with plain SQL:
 
 - ``observations``: the ``events`` table as a photometric time series
   (user → star, ts → t in days since 2024-01-01, value → mag). The
@@ -13,12 +13,29 @@ oracle can reproduce them with plain SQL:
 - ``stars``: the ``customer`` table as a star catalog with synthetic
   sky coordinates derived from the key (golden-angle spiral — evenly
   spreads points over the sphere, deterministic in both engines).
+- ``detections``, ``periods``, ``calibrations`` and the planted text
+  corpora, each described where it is defined.
+
+Each view is one SQL text whose tables are ``{table}`` placeholders.
+Spark runs it through ``spark.sql`` with each placeholder bound to that
+table's parquet; the exported ``*_SQL`` constant is the same text with
+bare table names, which the oracle runs. The text keeps to what Spark
+4.1 and DuckDB 1.0 both read alike: ``%`` for fmod, ``CAST(… AS
+STRING)``, ``CROSS JOIN (VALUES …)`` for a row series, ``e0`` literals
+for DOUBLE. Three views keep a Spark-only form: ``observations``,
+because its timestamp reader differs by Spark build, and
+``contamination_eval`` and ``c4_corpus``, because the two engines spell
+array slice, join and reverse differently and the oracle's connection
+carries no macros; ``c4_corpus`` still shares every line but the first
+with its oracle text. ``stars_more`` is Spark-only as well (DuckDB 1.0
+has no ``map(k, v, …)``), built from the fragments the oracle mirrors.
 """
 
 from __future__ import annotations
 
 import os
 import stat
+import string
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -56,16 +73,41 @@ OBS_SQL = (
     "value AS mag FROM events"
 )
 
+
+def _duckdb_sql(template: str) -> str:
+    """A view's text with bare table names: what the DuckDB oracle runs,
+    with one view per table of ``TABLES``."""
+    return template.format(**{t: t for t in TABLES})
+
+
+def _sql_view(spark: SparkSession, sf_dir: str, template: str) -> DataFrame:
+    """``spark.sql`` of a view's text, each ``{table}`` bound to that
+    table's parquet under ``sf_dir``."""
+    tables = {t for _, t, _, _ in string.Formatter().parse(template) if t}
+    return spark.sql(template, **{t: load_table(spark, sf_dir, t) for t in tables})
+
+
 # Synthetic star catalog from `customer`: golden-angle RA, key-spread dec.
-# `e0` suffixes force DOUBLE literals in DuckDB (it parses bare decimal
-# literals as DECIMAL, which would diverge from Spark's double arithmetic).
-STARS_SQL = (
-    "SELECT c_custkey AS star_id, c_name AS name, "
-    "fmod(c_custkey * 137.508e0, 360.0e0) AS ra_deg, "
-    "fmod(c_custkey * 61.803e0, 180.0e0) - 90.0e0 AS dec_deg, "
-    "c_mktsegment AS star_class, c_acctbal AS acctbal "
-    "FROM customer"
+# `e0` suffixes make DOUBLE literals in both engines (each parses a bare
+# decimal literal as DECIMAL); `%` on doubles is fmod in both.
+_STAR_COLUMNS = (
+    "c_custkey AS star_id, c_name AS name, "
+    "c_custkey * 137.508e0 % 360.0e0 AS ra_deg, "
+    "c_custkey * 61.803e0 % 180.0e0 - 90.0e0 AS dec_deg, "
+    "c_mktsegment AS star_class, c_acctbal AS acctbal"
 )
+_STARS = f"SELECT {_STAR_COLUMNS} FROM {{customer}}"
+STARS_SQL = _duckdb_sql(_STARS)
+
+
+def stars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """customer → synthetic star catalog with deterministic coordinates.
+
+    ``ra_deg = (key * 137.508) mod 360`` (golden angle) and
+    ``dec_deg = (key * 61.803) mod 180 - 90`` give a deterministic
+    pseudo-uniform sky scatter (``STARS_SQL``).
+    """
+    return _sql_view(spark, sf_dir, _STARS)
 
 
 # Deterministic `more` properties layered onto the star catalog, so the
@@ -80,213 +122,125 @@ B_MAG_SQL = "CASE WHEN c_custkey % 11 <> 0 THEN 10.0e0 + (c_custkey % 97) / 10.0
 V_MAG_SQL = "10.0e0 + (c_custkey % 89) / 10.0e0"
 PERIOD_SQL = "CASE WHEN c_custkey % 3 <> 1 THEN 0.5e0 + (c_custkey % 40) / 8.0e0 END"
 
-PERIODS_SQL = (
-    f"SELECT c_custkey AS star_id, 0.5e0 + (c_custkey % 40) / 8.0e0 AS period "
-    "FROM customer WHERE c_custkey % 3 <> 1"
+# DuckDB 1.0 has no map(k1, v1, …), so this text is Spark's only; the
+# oracle mirrors the map's contents with the three fragments above.
+_STARS_MORE = (
+    f"SELECT {_STAR_COLUMNS}, map('b_mag', {B_MAG_SQL}, 'v_mag', {V_MAG_SQL}, "
+    f"'period', {PERIOD_SQL}) AS more FROM {{customer}}"
 )
 
 
 def stars_more(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star catalog + open-schema ``more`` map (MapType path of the engine).
+    """Star catalog + open-schema ``more`` map (MapType path of the engine)."""
+    return _sql_view(spark, sf_dir, _STARS_MORE)
 
-    Values are derived from the key so DuckDB can mirror the *contents*
-    (B_MAG_SQL / V_MAG_SQL / PERIOD_SQL) without needing map types."""
-    k = F.col("star_id")
-    b_mag = F.when(k % 11 != 0, 10.0 + (k % 97) / F.lit(10.0))
-    v_mag = 10.0 + (k % 89) / F.lit(10.0)
-    period = F.when(k % 3 != 1, 0.5 + (k % 40) / F.lit(8.0))
-    return stars(spark, sf_dir).withColumn(
-        "more",
-        F.create_map(
-            F.lit("b_mag"), b_mag, F.lit("v_mag"), v_mag, F.lit("period"), period
-        ),
-    )
+
+_PERIODS = (
+    f"SELECT * FROM (SELECT c_custkey AS star_id, {PERIOD_SQL} AS period "
+    "FROM {customer}) WHERE period IS NOT NULL"
+)
+PERIODS_SQL = _duckdb_sql(_PERIODS)
 
 
 def periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small (star_id, period) dimension for phase folding — broadcast side."""
-    sm = stars_more(spark, sf_dir)
-    return sm.select(
-        "star_id", F.element_at("more", "period").alias("period")
-    ).filter(F.col("period").isNotNull())
+    return _sql_view(spark, sf_dir, _PERIODS)
 
 
 # Synthetic detection catalog from `orders`: each order is a "detection" of
 # its customer's star, jittered by a deterministic sub-arcsecond offset —
 # some within the 0.5″ crossmatch EPS, some beyond (exercises the refine).
-DETECTIONS_SQL = (
+_DETECTIONS = (
     "SELECT o_orderkey AS det_id, o_custkey AS star_id, "
-    "fmod(o_custkey * 137.508e0, 360.0e0) + ((o_orderkey % 7) - 3) * 7e-5 AS ra_deg, "
-    "fmod(o_custkey * 61.803e0, 180.0e0) - 90.0e0 + ((o_orderkey % 5) - 2) * 4e-5 AS dec_deg "
-    "FROM orders"
+    "o_custkey * 137.508e0 % 360.0e0 + ((o_orderkey % 7) - 3) * 7e-5 AS ra_deg, "
+    "o_custkey * 61.803e0 % 180.0e0 - 90.0e0 + ((o_orderkey % 5) - 2) * 4e-5 AS dec_deg "
+    "FROM {orders}"
 )
+DETECTIONS_SQL = _duckdb_sql(_DETECTIONS)
+
+
+def detections(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders → jittered re-detections of the customer stars. Used to
+    exercise the crossmatch join."""
+    return _sql_view(spark, sf_dir, _DETECTIONS)
 
 
 # Dedup test corpus: documents ∪ exact copies (doc_id % 7) ∪ near-dup
 # copies with ' zz' appended (doc_id % 10). Deterministic planted
 # duplicates so dedup operators have a non-trivial, oracle-checkable
-# answer (the raw documents table contains no duplicates).
-DEDUP_CORPUS_SQL = (
-    "SELECT doc_id, text FROM documents "
-    "UNION ALL SELECT doc_id + 2000000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0 "
-    "UNION ALL SELECT doc_id + 1000000 AS doc_id, text || ' zz' AS text "
-    "FROM documents WHERE doc_id % 10 = 0"
-)
-
-# same synthetic dup structure, carrying the language stratum (the
-# stratified cluster-safe split needs a stratum column on the corpus)
-DEDUP_CORPUS_LANG_SQL = (
-    "SELECT doc_id, text, lang FROM documents "
-    "UNION ALL SELECT doc_id + 2000000 AS doc_id, text, lang FROM documents WHERE doc_id % 7 = 0 "
+# answer (the raw documents table contains no duplicates). The `lang`
+# variant carries the language stratum (the stratified cluster-safe split
+# needs a stratum column on the corpus).
+_DEDUP_CORPUS_LANG = (
+    "SELECT doc_id, text, lang FROM {documents} "
+    "UNION ALL SELECT doc_id + 2000000 AS doc_id, text, lang FROM {documents} WHERE doc_id % 7 = 0 "
     "UNION ALL SELECT doc_id + 1000000 AS doc_id, text || ' zz' AS text, lang "
-    "FROM documents WHERE doc_id % 10 = 0"
+    "FROM {documents} WHERE doc_id % 10 = 0"
 )
+_DEDUP_CORPUS = f"SELECT doc_id, text FROM ({_DEDUP_CORPUS_LANG})"
+DEDUP_CORPUS_LANG_SQL = _duckdb_sql(_DEDUP_CORPUS_LANG)
+DEDUP_CORPUS_SQL = _duckdb_sql(_DEDUP_CORPUS)
 
 
 def dedup_corpus_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`dedup_corpus` carrying the ``lang`` stratum column."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    exact = d.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"), "text", "lang"
-    )
-    near = d.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-        "lang",
-    )
-    return d.unionByName(exact).unionByName(near)
+    return _sql_view(spark, sf_dir, _DEDUP_CORPUS_LANG)
 
 
 def dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    exact = d.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"), "text"
-    )
-    near = d.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz")).alias("text"),
-    )
-    return d.unionByName(exact).unionByName(near)
+    return _sql_view(spark, sf_dir, _DEDUP_CORPUS)
 
 
 # Synthetic per-star calibration epochs (an as-of-join dimension): 14
 # epochs every 50 days, phase-offset per star so some early events have
 # no prior epoch (exercising the left-join null path); gain drifts
-# deterministically per (star, epoch). `e0` suffixes force DOUBLE in
-# DuckDB (same convention as STARS_SQL).
-CALIB_SQL = (
+# deterministically per (star, epoch).
+_CALIBRATIONS = (
     "SELECT s.star_id, "
     "CAST(k * 50.0e0 + (s.star_id % 7) AS DOUBLE) AS calib_t, "
     "round(1.0e0 + (s.star_id % 5) * 0.01e0 + k * 0.001e0, 6) AS gain "
-    f"FROM (SELECT DISTINCT user_id AS star_id FROM events) s, "
-    "unnest(generate_series(0, 13)) t(k)"
+    "FROM (SELECT DISTINCT user_id AS star_id FROM {events}) s "
+    "CROSS JOIN (VALUES " + ", ".join(f"({k})" for k in range(14)) + ") AS t(k)"
 )
+CALIB_SQL = _duckdb_sql(_CALIBRATIONS)
 
 
 def calibrations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stars = (
-        load_table(spark, sf_dir, "events")
-        .select(F.col("user_id").alias("star_id"))
-        .distinct()
-    )
-    k = F.explode(F.sequence(F.lit(0), F.lit(13))).alias("k")
-    sid = F.col("star_id")
-    return stars.select("star_id", k).select(
-        "star_id",
-        (F.col("k") * 50.0 + (sid % 7)).cast("double").alias("calib_t"),
-        F.round(1.0 + (sid % 5) * 0.01 + F.col("k") * 0.001, 6).alias("gain"),
-    )
+    return _sql_view(spark, sf_dir, _CALIBRATIONS)
 
 
 # Planted-PII corpus: deterministic email / IPv4 / phone insertions so the
 # redaction operator has a non-trivial, oracle-checkable answer (the raw
 # documents contain no PII-shaped strings).
-PII_CORPUS_SQL = (
+_PII_CORPUS = (
     "SELECT doc_id, CASE "
-    "WHEN doc_id % 11 = 0 THEN text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now' "
-    "WHEN doc_id % 11 = 1 THEN text || ' server at 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.17 port' "
-    "WHEN doc_id % 11 = 2 THEN text || ' call +1 555-' || CAST(1000 + doc_id % 9000 AS VARCHAR) || ' today' "
-    "ELSE text END AS text FROM documents"
+    "WHEN doc_id % 11 = 0 THEN text || ' contact user' || CAST(doc_id AS STRING) || '@example.com now' "
+    "WHEN doc_id % 11 = 1 THEN text || ' server at 10.0.' || CAST(doc_id % 256 AS STRING) || '.17 port' "
+    "WHEN doc_id % 11 = 2 THEN text || ' call +1 555-' || CAST(1000 + doc_id % 9000 AS STRING) || ' today' "
+    "ELSE text END AS text FROM {documents}"
 )
+PII_CORPUS_SQL = _duckdb_sql(_PII_CORPUS)
 
 
 def pii_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    did = F.col("doc_id")
-    text = (
-        F.when(
-            did % 11 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"),
-                did.cast("string"),
-                F.lit("@example.com now"),
-            ),
-        )
-        .when(
-            did % 11 == 1,
-            F.concat(
-                F.col("text"),
-                F.lit(" server at 10.0."),
-                (did % 256).cast("string"),
-                F.lit(".17 port"),
-            ),
-        )
-        .when(
-            did % 11 == 2,
-            F.concat(
-                F.col("text"),
-                F.lit(" call +1 555-"),
-                (1000 + did % 9000).cast("string"),
-                F.lit(" today"),
-            ),
-        )
-        .otherwise(F.col("text"))
-    )
-    return d.select("doc_id", text.alias("text"))
+    return _sql_view(spark, sf_dir, _PII_CORPUS)
 
 
 # Planted-URL corpus: deterministic http(s) URL insertions so the
 # domain-extraction operator has a non-trivial, oracle-checkable answer
 # (the raw documents contain no URL-shaped strings). Domains repeat
 # (doc_id % 5) so the per-domain rollup has real aggregation to do.
-URL_CORPUS_SQL = (
+_URL_CORPUS = (
     "SELECT doc_id, CASE "
-    "WHEN doc_id % 9 = 0 THEN text || ' see https://cdn' || CAST(doc_id % 5 AS VARCHAR) || '.example.org/a' || CAST(doc_id AS VARCHAR) || ' now' "
-    "WHEN doc_id % 9 = 1 THEN text || ' via http://www.site' || CAST(doc_id % 5 AS VARCHAR) || '.test/x and https://cdn' || CAST(doc_id % 5 AS VARCHAR) || '.example.org/b' "
-    "ELSE text END AS text FROM documents"
+    "WHEN doc_id % 9 = 0 THEN text || ' see https://cdn' || CAST(doc_id % 5 AS STRING) || '.example.org/a' || CAST(doc_id AS STRING) || ' now' "
+    "WHEN doc_id % 9 = 1 THEN text || ' via http://www.site' || CAST(doc_id % 5 AS STRING) || '.test/x and https://cdn' || CAST(doc_id % 5 AS STRING) || '.example.org/b' "
+    "ELSE text END AS text FROM {documents}"
 )
+URL_CORPUS_SQL = _duckdb_sql(_URL_CORPUS)
 
 
 def url_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    did = F.col("doc_id")
-    text = (
-        F.when(
-            did % 9 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" see https://cdn"),
-                (did % 5).cast("string"),
-                F.lit(".example.org/a"),
-                did.cast("string"),
-                F.lit(" now"),
-            ),
-        )
-        .when(
-            did % 9 == 1,
-            F.concat(
-                F.col("text"),
-                F.lit(" via http://www.site"),
-                (did % 5).cast("string"),
-                F.lit(".test/x and https://cdn"),
-                (did % 5).cast("string"),
-                F.lit(".example.org/b"),
-            ),
-        )
-        .otherwise(F.col("text"))
-    )
-    return d.select("doc_id", text.alias("text"))
+    return _sql_view(spark, sf_dir, _URL_CORPUS)
 
 
 # Synthetic benchmark/eval set for decontamination: "contaminated" eval
@@ -305,16 +259,15 @@ CONTAM_EVAL_SQL = (
 
 
 def contamination_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    sliced = F.slice(toks, 4, 18)
-    contaminated = d.filter(F.col("doc_id") % 13 == 0).select(
-        (F.col("doc_id") + 5000000).alias("doc_id"),
-        F.array_join(sliced, " ").alias("text"),
+    """CONTAM_EVAL_SQL in Spark's spelling of array slice, join and
+    reverse (DuckDB 1.0's differ)."""
+    d = load_table(spark, sf_dir, "documents")
+    tokens = "slice(split(text, ' '), 4, 18)"
+    contaminated = d.filter("doc_id % 13 = 0").selectExpr(
+        "doc_id + 5000000 AS doc_id", f"array_join({tokens}, ' ') AS text"
     )
-    clean = d.filter(F.col("doc_id") % 13 == 1).select(
-        (F.col("doc_id") + 6000000).alias("doc_id"),
-        F.array_join(F.reverse(sliced), " ").alias("text"),
+    clean = d.filter("doc_id % 13 = 1").selectExpr(
+        "doc_id + 6000000 AS doc_id", f"array_join(reverse({tokens}), ' ') AS text"
     )
     return contaminated.unionByName(clean)
 
@@ -381,49 +334,12 @@ def observations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """customer → synthetic star catalog with deterministic coordinates.
-
-    ``ra_deg = (key * 137.508) mod 360`` (golden angle) and
-    ``dec_deg = (key * 61.803) mod 180 - 90`` give a deterministic
-    pseudo-uniform sky scatter reproducible in ANSI SQL (``fmod``).
-    """
-    c = load_table(spark, sf_dir, "customer")
-    return c.select(
-        F.col("c_custkey").alias("star_id"),
-        F.col("c_name").alias("name"),
-        (F.col("c_custkey") * F.lit(137.508) % F.lit(360.0)).alias("ra_deg"),
-        ((F.col("c_custkey") * F.lit(61.803) % F.lit(180.0)) - F.lit(90.0)).alias(
-            "dec_deg"
-        ),
-        F.col("c_mktsegment").alias("star_class"),
-        F.col("c_acctbal").alias("acctbal"),
-    )
-
-
-def detections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orders → jittered re-detections of the customer stars (see
-    DETECTIONS_SQL). Used to exercise the crossmatch join."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        F.col("o_orderkey").alias("det_id"),
-        F.col("o_custkey").alias("star_id"),
-        (
-            (F.col("o_custkey") * F.lit(137.508) % F.lit(360.0))
-            + ((F.col("o_orderkey") % 7) - 3) * F.lit(7e-5)
-        ).alias("ra_deg"),
-        (
-            (F.col("o_custkey") * F.lit(61.803) % F.lit(180.0))
-            - F.lit(90.0)
-            + ((F.col("o_orderkey") % 5) - 2) * F.lit(4e-5)
-        ).alias("dec_deg"),
-    )
-
-
 # Ident-carrying variants for the full Star.__eq__ crossmatch: every
 # star's ident is {"main": name}; every third detection carries an ident
 # pointing at a DIFFERENT star (key+7) — matches the ident path without
 # (usually) matching the coordinate path, so both join halves do work.
+# Spark carries the ident as a map over the shared view; the oracle's
+# texts give the map's one value as `ident_name`.
 STARS_IDENT_SQL = (
     "SELECT *, printf('Customer#%09d', star_id) AS ident_name "
     f"FROM ({STARS_SQL})"
@@ -436,20 +352,18 @@ DETECTIONS_IDENT_SQL = (
 
 
 def stars_ident(spark: SparkSession, sf_dir: str) -> DataFrame:
-    st = stars(spark, sf_dir)
-    return st.withColumn(
-        "ident", F.create_map(F.lit("main"), F.col("name"))
+    return spark.sql(
+        "SELECT *, map('main', name) AS ident FROM {stars}",
+        stars=stars(spark, sf_dir),
     )
 
 
 def detections_ident(spark: SparkSession, sf_dir: str) -> DataFrame:
-    det = detections(spark, sf_dir)
-    name = F.format_string("Customer#%09d", F.col("star_id") + 7)
-    return det.withColumn(
-        "ident",
-        F.when(
-            F.col("det_id") % 3 == 0, F.create_map(F.lit("main"), name)
-        ),
+    return spark.sql(
+        "SELECT *, CASE WHEN det_id % 3 = 0 "
+        "THEN map('main', printf('Customer#%09d', star_id + 7)) END AS ident "
+        "FROM {detections}",
+        detections=detections(spark, sf_dir),
     )
 
 
@@ -504,37 +418,20 @@ def curves(
 # classes planted per doc_id residue — typographic quotes/dashes, NBSP,
 # shouting caps, CR/LF and tab debris, doubled spaces — so
 # text.normalize_text has real work, identically on both engines.
-NOISY_CORPUS_SQL = (
+_NOISY_CORPUS = (
     "SELECT doc_id, CASE "
     "WHEN doc_id % 8 = 0 THEN '  ' || chr(9) || '“' || text || '”' "
     "|| chr(160) || '— fin ' "
     "WHEN doc_id % 8 = 1 THEN upper(text) || chr(13) || chr(10) "
     "WHEN doc_id % 8 = 2 THEN replace(text, ' ', '  ') "
     "WHEN doc_id % 8 = 3 THEN '‘' || text || '’' || chr(9) || chr(9) "
-    "ELSE text END AS text FROM documents"
+    "ELSE text END AS text FROM {documents}"
 )
+NOISY_CORPUS_SQL = _duckdb_sql(_NOISY_CORPUS)
 
 
 def noisy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    did = F.col("doc_id")
-    t = F.col("text")
-    text = (
-        F.when(
-            did % 8 == 0,
-            F.concat(
-                F.lit("  \t“"), t, F.lit("” — fin ")
-            ),
-        )
-        .when(did % 8 == 1, F.concat(F.upper(t), F.lit("\r\n")))
-        .when(did % 8 == 2, F.replace(t, F.lit(" "), F.lit("  ")))
-        .when(
-            did % 8 == 3,
-            F.concat(F.lit("‘"), t, F.lit("’\t\t")),
-        )
-        .otherwise(t)
-    )
-    return d.select("doc_id", text.alias("text"))
+    return _sql_view(spark, sf_dir, _NOISY_CORPUS)
 
 
 # Multi-line corpus with planted cross-document boilerplate: every doc
@@ -544,29 +441,19 @@ def noisy_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # line-level dedup has real work with an exact oracle.
 BOILER_A = "subscribe to our newsletter for daily updates"
 BOILER_B = "all rights reserved contact us for licensing"
-LINES_CORPUS_SQL = (
+_LINES_CORPUS = (
     "SELECT doc_id, text || chr(10) || "
     f"CASE WHEN doc_id % 3 = 0 THEN '{BOILER_A}' "
-    "ELSE 'middle section ' || CAST(doc_id AS VARCHAR) END || chr(10) || "
+    "ELSE 'middle section ' || CAST(doc_id AS STRING) END || chr(10) || "
     f"CASE WHEN doc_id % 2 = 0 THEN '{BOILER_B}' "
-    "ELSE 'closing note ' || CAST(doc_id AS VARCHAR) END AS text "
-    "FROM documents"
+    "ELSE 'closing note ' || CAST(doc_id AS STRING) END AS text "
+    "FROM {documents}"
 )
+LINES_CORPUS_SQL = _duckdb_sql(_LINES_CORPUS)
 
 
 def lines_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    did = F.col("doc_id")
-    mid = F.when(did % 3 == 0, F.lit(BOILER_A)).otherwise(
-        F.concat(F.lit("middle section "), did.cast("string"))
-    )
-    tail = F.when(did % 2 == 0, F.lit(BOILER_B)).otherwise(
-        F.concat(F.lit("closing note "), did.cast("string"))
-    )
-    text = F.concat(
-        F.col("text"), F.lit("\n"), mid, F.lit("\n"), tail
-    )
-    return d.select("doc_id", text.alias("text"))
+    return _sql_view(spark, sf_dir, _LINES_CORPUS)
 
 
 # Web-page-shaped corpus for the C4 cleaning rules (Raffel et al. 2020
@@ -576,60 +463,30 @@ def lines_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc_id % 5 == 0, a javascript boilerplate line for doc_id % 7 == 0,
 # and a closing line that plants the doc-level poisons ("lorem ipsum"
 # for % 11 == 0, a '{' for % 13 == 0) — so every C4 rule fires on a
-# known doc subset with an exact oracle.
-C4_CORPUS_SQL = (
-    "SELECT doc_id, "
-    "array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ') || "
+# known doc subset with an exact oracle. The head is the first 8 tokens
+# of the text, whose spelling differs by engine; the rest is one text.
+_C4_REST = (
     "CASE WHEN doc_id % 4 = 3 THEN '' WHEN doc_id % 4 = 2 THEN '!' "
     "ELSE '.' END || chr(10) || "
     "CASE WHEN doc_id % 5 = 0 THEN 'click here' "
-    "ELSE 'the quick survey of section ' || CAST(doc_id AS VARCHAR) "
+    "ELSE 'the quick survey of section ' || CAST(doc_id AS STRING) "
     "|| ' is complete.' END || chr(10) || "
     "CASE WHEN doc_id % 7 = 0 "
     "THEN 'please enable javascript to continue reading this page.' "
-    "ELSE 'archived notes for record ' || CAST(doc_id AS VARCHAR) "
+    "ELSE 'archived notes for record ' || CAST(doc_id AS STRING) "
     "|| ' follow below.' END || chr(10) || "
     "CASE WHEN doc_id % 11 = 0 THEN 'lorem ipsum dolor sit amet.' "
     "WHEN doc_id % 13 = 0 THEN 'config = { verbose } done.' "
     "ELSE 'standard closing statement for document ' "
-    "|| CAST(doc_id AS VARCHAR) || '.' END AS text "
-    "FROM documents"
+    "|| CAST(doc_id AS STRING) || '.' END AS text"
+)
+C4_CORPUS_SQL = (
+    "SELECT doc_id, array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ') || "
+    f"{_C4_REST} FROM documents"
 )
 
 
 def c4_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    did = F.col("doc_id")
-    ds = did.cast("string")
-    head = F.concat(
-        F.array_join(F.slice(F.split(F.col("text"), " "), 1, 8), " "),
-        F.when(did % 4 == 3, F.lit(""))
-        .when(did % 4 == 2, F.lit("!"))
-        .otherwise(F.lit(".")),
+    return load_table(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"array_join(slice(split(text, ' '), 1, 8), ' ') || {_C4_REST}"
     )
-    l2 = F.when(did % 5 == 0, F.lit("click here")).otherwise(
-        F.concat(
-            F.lit("the quick survey of section "), ds,
-            F.lit(" is complete."),
-        )
-    )
-    l3 = F.when(
-        did % 7 == 0,
-        F.lit("please enable javascript to continue reading this page."),
-    ).otherwise(
-        F.concat(
-            F.lit("archived notes for record "), ds, F.lit(" follow below.")
-        )
-    )
-    l4 = (
-        F.when(did % 11 == 0, F.lit("lorem ipsum dolor sit amet."))
-        .when(did % 13 == 0, F.lit("config = { verbose } done."))
-        .otherwise(
-            F.concat(
-                F.lit("standard closing statement for document "), ds,
-                F.lit("."),
-            )
-        )
-    )
-    text = F.concat_ws("\n", head, l2, l3, l4)
-    return d.select("doc_id", text.alias("text"))

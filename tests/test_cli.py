@@ -6,9 +6,10 @@ from the driver testdata so the shapes match the engine's own samples."""
 import os
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from lightcurvesclassifier_spark.cli import lcc as cli
+from lightcurvesclassifier_spark.cli import lcc as cli, stars_io
 from lightcurvesclassifier_spark.sources import files, testdata
 from tests.conftest import SF_SMOKE, job_count
 
@@ -413,15 +414,21 @@ def test_filter_stars_crash_replays_to_clean_run(
 
 
 @pytest.mark.usefixtures("smoke_filter")
+def _persisted(spark) -> int:
+    """The number of RDDs persisted now; getPersistentRDDs() returns a
+    snapshot, so each count reads a new one."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.usefixtures("smoke_filter")
 def test_filter_stars_unpersists_its_frames(project, empty_query, spark, monkeypatch):
     """A run caches its star→query pairs, observations and decisions;
     none of them may outlive the run, also when its commit fails."""
     from lightcurvesclassifier_spark.operators import searcher
 
-    cached = spark.sparkContext._jsc.getPersistentRDDs().size
-    before = cached()
+    before = _persisted(spark)
     _filter_run(project, "run_cache", empty_query)
-    assert cached() == before
+    assert _persisted(spark) == before
 
     def crashing(*args):
         raise RuntimeError("injected crash")
@@ -429,7 +436,31 @@ def test_filter_stars_unpersists_its_frames(project, empty_query, spark, monkeyp
     monkeypatch.setattr(searcher, "_publish", crashing)
     with pytest.raises(RuntimeError, match="injected crash"):
         _filter_run(project, "run_cache", empty_query)
-    assert cached() == before
+    assert _persisted(spark) == before
+
+
+def test_make_filter_unpersists_its_frames(project, spark):
+    """A tuning run caches its two samples and the winner's test folds;
+    none of them may outlive the run, also when it fails on an empty
+    parameters file, which is read after the samples are cached."""
+    before = _persisted(spark)
+    args = ["-n", "CacheFilter", "-f", "AbbeValueDescr", "-s", "searched",
+            "-c", "contam", "-d", "GaussianNBDec"]
+    for name, text in (("one.txt", "0.5\n"), ("none.txt", "")):
+        with open(os.path.join(project, "tun_params", name), "w") as f:
+            f.write("#GaussianNBDec:threshold\n" + text)
+    assert cli.main(["make_filter", "-i", "one.txt", *args], path=project) == 0
+    assert _persisted(spark) == before
+    with pytest.raises(ValueError, match="Empty parameters file"):
+        cli.main(["make_filter", "-i", "none.txt", *args], path=project)
+    assert _persisted(spark) == before
+    # that run failed before materializing its cached samples: ask the
+    # cache manager about the same plan instead
+    sample = stars_io.load_specs(
+        spark, ["searched"], os.path.join(project, "inp_lcs"),
+        os.path.join(project, "queries"),
+    )
+    assert sample.storageLevel == StorageLevel.NONE
 
 
 def test_query_file_custom_delimiter_round_trip(project):

@@ -4,11 +4,16 @@ Python in the JVM path") checked against the actual executed plans, so
 a regression that silently adds a shuffle or unpushes a filter fails a
 test rather than a plan audit."""
 
+import re
+
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from lightcurvesclassifier_spark.cli.descriptors import featurize
 from lightcurvesclassifier_spark.functions import curves
+from lightcurvesclassifier_spark.operators.cone_search import cone_search
+from lightcurvesclassifier_spark.operators.crossmatch import crossmatch
+from lightcurvesclassifier_spark.plans.query_compiler import apply_queries
 from lightcurvesclassifier_spark.sources import testdata
 from tests.conftest import SF_SMOKE
 
@@ -28,6 +33,40 @@ def test_query_dsl_predicates_reach_the_scan(spark):
     assert "p_brand" in pushed and "p_size" in pushed, pushed
     assert "p_retailprice" in pushed, pushed
     assert plan.count("Exchange") == 0  # scan + filter, no shuffle
+
+
+def test_apply_queries_predicate_reaches_the_stars_scan(spark):
+    stars = testdata.stars(spark, SF_SMOKE)
+    df = apply_queries(stars, [{"star_class": "BUILDING", "acctbal": ">=100.5"}])
+    scan = df._jdf.queryExecution().executedPlan().collectLeaves().head()
+    pushed = scan.metadata().apply("PushedFilters")
+    assert "EqualTo(c_mktsegment,BUILDING)" in pushed, pushed
+    assert "GreaterThanOrEqual(c_acctbal,100.5)" in pushed, pushed
+
+
+def test_cone_search_box_stays_in_the_scan(spark):
+    # dec_deg is derived from c_custkey, so the box is not a parquet
+    # PushedFilter; it must still reach the scan as a DataFilter
+    df = cone_search(testdata.stars(spark, SF_SMOKE), 10.0, 20.0, 5.0)
+    scan = df._jdf.queryExecution().executedPlan().collectLeaves().head()
+    data = re.sub(r"#\d+L?", "", scan.dataFilters().toString())
+    dec = "(((cast(c_custkey as double) * 61.803) % 180.0) - 90.0)"
+    assert f"{dec} >= 15.0" in data and f"{dec} <= 25.0" in data, data
+
+
+def test_crossmatch_is_one_zone_equi_join_on_the_exploded_right(spark):
+    df = crossmatch(
+        testdata.stars(spark, SF_SMOKE), testdata.detections(spark, SF_SMOKE),
+        right_cols=["det_id", "star_id"],
+    )
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert executed.count("Join") == 1, executed
+    assert re.search(r"Join \[_zone#\d+L\], \[_zone#\d+L\], Inner", executed), executed
+    join = df._jdf.queryExecution().optimizedPlan()
+    while join.nodeName() != "Join":
+        join = join.children().head()
+    assert "Generate explode" in join.right().toString()
+    assert "Generate" not in join.left().toString()
 
 
 def test_custom_decider_range_pushdown_no_shuffle(spark):

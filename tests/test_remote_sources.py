@@ -20,6 +20,35 @@ def test_adql_predicate_forms():
     assert remote.adql_condition("a", "=7") == '("a" = 7)'
 
 
+@pytest.mark.parametrize(
+    "value, adql, spark_sql",
+    [
+        (">=12", '("vmag" >= 12)', "(`vmag` >= 12)"),
+        ("<=3.5", '("vmag" <= 3.5)', "(`vmag` <= 3.5D)"),
+        ("!=4", '("vmag" <> 4)', "(`vmag` <> 4)"),
+        ("!x", "(\"vmag\" = '!x')", "(`vmag` = '!x')"),
+        ("a..b", "(\"vmag\" = 'a..b')", "(`vmag` = 'a..b')"),
+        ("it's a\\b", "(\"vmag\" = 'it''s a\\b')", "(`vmag` = 'it\\'s a\\\\b')"),
+    ],
+)
+def test_dsl_renderers_share_one_parse(value, adql, spark_sql):
+    """ADQL and Spark SQL render the same parse: two-character
+    operators stay operators on both (ADQL read '>=12' as '>' '=12')."""
+    from lightcurvesclassifier_spark.plans.query_compiler import compile_condition
+
+    assert remote.adql_condition("vmag", value) == adql
+    assert compile_condition("vmag", value) == spark_sql
+
+
+def test_dsl_string_literals_round_trip_in_spark(spark):
+    from lightcurvesclassifier_spark.plans.query_compiler import apply_queries
+
+    values = ["!x", "a..b", "it's a\\b", "plain"]
+    df = spark.createDataFrame([(v,) for v in values], "s string")
+    for v in values[:3]:
+        assert [r.s for r in apply_queries(df, [{"s": v}]).collect()] == [v]
+
+
 def test_build_adql_shape():
     sql = remote.build_adql(
         '"II/247/machovar"',
